@@ -158,7 +158,7 @@ object DevProfile {
     if (args.contains("pq")) {
       import graft.sim.ProductQuantization
       import org.apache.spark.sql.expressions.Window
-      graft.functions.FixedDotFunctions.register(spark)
+      graft.functions.GraftFunctions.install(spark)
       val fdot = graft.functions.FixedDotFunctions.fixedDot _
       val emb = Tables.embeddings(spark, sfDir)
       val n0 = emb.count()

@@ -1,5 +1,6 @@
 package graft.analytics
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,6 +27,7 @@ import org.apache.spark.sql.functions._
   * strategy — exact, so the registry entry is hash-checkable.
   */
 object Bfs {
+  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
 
   /** Min-hop distance from any source within `maxHops` hops. `nbrs` must
     * carry DIRECTED (u, v) rows (callers wanting undirected semantics
@@ -64,7 +66,7 @@ object Bfs {
         case Some(row) if !row.isNullAt(row.fieldIndex("f")) =>
           row.getAs[Long]("f")
         case _ =>
-          System.err.println(s"[graft] observed-metric miss: $metric — " +
+          logger.warn(s"[graft] observed-metric miss: $metric — " +
             "falling back to a count over the checkpointed frame")
           settled.filter(col("dist") === i).count()
       }

@@ -1,5 +1,6 @@
 package graft.analytics
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -24,6 +25,7 @@ import org.apache.spark.sql.types.DecimalType
   * statically unrolled by the caller-chosen count.
   */
 object Hits {
+  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
 
   private val Dec = DecimalType(38, 12)
 
@@ -72,7 +74,7 @@ object Hits {
           // loud, so a Spark-internals change that systematically stops
           // populating observedMetrics shows up in profiles as a message,
           // not just as one silent extra pass per half-step
-          System.err.println(s"[graft] observed-metric miss: $metric — " +
+          logger.warn(s"[graft] observed-metric miss: $metric — " +
             "falling back to a scan of the checkpointed frame")
           Option(raw.agg(sum((col("raw") * col("raw")).cast(Dec)).as("ss"))
             .collect()(0).getDecimal(0))

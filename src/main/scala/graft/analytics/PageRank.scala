@@ -1,5 +1,6 @@
 package graft.analytics
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -22,6 +23,7 @@ import org.apache.spark.sql.types.DecimalType
   * [[graft.dedup.Dedup.connectedComponents]] does.
   */
 object PageRank {
+  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
 
   /** Run `iters` damped iterations over `edges` (`src`, `dst` columns).
     * Returns (id, pr). Nodes are the union of edge endpoints; a node's
@@ -77,7 +79,7 @@ object PageRank {
         case _ =>
           // loud, so a systematic metric miss is visible in profiles, not
           // just as one silent extra aggregate pass per iteration
-          System.err.println(s"[graft] observed-metric miss: $metric — " +
+          logger.warn(s"[graft] observed-metric miss: $metric — " +
             "falling back to an aggregate over the checkpointed frame")
           out.agg(dmAgg.as("dm")).collect()(0).getDouble(0)
       }
@@ -141,7 +143,7 @@ object PageRank {
         case Some(row) if !row.isNullAt(row.fieldIndex("dm")) =>
           row.getAs[Double]("dm")
         case _ =>
-          System.err.println(s"[graft] observed-metric miss: $metric — " +
+          logger.warn(s"[graft] observed-metric miss: $metric — " +
             "falling back to an aggregate over the checkpointed frame")
           out.agg(dmAgg.as("dm")).collect()(0).getDouble(0)
       }

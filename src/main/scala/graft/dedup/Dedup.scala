@@ -57,7 +57,7 @@ object Dedup {
   def shingled(docsRaw: DataFrame, n: Int = 3): DataFrame = {
     val docs = spread(docsRaw)
     if (n == 3) {
-      graft.functions.WordShingleFunctions.register(docs.sparkSession)
+      graft.functions.GraftFunctions.install(docs.sparkSession)
       docs.select(col("doc_id"),
         explode(graft.functions.WordShingleFunctions.wordShingles(col("text")))
           .as("shingle"))

@@ -45,8 +45,7 @@ object Ingest {
 object TokenTransferDecoder {
 
   def decode(envelopes: DataFrame): DataFrame = {
-    GraftFunctions.register(envelopes.sparkSession)
-    graft.functions.KeccakFunctions.register(envelopes.sparkSession)
+    GraftFunctions.install(envelopes.sparkSession)
     val hex = GraftFunctions.hexToDecimal _
     val topics = col("payload.topics")
     val addr = (t: Column) => graft.functions.KeccakFunctions.checksumAddress(
@@ -115,7 +114,7 @@ object TokenTransferDecoder {
 object DeFiSwapParser {
 
   def parse(envelopes: DataFrame): DataFrame = {
-    GraftFunctions.register(envelopes.sparkSession)
+    GraftFunctions.install(envelopes.sparkSession)
     val hex = GraftFunctions.hexToDecimal _
     val topics = col("payload.topics")
     // strip 0x, then 4 fixed 64-hex-char words

@@ -111,18 +111,6 @@ object BloomSetFunctions {
     (u % bits).toInt
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_set",
-      exprs => {
-        val m = exprs.lift(1).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(DefaultBits)
-        val d = exprs.lift(2).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(DefaultHashes)
-        BloomSetAgg(exprs.head, m, d)
-      },
-      "built-in")
-
   /** The m/64-word filter of a string column. */
   def bloomSet(c: Column, bits: Int = DefaultBits,
                hashes: Int = DefaultHashes): Column =

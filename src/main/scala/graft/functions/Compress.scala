@@ -59,9 +59,5 @@ case class DeflateLenExpr(child: Expression) extends UnaryExpression {
 }
 
 object CompressFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_len", args => DeflateLenExpr(args.head), "built-in")
-
   def deflateLen(c: Column): Column = call_function("deflate_len", c)
 }

@@ -121,18 +121,6 @@ object CountMinFunctions {
     (u % width).toInt
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min",
-      exprs => {
-        val d = exprs.lift(1).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(DefaultDepth)
-        val w = exprs.lift(2).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(DefaultWidth)
-        CountMinAgg(exprs.head, d, w)
-      },
-      "built-in")
-
   /** The d×w count matrix of a string column. */
   def countMin(c: Column, depth: Int = DefaultDepth,
                width: Int = DefaultWidth): Column =

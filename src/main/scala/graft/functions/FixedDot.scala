@@ -75,10 +75,6 @@ object FixedDotOps {
 }
 
 object FixedDotFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fixed_dot", exprs => FixedDotExpr(exprs(0), exprs(1)), "built-in")
-
   def fixedDot(a: Column, b: Column): Column = call_function("fixed_dot", a, b)
 }
 
@@ -144,10 +140,6 @@ object FixedSqDistOps {
 }
 
 object FixedSqDistFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fixed_sqdist", exprs => FixedSqDistExpr(exprs(0), exprs(1)), "built-in")
-
   def fixedSqDist(a: Column, b: Column): Column =
     call_function("fixed_sqdist", a, b)
 }
@@ -211,10 +203,6 @@ object IntDotOps {
 }
 
 object IntDotFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int_dot", exprs => IntDotExpr(exprs(0), exprs(1)), "built-in")
-
   def intDot(a: Column, b: Column): Column = call_function("int_dot", a, b)
 }
 
@@ -276,9 +264,5 @@ object SqQuantizeOps {
 }
 
 object SqQuantizeFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq_quantize", exprs => SqQuantizeExpr(exprs(0)), "built-in")
-
   def sqQuantize(a: Column): Column = call_function("sq_quantize", a)
 }

@@ -2,81 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** SparkSessionExtensions installer: makes graft's custom expressions
-  * (`hex_to_decimal`, `keccak256`, `checksum_address`, `fixed_dot`)
-  * available to pure-SQL users at session build time —
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. The library
-  * call sites also self-register per session, so either path works.
+/** SparkSessionExtensions installer: makes every function in
+  * [[GraftFunctions.catalog]] available to pure-SQL users at session build
+  * time — `SparkSession.builder.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.functions.GraftExtensions`. Library entry
+  * points also call [[GraftFunctions.install]], which registers the same
+  * values, so sessions built either way resolve the same names.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    e.injectFunction((FunctionIdentifier("hex_to_decimal"),
-      new ExpressionInfo(classOf[HexToDecimal].getName, "hex_to_decimal"),
-      exprs => HexToDecimal(exprs.head)))
-    e.injectFunction((FunctionIdentifier("keccak256"),
-      new ExpressionInfo(classOf[Keccak256Expr].getName, "keccak256"),
-      exprs => Keccak256Expr(exprs.head)))
-    e.injectFunction((FunctionIdentifier("checksum_address"),
-      new ExpressionInfo(classOf[ChecksumAddressExpr].getName, "checksum_address"),
-      exprs => ChecksumAddressExpr(exprs.head)))
-    e.injectFunction((FunctionIdentifier("fixed_dot"),
-      new ExpressionInfo(classOf[FixedDotExpr].getName, "fixed_dot"),
-      exprs => FixedDotExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShinglesExpr].getName, "word_shingles"),
-      exprs => WordShinglesExpr(exprs.head)))
-    e.injectFunction((FunctionIdentifier("morton"),
-      new ExpressionInfo(classOf[MortonExpr].getName, "morton"),
-      exprs => MortonExpr(exprs(0), exprs(1),
-        exprs.lift(2).map(MortonFunctions.bitsLiteral).getOrElse(16))))
-    e.injectFunction((FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketchAgg].getName, "kmv_sketch"),
-      exprs => {
-        val k = exprs.lift(1).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(KmvFunctions.DefaultK)
-        KmvSketchAgg(exprs.head, k)
-      }))
-    e.injectFunction((FunctionIdentifier("misra_gries"),
-      new ExpressionInfo(classOf[MisraGriesAgg].getName, "misra_gries"),
-      exprs => {
-        val k = exprs.lift(1).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(MisraGriesFunctions.DefaultK)
-        MisraGriesAgg(exprs.head, k)
-      }))
-    e.injectFunction((FunctionIdentifier("count_min"),
-      new ExpressionInfo(classOf[CountMinAgg].getName, "count_min"),
-      exprs => {
-        val d = exprs.lift(1).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(CountMinFunctions.DefaultDepth)
-        val w = exprs.lift(2).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(CountMinFunctions.DefaultWidth)
-        CountMinAgg(exprs.head, d, w)
-      }))
-    e.injectFunction((FunctionIdentifier("bloom_set"),
-      new ExpressionInfo(classOf[BloomSetAgg].getName, "bloom_set"),
-      exprs => {
-        val m = exprs.lift(1).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(BloomSetFunctions.DefaultBits)
-        val d = exprs.lift(2).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(BloomSetFunctions.DefaultHashes)
-        BloomSetAgg(exprs.head, m, d)
-      }))
-    e.injectFunction((FunctionIdentifier("hll_sketch"),
-      new ExpressionInfo(classOf[HllSketchAgg].getName, "hll_sketch"),
-      exprs => {
-        val p = exprs.lift(1).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(HllFunctions.DefaultPrecision)
-        HllSketchAgg(exprs.head, p)
-      }))
-    e.injectFunction((FunctionIdentifier("kll_sketch"),
-      new ExpressionInfo(classOf[KllSketchAgg].getName, "kll_sketch"),
-      exprs => {
-        val k = exprs.lift(1).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(KllFunctions.DefaultK)
-        KllSketchAgg(exprs.head, k)
-      }))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.catalog.foreach(e.injectFunction)
 }

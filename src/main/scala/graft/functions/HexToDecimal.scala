@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, Decimal, DecimalType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -54,14 +52,4 @@ object HexConv {
       if (d.changePrecision(38, 0)) d else null
     } catch { case _: NumberFormatException => null }
   }
-}
-
-/** Session-scoped registration of graft's custom SQL functions. */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hex_to_decimal", exprs => HexToDecimal(exprs.head), "built-in")
-
-  /** Column-API form; requires [[register]] on the session first. */
-  def hexToDecimal(c: Column): Column = call_function("hex_to_decimal", c)
 }

@@ -126,16 +126,6 @@ object HllFunctions {
     (bucket, rho)
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_sketch",
-      exprs => {
-        val p = exprs.lift(1).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(DefaultPrecision)
-        HllSketchAgg(exprs.head, p)
-      },
-      "built-in")
-
   /** The 2^p register array of a string column. */
   def hllSketch(c: Column, precision: Int = DefaultPrecision): Column =
     call_function("hll_sketch", c, lit(precision))

@@ -201,13 +201,6 @@ case class ChecksumAddressExpr(child: Expression) extends UnaryExpression {
 }
 
 object KeccakFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "keccak256", exprs => Keccak256Expr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "checksum_address", exprs => ChecksumAddressExpr(exprs.head), "built-in")
-  }
-
   def keccak256(c: Column): Column = call_function("keccak256", c)
   def checksumAddress(c: Column): Column = call_function("checksum_address", c)
 }

@@ -201,16 +201,6 @@ object KllBuffer {
 object KllFunctions {
   val DefaultK = 256
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_sketch",
-      exprs => {
-        val k = exprs.lift(1).map(_.eval(null).asInstanceOf[Int])
-          .getOrElse(DefaultK)
-        KllSketchAgg(exprs.head, k)
-      },
-      "built-in")
-
   /** The weighted-item sketch array of a double column. */
   def kllSketch(c: Column, k: Int = DefaultK): Column =
     call_function("kll_sketch", c, lit(k))

@@ -138,15 +138,6 @@ object KmvFunctions {
     * fraction. 48-bit values are exact in double on every engine. */
   val FracScale: Double = 281474976710656.0
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch",
-      exprs => {
-        val k = exprs.lift(1).map(_.eval(null).asInstanceOf[Int]).getOrElse(DefaultK)
-        KmvSketchAgg(exprs.head, k)
-      },
-      "built-in")
-
   /** The sorted k-minimum digest array of a string column. */
   def kmvSketch(c: Column, k: Int = DefaultK): Column =
     call_function("kmv_sketch", c, lit(k))

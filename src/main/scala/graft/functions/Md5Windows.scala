@@ -67,9 +67,5 @@ object Md5WindowsOps {
 }
 
 object Md5WindowsFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_windows32", exprs => Md5Windows32Expr(exprs(0)), "built-in")
-
   def md5Windows32(s: Column): Column = call_function("md5_windows32", s)
 }

@@ -153,15 +153,6 @@ case class MisraGriesAgg(
 object MisraGriesFunctions {
   val DefaultK = 64
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries",
-      exprs => {
-        val k = exprs.lift(1).map(_.eval(null).asInstanceOf[Int]).getOrElse(DefaultK)
-        MisraGriesAgg(exprs.head, k)
-      },
-      "built-in")
-
   /** map<item,count_lower_bound> of at most k candidate heavy hitters. */
   def misraGries(c: Column, k: Int = DefaultK): Column =
     call_function("misra_gries", c, lit(k))

@@ -49,12 +49,6 @@ object MortonOps {
 }
 
 object MortonFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "morton", exprs => MortonExpr(exprs(0), exprs(1),
-        exprs.lift(2).map(bitsLiteral).getOrElse(16)),
-      "built-in")
-
   /** The third argument must be a foldable integer literal (bits are fixed
     * at planning time); accept any integral width (`morton(x, y, 16)` and
     * `morton(x, y, CAST(16 AS BIGINT))` both plan) and fail with a plain

@@ -83,20 +83,6 @@ final class PqArgminOps(offset: Int, codebook: Array[Array[Float]],
 }
 
 object PqArgminFunctions {
-  /** Registered form: (emb, offset literal, codebook literal) — literals are
-    * evaluated at analysis into the expression's constructor data, keeping
-    * the call_function plumbing every other graft expression uses. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_argmin", { exprs =>
-        val off = exprs(1).eval().asInstanceOf[Int]
-        val cbData = exprs(2).eval().asInstanceOf[ArrayData]
-        val cb = (0 until cbData.numElements()).map { i =>
-          cbData.getArray(i).toFloatArray()
-        }.toArray
-        PqArgminExpr(exprs(0), off, cb)
-      }, "built-in")
-
   def pqArgmin(emb: Column, offset: Int,
                codebook: Array[Array[Float]]): Column =
     call_function("pq_argmin", emb, lit(offset),

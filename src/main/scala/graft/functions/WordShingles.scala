@@ -71,9 +71,5 @@ object WordShingleOps {
 }
 
 object WordShingleFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", exprs => WordShinglesExpr(exprs.head), "built-in")
-
   def wordShingles(c: Column): Column = call_function("word_shingles", c)
 }

@@ -1283,7 +1283,7 @@ object Extensions {
       |FROM est, ex""".stripMargin
 
   private val kmvDistinct: Q = (s, dir) => {
-    graft.functions.KmvFunctions.register(s)
+    graft.functions.GraftFunctions.install(s)
     Tables.events(s, dir)
       .groupBy("event_type")
       .agg(graft.functions.KmvFunctions

@@ -163,7 +163,7 @@ object Relational3 {
     * fixed-point exact mean (the float min/max come from the same float
     * values in both engines). */
   private val arrayStats: Q = (s, dir) => {
-    graft.functions.FixedDotFunctions.register(s)
+    graft.functions.GraftFunctions.install(s)
     val e = col("embedding")
     val ones = transform(e, _ => lit(1.0f))
     Tables.embeddings(s, dir)

@@ -362,13 +362,7 @@ object Relational5 {
     * exists to serve; StatsOpsSpec asserts `might_contain` lands above the
     * fact scan in the executed plan. */
   private val runtimeFilter: Q = (s, dir) => {
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg", exprs => new BloomFilterAggregate(exprs.head), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
+    graft.functions.GraftFunctions.install(s)
     Tables.orders(s, dir).filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey").createOrReplaceTempView("rf_urgent")
     Tables.lineitem(s, dir).createOrReplaceTempView("rf_lineitem")
@@ -1071,7 +1065,7 @@ object Relational5 {
     * hash-match. */
   private val kmvSetOps: Q = (s, dir) => {
     import graft.functions.KmvFunctions
-    KmvFunctions.register(s)
+    graft.functions.GraftFunctions.install(s)
     val k = KmvFunctions.DefaultK
     val ev = Tables.events(s, dir)
     val uid = col("user_id").cast("string")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,6 +12,7 @@ import org.apache.spark.sql.functions._
   * the hash gate cross-checks semantics rather than echoing the plan.
   */
 object Relational6 {
+  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
   type Q = (SparkSession, String) => DataFrame
 
   /** k-hop reach profile of the doc graph from the block-head seed set —
@@ -871,7 +873,7 @@ object Relational6 {
             case Some(row) if !row.isNullAt(row.fieldIndex("t")) =>
               row.getAs[Long]("t")
             case _ =>
-              System.err.println(s"[graft] observed-metric miss: $metric" +
+              logger.warn(s"[graft] observed-metric miss: $metric" +
                 " — falling back to a count over the checkpointed frame")
               d.count()
           }

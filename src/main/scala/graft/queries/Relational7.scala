@@ -636,7 +636,7 @@ object Relational7 {
     * the same rows-only gate as the binary multimodal family); semantics
     * are spec-proven in `CompressSpec`. */
   private val compressRatio: Q = (s, dir) => {
-    graft.functions.CompressFunctions.register(s)
+    graft.functions.GraftFunctions.install(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), octet_length(col("text")).as("raw_bytes"),
         graft.functions.CompressFunctions.deflateLen(col("text"))
@@ -2164,7 +2164,7 @@ object Relational7 {
     * vec_id) picks identical chains. */
   private val mmrTopK: Q = (s, dir) => {
     import graft.sim.VectorOps
-    graft.functions.FixedDotFunctions.register(s)
+    graft.functions.GraftFunctions.install(s)
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val cand = VectorOps.cosineTopK(Tables.embeddings(s, dir), 0L,
         MmrCandidates + 1)
@@ -2358,7 +2358,7 @@ object Relational7 {
     // bit-identical to the old md5 → 4×(substr + conv) chain, without
     // materializing the 32-char hex string or parsing it four times per
     // digest — 25 digests per event row make that the stage's per-task cost
-    graft.functions.Md5WindowsFunctions.register(s)
+    graft.functions.GraftFunctions.install(s)
     val reps = ev.select(col("event_type"), col("event_id"), col("vfx"),
         explode(sequence(lit(0), lit(groups - 1))).as("g"))
       .select(col("event_type"), col("vfx"), col("g"),

@@ -382,7 +382,7 @@ object Sketches {
     * driver scalar) via literal lookups inside codegen. */
   private val cmsCounts: Q = (s, dir) => {
     import graft.functions.CountMinFunctions
-    CountMinFunctions.register(s)
+    graft.functions.GraftFunctions.install(s)
     val toks = Tables.documents(s, dir)
       .select(explode(graft.text.TextOps.tokens(col("text"))).as("token"))
     val matrix = toks
@@ -437,7 +437,7 @@ object Sketches {
     * functions of the multisets. */
   private val cmsJoinSize: Q = (s, dir) => {
     import graft.functions.CountMinFunctions
-    CountMinFunctions.register(s)
+    graft.functions.GraftFunctions.install(s)
     val ev = Tables.events(s, dir)
     def side(t: String) = ev.filter(col("event_type") === t)
       .select(col("user_id").cast("string").as("k"))
@@ -495,7 +495,7 @@ object Sketches {
     * scan instead of a shuffle. */
   private val bloomMembership: Q = (s, dir) => {
     import graft.functions.BloomSetFunctions
-    BloomSetFunctions.register(s)
+    graft.functions.GraftFunctions.install(s)
     val ev = Tables.events(s, dir)
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id").cast("string").as("k")).distinct()
@@ -558,7 +558,7 @@ object Sketches {
     * computed in one mergeable pass, 4 KB of state per segment. */
   private val hllDistinct: Q = (s, dir) => {
     import graft.functions.HllFunctions
-    HllFunctions.register(s)
+    graft.functions.GraftFunctions.install(s)
     val ev = Tables.events(s, dir)
     def shaped(keyExpr: Column, value: Column, p: Int): DataFrame = {
       val g = ev.groupBy(keyExpr.as("key"))
@@ -638,7 +638,7 @@ object Sketches {
     * error column. */
   private val hllRollup: Q = (s, dir) => {
     import graft.functions.HllFunctions
-    HllFunctions.register(s)
+    graft.functions.GraftFunctions.install(s)
     val p = 12
     val shiftBase = 61 - p
     val ev = Tables.events(s, dir)

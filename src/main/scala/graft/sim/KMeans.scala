@@ -42,7 +42,7 @@ object KMeans {
   /** Nearest-centroid id per row (exact integer argmin, ties → lowest id). */
   def assign(emb: DataFrame, cents: Seq[(Long, Array[Float])]): DataFrame = {
     require(cents.nonEmpty, "kmeans assign needs at least one centroid")
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     val scored = cents.map { case (id, c) =>
       struct(
         (lit(selfDot(c)) - lit(2L) * VectorOps.fixedDot(col("embedding"),

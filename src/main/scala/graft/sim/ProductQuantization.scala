@@ -93,8 +93,7 @@ object ProductQuantization {
     * lever, measured in PROFILE.md. */
   def train(emb: DataFrame, init: Array[Array[Float]],
             iters: Int): Array[Array[Float]] = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
-    graft.functions.PqArgminFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     var cb = init
     for (_ <- 1 to iters) {
       val coded = emb.select(col("embedding") +: codeCols(cb): _*)
@@ -171,8 +170,7 @@ object ProductQuantization {
     * with dist_fx the exact fixed-point (×1e12) asymmetric squared
     * distance. */
   def pqTopK(emb: DataFrame, qFrom: Long, qTo: Long, k: Int): DataFrame = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
-    graft.functions.PqArgminFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     val anchors = anchorCodebook(emb)
     val queries = emb.filter(col("vec_id").between(qFrom, qTo))
       .select(col("vec_id").as("qid"), col("embedding").as("qemb"))
@@ -194,8 +192,7 @@ object ProductQuantization {
     * DuckDB twin, making even the PRUNED result hash-exact. */
   def ivfPqTopK(emb: DataFrame, qFrom: Long, qTo: Long, k: Int,
                 nprobe: Int = 4): DataFrame = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
-    graft.functions.PqArgminFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     val anchors = anchorCodebook(emb)
     val codebook = codebookCols(anchors)
     // coarse cell = nearest full-dimension anchor — the same fused argmin

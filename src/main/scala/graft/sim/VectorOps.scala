@@ -45,7 +45,7 @@ object VectorOps {
   /** Exact cosine of every vector vs the `queryId` vector, top-k. The query
     * vector is a 1-row broadcast; one scan, no shuffle before the top-k. */
   def cosineTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     val q = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qemb"))
     emb.crossJoin(broadcast(q))
@@ -112,7 +112,7 @@ object VectorOps {
                     blockCol: String,
                     maxBlock: Int = PairBlockCap,
                     persistNorm: Boolean = true): (DataFrame, Seq[DataFrame]) = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     // persisted (by default): the normed frame feeds the occupancy gate plus
     // BOTH sides of the in-block self-join (and, in the hot regime, the
     // sized/banded branches) — without the persist the upstream DAG (often
@@ -282,7 +282,7 @@ object VectorOps {
   }
 
   def lshBuckets(emb: DataFrame, planes: Int = LshPlanes): DataFrame = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     emb.select(col("vec_id"), bucketCol(planes).as("bucket"))
   }
 
@@ -323,7 +323,7 @@ object VectorOps {
     * fixed-point longs, so the report is bit-identical on any
     * partitioning and the oracle twin is hash-exact. */
   def randomProjectionReport(emb: DataFrame, dim: Int = 64): DataFrame = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     val signs = rpSignMatrixFor(dim)
     val yfx = (0 until RpDims).map(j =>
       fixedDot(col("embedding"), typedlit(signs(j))))
@@ -420,7 +420,7 @@ object VectorOps {
 
   private def cosinePairsLshWithCache(emb: DataFrame, threshold: Double,
       maxBlock: Int): (DataFrame, Seq[DataFrame]) = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     val withB = emb
       .select(col("vec_id"), bucketCol(LshPlanes).as("bucket"),
         col("embedding"))
@@ -459,7 +459,7 @@ object VectorOps {
     * the cosine without computing the row norm at all. Ties break to the
     * lowest cell id, matching the old ORDER BY cos DESC, cell ASC. */
   def ivfAssign(emb: DataFrame, nCells: Int): DataFrame = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     assignWithCells(emb, codebook(emb, nCells)).select("vec_id", "cell")
   }
 
@@ -494,7 +494,7 @@ object VectorOps {
     * the probe filter partition pruning. */
   def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nCells: Int = 16,
               nprobe: Int = 4): DataFrame = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     // one driver job collects codebook AND query vector (pushed-filter scan)
     val collected = emb
       .filter(col("vec_id") < nCells || col("vec_id") === queryId)
@@ -574,8 +574,8 @@ object VectorOps {
   //     (x, cc) => round((x−cc)²·1e12, 0).cast(long)), 0L, _+_)
   // which ran as interpreted HOFs (CodegenFallback) and was the dominant
   // per-row cost of every centroid-scored query (sim_silhouette's k-fold
-  // projection was one 2.7 s stage at sf0.1). Callers must have
-  // [[graft.functions.FixedSqDistFunctions.register]]ed the session.
+  // projection was one 2.7 s stage at sf0.1). Callers must have run
+  // [[graft.functions.GraftFunctions.install]] on the session.
   private def centroidDist(cent: Column): Column =
     graft.functions.FixedSqDistFunctions.fixedSqDist(col("embedding"), cent)
 
@@ -597,7 +597,7 @@ object VectorOps {
   def assignToCentroids(emb: DataFrame,
                         cents: Seq[(Int, Array[Double])]): DataFrame = {
     require(cents.nonEmpty, "empty codebook")
-    graft.functions.FixedSqDistFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     if (cents.size <= CentroidExprMax) {
       val scored = cents.map { case (label, c) =>
         struct(centroidDist(typedlit(c.toSeq)).as("dist"),
@@ -736,7 +736,7 @@ object VectorOps {
       emb: DataFrame, cents: Seq[(Int, Array[Double])]): DataFrame = {
     require(cents.nonEmpty, "empty codebook")
     val spark = emb.sparkSession
-    graft.functions.FixedSqDistFunctions.register(spark)
+    graft.functions.GraftFunctions.install(spark)
     import spark.implicits._
     // duplicate-position dedup: rep label + optional second label
     val byPos: Seq[(Array[Double], Int, Option[Int])] =
@@ -872,7 +872,7 @@ object VectorOps {
   def semDedupIncremental(corpus: DataFrame, batch: DataFrame,
                           cents: Seq[(Int, Array[Double])],
                           threshold: Double): DataFrame = {
-    graft.functions.FixedDotFunctions.register(corpus.sparkSession)
+    graft.functions.GraftFunctions.install(corpus.sparkSession)
     def assigned(df: DataFrame) = assignToCentroids(df, cents)
       .select(col("vec_id"), col("assigned_label").as("cluster"),
         col("embedding"), norm(col("embedding")).as("nrm"))
@@ -913,7 +913,7 @@ object VectorOps {
     * and shuffled candidates through a join). */
   def annTopK(emb: DataFrame, queryId: Long, k: Int,
               maxHamming: Int = 3): DataFrame = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     queryVector(emb, queryId) match {
       case None => emptyTopK(emb)
       case Some(qe) =>
@@ -939,7 +939,7 @@ object VectorOps {
     * label means go through the decimal-exact sum, so the entry is
     * hash-exact. */
   def silhouette(emb: DataFrame): DataFrame = {
-    graft.functions.FixedSqDistFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     val cents: Seq[(Int, Array[Double])] = centroids(emb).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getDouble(3)))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -1029,9 +1029,7 @@ object VectorOps {
     * 1-row query, TakeOrdered — the same no-shuffle shape as
     * [[cosineTopK]]. */
   def sqTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
-    graft.functions.FixedDotFunctions.register(emb.sparkSession)
-    graft.functions.IntDotFunctions.register(emb.sparkSession)
-    graft.functions.SqQuantizeFunctions.register(emb.sparkSession)
+    graft.functions.GraftFunctions.install(emb.sparkSession)
     // fused codegen forms of the quantize / int-dot / int-norm folds — the
     // composable aggregate/zip_with/transform chain ran as interpreted HOFs
     // (CodegenFallback) in the corpus-sized projection; values and null

@@ -48,7 +48,7 @@ object ZOrder {
     * both the partitioner and the sort. */
   def writeZOrdered(df: DataFrame, path: String, xCol: String, yCol: String,
                     nFiles: Int, bits: Int = 16): Unit = {
-    graft.functions.MortonFunctions.register(df.sparkSession)
+    graft.functions.GraftFunctions.install(df.sparkSession)
     val z = graft.functions.MortonFunctions.morton(
       col(xCol).cast("long"), col(yCol).cast("long"), bits)
     df.repartitionByRange(nFiles, z)

@@ -21,7 +21,6 @@ class CompressSpec extends SparkSpec {
   }
 
   test("scalar and codegen'd column paths agree, deterministically") {
-    CompressFunctions.register(spark)
     val rows = Seq((1L, prose), (2L, boiler), (3L, ""), (4L, "a"))
       .toDF("doc_id", "text")
     val out = rows.select(col("doc_id"),

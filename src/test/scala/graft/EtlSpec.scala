@@ -21,7 +21,6 @@ class HexToDecimalSpec extends SparkSpec {
   import spark.implicits._
 
   test("decodes uint256 beyond 64 bits (codegen path)") {
-    GraftFunctions.register(spark)
     val df = Seq("0x" + (BigInt(10) * BigInt(10).pow(18)).toString(16),
       "0xde0b6b3a7640000", "ff", "0x", "zz", null)
       .toDF("h")
@@ -36,7 +35,6 @@ class HexToDecimalSpec extends SparkSpec {
   }
 
   test("values beyond DECIMAL(38,0) yield null") {
-    GraftFunctions.register(spark)
     val big = "0x" + BigInt(10).pow(39).toString(16)
     val got = Seq(big).toDF("h")
       .select(GraftFunctions.hexToDecimal(col("h")).as("d")).collect()(0)

@@ -200,7 +200,6 @@ class DedupSpec extends SparkSpec {
 
   test("KMV sketch: exact below k, ~6% above k, partitioning-invariant") {
     import spark.implicits._
-    graft.functions.KmvFunctions.register(spark)
     def est(df: org.apache.spark.sql.DataFrame, k: Int): Double =
       df.agg(graft.functions.KmvFunctions.kmvDistinct(col("x"), k).as("e"))
         .collect()(0).getDouble(0)

@@ -17,11 +17,6 @@ import graft.functions.{FixedSqDistFunctions, IntDotFunctions,
 class FusedExprSpec extends SparkSpec {
   import spark.implicits._
 
-  FixedSqDistFunctions.register(spark)
-  Md5WindowsFunctions.register(spark)
-  IntDotFunctions.register(spark)
-  SqQuantizeFunctions.register(spark)
-
   private def sqDistLambda = aggregate(
     zip_with(col("emb"), col("cent"), (x, cc) =>
       round((x.cast("double") - cc) * (x.cast("double") - cc) * lit(1e12),
@@ -190,8 +185,6 @@ class FusedExprSpec extends SparkSpec {
   }
 
   test("pq_argmin == composable transform/array_min/array_position chain") {
-    graft.functions.FixedDotFunctions.register(spark)
-    graft.functions.PqArgminFunctions.register(spark)
     val rnd = new scala.util.Random(41)
     val w = 8
     val cb = Array.fill(16)(Array.fill(w)(rnd.nextFloat() * 4 - 2))

@@ -58,7 +58,6 @@ class MisraGriesSpec extends SparkSpec {
     .select(explode(graft.text.TextOps.tokens(col("text"))).as("token"))
 
   test("MG guarantee: superset of true heavy hitters, estimates within n/(k+1)") {
-    MisraGriesFunctions.register(spark)
     val exact = tokenStream.groupBy("token").agg(count(lit(1)).as("tf"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val n = exact.values.sum
@@ -116,7 +115,6 @@ class KllSketchSpec extends SparkSpec {
 
   test("KLL: weight conservation and rank-error bound across partitionings") {
     import spark.implicits._
-    graft.functions.KllFunctions.register(spark)
     val k = 256
     val base = values.toDF("v")
     val variants = Seq(
@@ -153,7 +151,6 @@ class KllSketchSpec extends SparkSpec {
 
   test("KLL: grouped aggregation exercises partial merge per key") {
     import spark.implicits._
-    graft.functions.KllFunctions.register(spark)
     val df = values.zipWithIndex
       .map { case (v, i) => (i % 3, v) }.toDF("g", "v").repartition(8)
     val rows = df.groupBy("g")
@@ -189,7 +186,6 @@ class CountMinSpec extends SparkSpec {
     .select(explode(graft.text.TextOps.tokens(col("text"))).as("token"))
 
   test("CMS: matrix is partitioning-invariant; est >= tf with bounded excess") {
-    graft.functions.CountMinFunctions.register(spark)
     val exact = tokenStream.groupBy("token").agg(count(lit(1)).as("tf"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val n = exact.values.sum
@@ -217,7 +213,6 @@ class CountMinSpec extends SparkSpec {
 
   test("CMS inner product bounds the equi-join size from both directions") {
     import spark.implicits._
-    graft.functions.CountMinFunctions.register(spark)
     val w = 256
     val a = (1 to 3000).map(i => s"u${i % 400}")
     val b = (1 to 2000).map(i => s"u${i % 700 + 100}")
@@ -242,7 +237,6 @@ class BloomSetSpec extends SparkSpec {
 
   test("bloom: no false negatives, OR-merge invariance, bounded fp rate") {
     import spark.implicits._
-    graft.functions.BloomSetFunctions.register(spark)
     val keys = (1 to 600).map(i => s"k${i * 7}")
     def wordsOf(parts: Int): Seq[Long] =
       keys.toDF("k").repartition(parts)
@@ -306,7 +300,6 @@ class HllSketchSpec extends SparkSpec {
 
   test("HLL: registers invariant under partitioning and duplication; merge is union") {
     import spark.implicits._
-    HllFunctions.register(spark)
     val p = 10
     def regsOf(ids: Seq[Long], parts: Int): Seq[Int] =
       ids.toDF("v").repartition(parts)
@@ -325,7 +318,6 @@ class HllSketchSpec extends SparkSpec {
 
   test("HLL: estimate within 3 sigma in both regimes; column/driver parity") {
     import spark.implicits._
-    HllFunctions.register(spark)
     // raw harmonic regime: n >> 2.5m at p=8 (m=256, sigma ~ 1.04/16)
     val nBig = 20000
     val big = (1 to nBig).map(i => s"id-$i").toDF("v")
@@ -377,7 +369,6 @@ class HllSketchSpec extends SparkSpec {
 
   test("HLL cube roll-up: merged hour sketches == the direct per-type sketch") {
     import org.apache.spark.sql.functions._
-    HllFunctions.register(spark)
     val p = 12
     val dir = "/root/testdata/sf0.001"
     val rollup = graft.queries.Sketches.queries("q_hll_rollup")(spark, dir)

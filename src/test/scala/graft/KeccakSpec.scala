@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Keccak256, KeccakFunctions}
+import graft.functions.{GraftFunctions, Keccak256, KeccakFunctions}
 import graft.schema.Envelope
 
 /** Keccak-256 against the standard's published vectors, and EIP-55 against
@@ -28,7 +28,6 @@ class KeccakSpec extends SparkSpec {
     // reference value computed with the same public algorithm elsewhere —
     // assert structural properties + determinism across the codegen path
     val viaScala = Keccak256.hashHex(long)
-    KeccakFunctions.register(spark)
     val viaSpark = Seq(long).toDF("s")
       .select(KeccakFunctions.keccak256(col("s"))).collect()(0).getString(0)
     assert(viaScala == viaSpark)
@@ -53,14 +52,73 @@ class KeccakSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects the custom function set") {
-    // the builder-time path can't be exercised on the shared session; the
-    // injection list itself must at least build without error
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions().apply(ext)
+    // a new session of the extension-built shared session: its registry is
+    // Spark's builtins plus what GraftExtensions injected, nothing installed
+    val session = spark.newSession()
+    session.sql("SELECT * FROM VALUES ('a', 1.0D), ('b', 2.0D), ('a', 3.0D) AS t(s, x)")
+      .createOrReplaceTempView("t")
+    def floats(xs: String) = s"CAST(array($xs) AS ARRAY<FLOAT>)"
+    val cases: Map[String, (String, Any)] = Map(
+      "hex_to_decimal" -> ("SELECT hex_to_decimal('0xff')", new java.math.BigDecimal(255)),
+      "keccak256" -> ("SELECT keccak256('')",
+        "0xc5d2460186f7233c927e7db2dcc703c0e500b653ca82273b7bfad8045d85a470"),
+      "checksum_address" ->
+        ("SELECT checksum_address('0x5aaeb6053f3e94c9b9a09f33669435e7ef1beaed')",
+          "0x5aAeb6053F3E94C9b9A09f33669435E7Ef1BeAed"),
+      "fixed_dot" ->
+        (s"SELECT fixed_dot(${floats("0.5, 0.25")}, ${floats("2, 4")})", 2000000000000L),
+      "fixed_sqdist" ->
+        (s"SELECT fixed_sqdist(${floats("1, 2")}, array(0D, 0D))", 5000000000000L),
+      "int_dot" -> ("SELECT int_dot(array(1, 2), array(3, 4))", 11L),
+      "sq_quantize" -> (s"SELECT sq_quantize(${floats("1, 0")})", Seq(127, 0)),
+      "pq_argmin" -> (s"SELECT pq_argmin(${floats("1, 0")}, 0, " +
+        "CAST(array(array(0, 0), array(1, 0)) AS ARRAY<ARRAY<FLOAT>>))", 2),
+      // md5('abc') = 90015098 3cd24fb0 d6963f7d 28e17f72
+      "md5_windows32" -> ("SELECT md5_windows32('abc')",
+        Seq(0x90015098L, 0x3cd24fb0L, 0xd6963f7dL, 0x28e17f72L)),
+      "word_shingles" -> ("SELECT word_shingles('a b c d')", Seq("a b c", "b c d")),
+      "morton" -> ("SELECT morton(1L, 2L)", 9L),
+      "deflate_len" -> ("SELECT deflate_len('graft graft graft graft')",
+        graft.functions.Compress.deflateLen("graft graft graft graft")),
+      // the sketches over 3 rows / 2 distinct values are exact
+      "kmv_sketch" -> ("SELECT size(kmv_sketch(s)) FROM t", 2),
+      "misra_gries" -> ("SELECT misra_gries(s)['a'] FROM t", 2L),
+      "count_min" -> ("SELECT aggregate(count_min(s)[0], 0L, (a, c) -> a + c) FROM t", 3L),
+      "bloom_set" -> ("SELECT size(bloom_set(s)) FROM t",
+        graft.functions.BloomSetFunctions.DefaultBits / 64),
+      "hll_sketch" -> ("SELECT size(hll_sketch(s)) FROM t",
+        1 << graft.functions.HllFunctions.DefaultPrecision),
+      "kll_sketch" -> ("SELECT aggregate(kll_sketch(x), 0L, (a, e) -> a + e.w) FROM t", 3L),
+      "graft_bloom_agg" -> ("SELECT graft_bloom_agg(xxhash64(s)) IS NOT NULL FROM t", true),
+      "graft_might_contain" -> ("SELECT graft_might_contain(" +
+        "(SELECT graft_bloom_agg(xxhash64(s)) FROM t), xxhash64('a'))", true))
+    assert(cases.keySet == GraftFunctions.catalog.map(_._1.funcName).toSet)
+    val failures = cases.toSeq.sortBy(_._1).flatMap { case (name, (sql, want)) =>
+      scala.util.Try(session.sql(sql).head().get(0)) match {
+        case scala.util.Success(got) if got == want => None
+        case scala.util.Success(got) => Some(s"$name: got $got, want $want")
+        case scala.util.Failure(e) => Some(s"$name: ${e.getClass.getSimpleName}")
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("install registers the catalog's own values, idempotently") {
+    val session = spark.newSession()
+    val registry = session.sessionState.functionRegistry
+    GraftFunctions.catalog.foreach { case (id, _, _) => registry.dropFunction(id) }
+    assert(!GraftFunctions.catalog.exists { case (id, _, _) => registry.functionExists(id) })
+    GraftFunctions.install(session)
+    GraftFunctions.install(session)
+    // the same instances: Spark's registry treats an equal re-registration
+    // as a no-op rather than a replacement
+    GraftFunctions.catalog.foreach { case (id, info, build) =>
+      assert(registry.lookupFunction(id).exists(_ eq info), id)
+      assert(registry.lookupFunctionBuilder(id).exists(_ eq build), id)
+    }
   }
 
   test("checksum_address as a column expression") {
-    KeccakFunctions.register(spark)
     val got = Seq("0x5aaeb6053f3e94c9b9a09f33669435e7ef1beaed").toDF("a")
       .select(KeccakFunctions.checksumAddress(col("a"))).collect()(0).getString(0)
     assert(got == "0x5aAeb6053F3E94C9b9A09f33669435E7Ef1BeAed")

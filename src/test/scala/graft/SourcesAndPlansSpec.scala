@@ -162,7 +162,6 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("morton column matches the scalar reference on random coordinates") {
-    graft.functions.MortonFunctions.register(spark)
     val rnd = new scala.util.Random(42)
     val pts = Seq.fill(500)((rnd.nextInt(65536).toLong,
       rnd.nextInt(65536).toLong))
@@ -185,7 +184,6 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("morton bits are validated and integral literals of any width plan") {
-    graft.functions.MortonFunctions.register(spark)
     // bits > 31 would overflow the 2*i+1 shift into Java's mod-64 wrap
     val one = org.apache.spark.sql.catalyst.expressions.Literal(1L)
     intercept[IllegalArgumentException] {

@@ -17,6 +17,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

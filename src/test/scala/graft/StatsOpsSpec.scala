@@ -326,7 +326,6 @@ class StatsOpsSpec extends SparkSpec {
     // ~1/sqrt(k) (~25% at k=16), so a loose band is the honest assertion
     import spark.implicits._
     import graft.functions.KmvFunctions
-    KmvFunctions.register(spark)
     val k = 16
     val ev = Tables.events(spark, "/root/testdata/sf0.01")
     val uid = col("user_id").cast("string")

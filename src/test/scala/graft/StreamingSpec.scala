@@ -724,7 +724,6 @@ class StreamingSpec extends SparkSpec {
       .select(col("event_type"), col("user_id"))
       .orderBy("event_id").limit(500)
       .as[(String, Long)].collect().toSeq
-    graft.functions.KmvFunctions.register(spark)
     val batch = spark.createDataset(rows).toDF("event_type", "user_id")
       .groupBy("event_type")
       .agg(graft.functions.KmvFunctions
@@ -767,7 +766,6 @@ class StreamingSpec extends SparkSpec {
       .select(col("event_type"), col("user_id"))
       .orderBy("event_id").limit(500)
       .as[(String, Long)].collect().toSeq
-    graft.functions.HllFunctions.register(spark)
     val batch = spark.createDataset(rows).toDF("event_type", "user_id")
       .groupBy("event_type")
       .agg(graft.functions.HllFunctions
@@ -809,7 +807,6 @@ class StreamingSpec extends SparkSpec {
       .select(col("event_type"), col("user_id"))
       .orderBy("event_id").limit(400)
       .as[(String, Long)].collect().toSeq
-    graft.functions.CountMinFunctions.register(spark)
     val batch = spark.createDataset(rows).toDF("event_type", "user_id")
       .groupBy("event_type")
       .agg(graft.functions.CountMinFunctions
