@@ -1,4 +1,5 @@
 package graft
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at the configured
@@ -6,6 +7,8 @@ import org.apache.spark.sql.SparkSession
   * short warmup so the first measured query doesn't absorb JVM/codegen
   * startup. */
 object Bench {
+  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // fingerprint artifacts published by mm_*_pairs queries feed the DuckDB
@@ -125,7 +128,13 @@ object Bench {
         val t0 = System.nanoTime()
         val ok = try {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
-        } catch { case _: Throwable => false }
+        } catch { case e: Throwable =>
+          // the output keeps only -1 and the "failed" list; the cause goes
+          // to the log
+          logger.warn(s"[bench] $name failed: ${e.getClass.getName}: " +
+            e.getMessage)
+          false
+        }
         val dt = (System.nanoTime() - t0) / 1e9
         // cache hygiene between runs (outside the timed section): a query
         // that persists intermediates must not warm or crowd the next one.

@@ -68,7 +68,11 @@ object Relational6 {
     * — deterministic under ties because the ranked VALUE sequence is. */
   private val kcoreHindex: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val edges = Relational4.docEdges(s, dir)
+    // checkpointed once: the degree aggregate and all four rounds embed the
+    // neighbour list, and each copy would re-plan docEdges' two self-joins
+    // of `documents` (plan leaves 48 -> 12 for the analyzer, the optimizer
+    // and AQE's re-planning between stages)
+    val edges = Relational4.docEdges(s, dir).localCheckpoint()
     val nbrs = edges.select(col("u"), col("v"))
       .union(edges.select(col("v").as("u"), col("u").as("v")))
     val degree = nbrs.groupBy(col("u").as("id"))

@@ -21,12 +21,15 @@ import org.apache.spark.sql.functions._
   *     content) is partitioning-invariant; `KllSketchSpec` proves the
   *     (L+2)·n/k bound across partitionings against exact ranks.
   *
-  * Scale shape of the canonical tree: level 0 is the two-phase
-  * [[DistributedRank]] (bucketed, no global window); each halving level is
-  * one chunk-pair-partitioned window over a frame that HALVES per level
-  * (total work ≈ 2n across all ceil(log2(n/k)) levels, every partition
-  * ≤ 2k rows). The driver holds only the O(#buckets) rank offset table and
-  * the final ≤ k-item sketch.
+  * Scale shape of the canonical tree: above [[DriverFinishRows]] input
+  * rows, level 0 is the two-phase [[DistributedRank]] (bucketed, no global
+  * window) and each halving level is one chunk-pair-partitioned window
+  * over a frame that HALVES per level (total work ≈ 2n across all
+  * ceil(log2(n/k)) levels, every partition ≤ 2k rows) until the row bound
+  * drops under the constant; the driver holds only the O(#buckets) rank
+  * offset table, the ≤ [[DriverFinishRows]]-row tail and the final ≤ k-item
+  * sketch. At or under the constant the whole tree, level 0's rank
+  * included, is one collect plus a driver replay.
   */
 object Sketches {
   type Q = (SparkSession, String) => DataFrame
@@ -36,7 +39,7 @@ object Sketches {
   val K = 256
   private val Phis = Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
 
-  /** Tail-collapse threshold for the halving tree (guide §1.2/§2.4): each
+  /** Driver-finish threshold for the halving tree (guide §1.2/§2.4): each
     * level is ONE Spark job (window + eager checkpoint) over a frame whose
     * row bound halves per level, so the last ~log2(DriverFinishRows/k)
     * levels schedule more than they compute. Once the bound is under this
@@ -44,8 +47,16 @@ object Sketches {
     * ([[halveLocal]]) — every consumer driver-collects the final ≤ k-item
     * sketch anyway, and the collapsed tail is a fixed NUMBER of the
     * smallest levels at any scale (the data-proportional levels above the
-    * constant always run distributed). ~3 MB of narrow rows at the bound. */
+    * constant always run distributed). An input of at most this many rows
+    * skips the distributed rank too: its (v, id) rows are collected and
+    * ranked by the same total order on the driver, so the tree costs the
+    * count job and one collect. ~3 MB of narrow rows at the bound. */
   private[graft] val DriverFinishRows = 1L << 16
+
+  /** The total order (v, id) of the tree, on the driver. Coincides with
+    * Spark's sort order on the rows [[localSortSafe]] admits. */
+  private val ByVId: Ordering[(Double, Long)] =
+    Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
 
   /** One driver-side halving level — the EXACT algebra of the distributed
     * level: partition by nc = chunk div 2, order by (v, id), fold the even
@@ -56,8 +67,7 @@ object Sketches {
   private def halveLocal(items: Array[(Double, Long, Long, Long)])
       : Array[(Double, Long, Long, Long)] =
     items.groupBy(_._3 / 2).toArray.flatMap { case (nc, rows) =>
-      val sorted = rows.sortBy(r => (r._1, r._2))(
-        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+      val sorted = rows.sortBy(r => (r._1, r._2))(ByVId)
       sorted.indices.collect { case i if i % 2 == 0 =>
         val w2 = sorted(i)._4 +
           (if (i + 1 < sorted.length) sorted(i + 1)._4 else 0L)
@@ -65,14 +75,29 @@ object Sketches {
       }
     }
 
+  /** Replays the remaining halving levels of a `chunks`-chunk level
+    * exactly on the driver; the result is the final (v, id, chunk, w)
+    * sketch as a local frame. */
+  private def finishLocal(s: SparkSession,
+      level: Array[(Double, Long, Long, Long)], chunks: Long): DataFrame = {
+    var items = level
+    var nChunks = chunks
+    while (nChunks > 1) {
+      items = halveLocal(items); nChunks = (nChunks + 1) / 2
+    }
+    import s.implicits._
+    items.toSeq.toDF("v", "id", "chunk", "w")
+  }
+
   /** True when every (v, id) row is safe for [[halveLocal]]'s Scala
     * ordering: v non-null double, not NaN, not -0.0 (Spark's SQL sort
     * semantics for those differ from a naive total order — rather than
-    * re-prove them, such inputs just stay on the engine path). */
+    * re-prove them, such inputs just stay on the engine path), and the id
+    * in the column after v non-null. */
   private def localSortSafe(rows: Array[org.apache.spark.sql.Row],
                             vIdx: Int): Boolean =
     rows.forall { r =>
-      !r.isNullAt(vIdx) && {
+      !r.isNullAt(vIdx) && !r.isNullAt(vIdx + 1) && {
         val v = r.getDouble(vIdx)
         !v.isNaN && java.lang.Double.doubleToRawLongBits(v) != (1L << 63)
       }
@@ -86,8 +111,38 @@ object Sketches {
       driverFinishRows: Long = DriverFinishRows): (DataFrame, Long) = {
     val s = df.sparkSession
     val r0 = df.agg(min(col("v").cast("double")).as("mn"),
-      max(col("v").cast("double")).as("mx")).collect()(0)
-    val nb = math.max(1, s.sparkContext.defaultParallelism * 4)
+      max(col("v").cast("double")).as("mx"), count(lit(1)).as("n"))
+      .collect()(0)
+    val n = r0.getLong(2)
+    // the non-(double, long)-typed callers (tests with other schemas) stay
+    // fully on the engine path
+    val typed = df.schema("v").dataType ==
+      org.apache.spark.sql.types.DoubleType &&
+      df.schema("id").dataType == org.apache.spark.sql.types.LongType
+    // under the bound, level 0's rank is a driver sort of the collected
+    // rows, so no level runs distributed; the count comes from the rows the
+    // sketch is built from, `n` only gates the collect
+    val small = if (typed && n <= driverFinishRows)
+      Some(df.select("v", "id").collect()).filter(localSortSafe(_, 0))
+    else None
+    small match {
+      case Some(rows) =>
+        val m = rows.length.toLong
+        val level0 = rows.map(r => (r.getDouble(0), r.getLong(1)))
+          .sorted(ByVId).zipWithIndex
+          .map { case ((v, id), i) => (v, id, i.toLong / k, 1L) }
+        (finishLocal(s, level0, (m + k - 1) / k), m)
+      case None => kllDistributed(df, r0, k, typed, driverFinishRows)
+    }
+  }
+
+  /** [[kllCanonical]] above the driver bound (or on rows the driver order
+    * cannot rank): level 0 is [[DistributedRank]], then distributed levels
+    * while the row bound (≤ nChunks·k) exceeds `driverFinishRows`, then the
+    * tail on the driver. */
+  private def kllDistributed(df: DataFrame, r0: org.apache.spark.sql.Row,
+      k: Int, typed: Boolean, driverFinishRows: Long): (DataFrame, Long) = {
+    val nb = math.max(1, df.sparkSession.sparkContext.defaultParallelism * 4)
     val bucket = if (r0.isNullAt(0)) lit(0L) else {
       val mn = r0.getDouble(0)
       val width = math.max((r0.getDouble(1) - mn) / nb,
@@ -112,26 +167,13 @@ object Sketches {
         .localCheckpoint(true)
       nChunks = (nChunks + 1) / 2
     }
-    // distributed levels while the row bound (≤ nChunks·k) exceeds the
-    // driver-finish constant; the non-(double, long)-typed callers (tests
-    // with other schemas) stay fully on the engine path
-    val typed = cur.schema("v").dataType ==
-      org.apache.spark.sql.types.DoubleType &&
-      cur.schema("id").dataType == org.apache.spark.sql.types.LongType
     while (nChunks > 1 && (!typed || nChunks * k > driverFinishRows))
       levelOnce()
     if (nChunks > 1) {
       val collected = cur.select("v", "id", "chunk", "w").collect()
       if (!localSortSafe(collected, 0)) { while (nChunks > 1) levelOnce() }
-      else {
-        var items = collected.map(r =>
-          (r.getDouble(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        while (nChunks > 1) {
-          items = halveLocal(items); nChunks = (nChunks + 1) / 2
-        }
-        import s.implicits._
-        cur = items.toSeq.toDF("v", "id", "chunk", "w")
-      }
+      else cur = finishLocal(df.sparkSession, collected.map(r =>
+        (r.getDouble(0), r.getLong(1), r.getLong(2), r.getLong(3))), nChunks)
     }
     (cur, n)
   }

@@ -473,6 +473,22 @@ class AnalyticsSpec extends SparkSpec {
     assert(got.exists { case (id, _, cr) => cr == core(id) })
   }
 
+  test("q_kcore plans its H-index rounds over one materialized neighbour list") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    // two 50-doc blocks: the plan's shape does not depend on corpus size
+    val dir = java.nio.file.Files.createTempDirectory("graft_kcore").toString
+    (0L until 100L).toDF("doc_id").write.parquet(s"$dir/documents.parquet")
+    val plan = SparkEntry.queries("q_kcore")(spark, dir)
+      .queryExecution.optimizedPlan
+    // the neighbour list reads the checkpointed edges twice (both
+    // directions); the degree side of the final join holds one list and
+    // the round-4 side five (one per round plus its degree seed): 12
+    // leaves, none a file scan. With docEdges' two self-joins of
+    // `documents` re-embedded in every list it was 48 LogicalRelations.
+    assert(plan.collectLeaves().count(_.isInstanceOf[LogicalRelation]) == 0)
+    assert(plan.collectLeaves().size <= 12, plan.treeString)
+  }
+
   test("fk orphan screen: clean fixture reads zero; planted violations detected") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"

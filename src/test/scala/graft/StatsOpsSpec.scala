@@ -383,24 +383,75 @@ class Round8EdgeSpec extends SparkSpec {
     assert(byG == Map("big" -> 8L, "solo" -> 1L), byG.toString)
   }
 
+  /** Jobs `f` submits from this thread, counted by a listener. Listener
+    * events arrive asynchronously but in order, so a marker job run after
+    * `f` closes the count: once its start is seen, so are all of f's. */
+  private def jobsOf(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (group, marker) = ("jobs-of", "jobs-of-marker")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => closed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(l)
+  }
+
   test("KLL driver-finished tail equals the fully distributed tree") {
     import spark.implicits._
+    import graft.queries.Sketches.{kllCanonical, DriverFinishRows}
     // deterministic pseudo-random doubles with ties; k=8 over 600 rows
-    // gives 75 chunks -> 7 halving levels, so driverFinishRows=0 (all
-    // levels distributed) vs the default (all 7 replayed on the driver)
-    // exercises the whole replay including odd chunk counts
+    // gives 75 chunks -> 7 halving levels. Three gates: driverFinishRows=0
+    // runs every level distributed; n - 1 ranks distributed, runs one
+    // level distributed (75·8 > 599) and replays the other 6 on the
+    // driver; the default ranks and replays the whole tree on the driver
     val rows = (1 to 600).map(i =>
       (((i * 2654435761L) % 97).toDouble / 7.0, i.toLong)).toDF("v", "id")
-    def canon(fin: Long) = {
-      val (sk, n) = graft.queries.Sketches.kllCanonical(rows, 8, fin)
+    // sketch rows by id (unique here, a null id read as -1); v as raw
+    // bits, so NaN compares equal to itself and -0.0 differs from 0.0
+    def canon(df: org.apache.spark.sql.DataFrame, fin: Long) = {
+      val (sk, n) = kllCanonical(df, 8, fin)
       (sk.select("v", "id", "chunk", "w").collect()
-        .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sortBy(t => (t._1, t._2)).toSeq, n)
+        .map(r => (java.lang.Double.doubleToRawLongBits(r.getDouble(0)),
+          if (r.isNullAt(1)) -1L else r.getLong(1), r.getLong(2),
+          r.getLong(3)))
+        .sortBy(_._2).toSeq, n)
     }
-    val (dist, n1) = canon(0L)
-    val (drv, n2) = canon(graft.queries.Sketches.DriverFinishRows)
-    assert(n1 == n2 && dist == drv,
-      s"distributed $dist\nvs driver $drv")
+    val dist = canon(rows, 0L)
+    for (fin <- Seq(599L, DriverFinishRows))
+      assert(canon(rows, fin) == dist, s"driverFinishRows=$fin")
+    // -0.0 and NaN values, and a null id, are outside the driver's order:
+    // the default falls back to the engine path and equals the fully
+    // distributed tree
+    val odd = Seq(
+      Seq((-0.0, Some(601L)), (Double.NaN, Some(602L)), (0.0, Some(603L)),
+        (Double.NaN, Some(604L))),
+      Seq((5.0, None), (5.0, Some(605L))))
+    for (extra <- odd) {
+      val df = rows.union(extra.toDF("v", "id"))
+      assert(canon(df, DriverFinishRows) == canon(df, 0L), extra.toString)
+    }
+    // jobs of the default on the 600 rows: 2, the count aggregate's two
+    // AQE stages (the collect of these local rows runs none). Ranking
+    // level 0 distributed, as the tree did before at every size, took 7:
+    // the aggregate, DistributedRank's bucket counts and the level-0
+    // checkpoint (2 each), then the tail's collect.
+    val jobs = jobsOf(canon(rows, DriverFinishRows))
+    assert(jobs <= 2, s"$jobs jobs")
     // grouped: two groups of very different depth (one freezes early)
     val grows = ((1 to 500).map(i =>
       ("deep", ((i * 40503L) % 83).toDouble / 3.0, i.toLong)) ++
@@ -412,7 +463,7 @@ class Round8EdgeSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getDouble(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
       .sortBy(t => (t._1, t._2, t._3)).toSeq
-    assert(gcanon(0L) == gcanon(graft.queries.Sketches.DriverFinishRows))
+    assert(gcanon(0L) == gcanon(DriverFinishRows))
   }
 
   test("temperature sample keeps a tiny source whole; cusum handles 1-row types") {
