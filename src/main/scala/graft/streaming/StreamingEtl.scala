@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.etl.{DeFiSwapParser, Ingest, TokenTransferDecoder}
+import graft.functions.{GraftFunctions, HllFunctions}
 
 /** Structured Streaming slice (SURVEY.md §2.9): the reference's ingestion is
   * a 2-second poll loop feeding micro-batches
@@ -26,10 +27,22 @@ object StreamingEtl {
   /** Incremental hourly transfer volume — the streaming twin of the
     * canonical TRANSFER_VOLUME query (A2/A6): 1-hour tumbling window with a
     * 10-minute watermark. COUNT(DISTINCT) is not incrementally computable
-    * with bounded state, so unique senders/receivers use
-    * approx_count_distinct (documented deviation from the batch twin). */
+    * with bounded state, so unique senders/receivers are md5 HLL estimates
+    * ([[graft.functions.HllSketchAgg]], `hll_sketch` at p = 12: ~1.6%
+    * relative error, 4 KB of state per window group and column), rounded to
+    * a long. The registers are a pure function of the window's address set,
+    * so the streamed windows are bit-identical to this transform run as a
+    * batch query, under any micro-batch slicing, and a driver or DuckDB twin
+    * recomputes them from the addresses ([[HllFunctions.estimateFrom]]).
+    * The sketch runs as one binary buffer under ObjectHashAggregate, where
+    * Spark's HLL++ `approx_count_distinct` falls out of whole-stage codegen
+    * and rebuilds interpreted projections in every aggregation task. */
   def hourlyTransferVolume(transfers: DataFrame,
-                           watermark: String = "10 minutes"): DataFrame =
+                           watermark: String = "10 minutes"): DataFrame = {
+    GraftFunctions.install(transfers.sparkSession)
+    def estimate(c: String) =
+      round(HllFunctions.estimateColumns(col(c), HllFunctions.DefaultPrecision)._3)
+        .cast("long")
     transfers
       .withWatermark("block_timestamp", watermark)
       .groupBy(
@@ -38,14 +51,18 @@ object StreamingEtl {
       .agg(
         count(lit(1)).as("transfer_count"),
         sum(col("amount") / 1e18).as("volume_normalized"),
-        approx_count_distinct(col("from")).as("unique_senders"),
-        approx_count_distinct(col("to")).as("unique_receivers"))
+        HllFunctions.hllSketch(col("from")).as("senders"),
+        HllFunctions.hllSketch(col("to")).as("receivers"))
       .select(col("hour_window.start").as("hour_bucket"), col("standard"),
         col("transfer_count"), col("volume_normalized"),
-        col("unique_senders"), col("unique_receivers"))
+        estimate("senders").as("unique_senders"),
+        estimate("receivers").as("unique_receivers"))
+  }
 
   /** Exact-distinct streaming hourly volume — replaces
-    * [[hourlyTransferVolume]]'s approx_count_distinct with a TWO-LEVEL
+    * [[hourlyTransferVolume]]'s `hll_sketch` estimates (p = 12, ~1.6%
+    * error, 4 KB of state per window group and column, bit-identical to
+    * the batch twin) with exact counts from a TWO-LEVEL
     * windowed aggregation (Spark 3.4+ chained stateful operators):
     *
     *  - level 1 keys on (window, standard, role, address) — each transfer
@@ -350,7 +367,6 @@ object StreamingEtl {
   def runningHllDistinct(events: DataFrame, p: Int = 12): Dataset[HllUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
-    import graft.functions.HllFunctions
     def req(c: Column, msg: String) =
       when(c.isNull, raise_error(lit(msg))).otherwise(c)
     events.select(

@@ -1,10 +1,15 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Streaming upsert ("latest row per key") sink over plain parquet — the
   * reference's warehouse sink upgraded to streaming semantics: each
@@ -24,6 +29,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * no table (never a half-written one); a missing-table retry on the read
   * side covers it, as single-directory parquet swaps cannot do better
   * without a manifest-pointer layout (Delta/Iceberg territory, see below).
+  *
+  * The current state is read with the schema of its first part-file in
+  * path order (the file `spark.read.parquet` infers from), taken from that
+  * file's footer on the driver, so reading it runs no Spark job (the
+  * schema inference of `spark.read.parquet` is one). A state table whose
+  * columns differ from the batch's still fails the `unionByName`.
   *
   * Scale note: rewriting full state per batch is the plain-parquet
   * trade-off — correct and shuffle-minimal (one exchange on the key), but
@@ -49,8 +60,8 @@ object UpsertSink {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  private[streaming] def mergeBatch(batch: DataFrame, path: String,
-                                    key: String, tsCol: String): Unit =
+  private[graft] def mergeBatch(batch: DataFrame, path: String,
+                                key: String, tsCol: String): Unit =
     mergeBatchWith(batch, path, latestPerKey(_, key, tsCol))
 
   /** The crash-safe merge generalized over the compaction: `compact` maps
@@ -64,7 +75,8 @@ object UpsertSink {
     val target = new Path(path)
     val stage = new Path(path + "__stage")
     val aside = new Path(path + "__old")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = target.getFileSystem(conf)
     // Crash recovery: a previous swap can die between "rename target aside"
     // and "rename stage in", leaving the only copy of the prior state in
     // `__old`. Restore it before reading; the retried batch then re-merges
@@ -80,7 +92,8 @@ object UpsertSink {
       } else fs.delete(aside, true)
     }
     val current =
-      if (fs.exists(target)) spark.read.parquet(path)
+      if (fs.exists(target))
+        spark.read.schema(firstFileSchema(fs, target, conf)).parquet(path)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], batch.schema)
     compact(current.unionByName(batch))
@@ -100,6 +113,24 @@ object UpsertSink {
           s"prior state remains at $aside (recovered on next mergeBatch)")
     }
     fs.delete(aside, true)
+  }
+
+  /** The schema `spark.read.parquet(dir)` infers without schema merging —
+    * the Spark schema stored in the footer of the first part-file in path
+    * order — read on the driver. The state is always written by Spark, so
+    * the footer carries it. */
+  private def firstFileSchema(fs: FileSystem, dir: Path,
+                              conf: Configuration): StructType = {
+    val first = fs.listStatus(dir)
+      .filter { f => val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".") }
+      .minByOption(_.getPath.toString)
+      .getOrElse(throw new java.io.IOException(s"no part-file in $dir"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    val json = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .getOrElse(throw new java.io.IOException(s"no Spark schema in the footer of $first"))
+    DataType.fromJson(json).asInstanceOf[StructType]
   }
 
   /** Start the streaming upsert into `path`, keyed by `key`, newest by

@@ -15,30 +15,69 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming decode + hourly window agg matches batch aggregation") {
     implicit val sqlCtx = spark.sqlContext
+    import graft.functions.HllFunctions.{bucketRho, estimateFrom, DefaultPrecision => p}
     val stream = MemoryStream[String]
     val out = StreamingEtl.hourlyTransferVolume(
       StreamingEtl.decodeTransfers(stream.toDS()))
     val q = out.writeStream.outputMode(OutputMode.Complete())
       .format("memory").queryName("hourly_out").start()
     try {
-      val msgs = Fixtures.syntheticTransferMessages(120)
+      // the synthetic day has at most 16 addresses a side, where any
+      // distinct counter is exact; a busy hour after it, with 600 senders
+      // and 300 receivers, makes the sketch estimate
+      val hour = (Fixtures.FixedNow / 3600 + 2) * 3600
+      val busy = (0 until 600).map(i => Fixtures.transferMessage(
+        ts = hour + i * 5, blockNumber = 19500000L + i, logIndex = i.toLong,
+        fromAddr = "0x" + "0" * 24 + f"$i%040x",
+        toAddr = "0x" + "0" * 24 + f"${i % 300 + 7000}%040x"))
+      val msgs = Fixtures.syntheticTransferMessages(120) ++ busy
       stream.addData(msgs.take(60): _*)
       q.processAllAvailable()
-      stream.addData(msgs.drop(60): _*)
+      stream.addData(msgs.slice(60, 400): _*)
+      q.processAllAvailable()
+      stream.addData(msgs.drop(400): _*)
       q.processAllAvailable()
 
       val streamed = spark.table("hourly_out")
-        .select("hour_bucket", "standard", "transfer_count")
-        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
+        .select("hour_bucket", "standard", "transfer_count", "unique_senders",
+          "unique_receivers")
+        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
+          r.getLong(3), r.getLong(4))).toSet
 
-      val batch = TokenTransferDecoder.decode(Ingest.parseRaw(spark, msgs))
-        .groupBy(date_trunc("hour", col("block_timestamp")).as("hour_bucket"),
-          col("standard"))
-        .agg(count(lit(1)).as("transfer_count"))
-        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
+      // the batch twin on the driver: counts, and each window's distinct
+      // columns as the md5 HLL estimate of its address set at p = 12,
+      // rounded as the query rounds (to cents, then to a long)
+      def hll(addrs: Seq[String]): Long = {
+        val regs = new Array[Int](1 << p)
+        for (a <- addrs) {
+          val (b, rho) = bucketRho(a, p)
+          regs(b) = math.max(regs(b), rho)
+        }
+        val est = BigDecimal(estimateFrom(regs.toSeq, p))
+          .setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
+        BigDecimal(est).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+      }
+      val rows = TokenTransferDecoder.decode(Ingest.parseRaw(spark, msgs))
+        .select(date_trunc("hour", col("block_timestamp")), col("standard"),
+          col("from"), col("to"))
+        .collect().map(r => (r.getTimestamp(0), r.getString(1),
+          Option(r.getString(2)), Option(r.getString(3))))
+      val batch = rows.groupBy(r => (r._1, r._2)).map { case ((h, s), rs) =>
+        (h, s, rs.length.toLong, hll(rs.flatMap(_._3).toSeq),
+          hll(rs.flatMap(_._4).toSeq))
+      }.toSet
 
-      assert(streamed == batch)
-      assert(streamed.nonEmpty)
+      assert(streamed == batch, (streamed -- batch, batch -- streamed))
+      // the busy hour's counts are real estimates, not the exact sizes: the
+      // sketch reads 607 senders and 298 receivers for 600 and 300, where
+      // Spark's HLL++ (approx_count_distinct) read 571 and 300
+      val exact = rows.groupBy(r => (r._1, r._2)).map { case (k, rs) =>
+        k -> ((rs.flatMap(_._3).distinct.length.toLong,
+          rs.flatMap(_._4).distinct.length.toLong))
+      }
+      assert(streamed.exists(r => exact((r._1, r._2)) != ((r._4, r._5))))
+      // KafkaIOSpec's RocksDB-provider test runs this same transform and
+      // passes unchanged with the sketch columns
     } finally q.stop()
   }
 
@@ -546,6 +585,31 @@ class StreamingSpec extends SparkSpec {
       assert(!fs.exists(new org.apache.hadoop.fs.Path(statePath + "__old")))
       assert(!fs.exists(new org.apache.hadoop.fs.Path(statePath + "__stage")))
     } finally q2.stop()
+  }
+
+  test("upsert merge reads its state in no job of its own; a missing column fails") {
+    import graft.streaming.UpsertSink.mergeBatch
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_jobs").toString
+    val statePath = s"$dir/state"
+    mergeBatch(Seq((1L, 1L, "a1"), (2L, 1L, "b1")).toDF("k", "ver", "payload"),
+      statePath, "k", "ver")
+    // one merge into the existing table runs 2 jobs, the two AQE stages of
+    // the compaction's window; reading the state with spark.read.parquet,
+    // whose schema inference is a one-task job, made it 3
+    val jobs = jobsOf(mergeBatch(
+      Seq((1L, 5L, "a5"), (3L, 1L, "c1")).toDF("k", "ver", "payload"),
+      statePath, "k", "ver"))
+    assert(jobs == 2, s"$jobs jobs")
+    assert(spark.read.parquet(statePath).as[(Long, Long, String)].collect().toSet ==
+      Set((1L, 5L, "a5"), (2L, 1L, "b1"), (3L, 1L, "c1")))
+    // a state table without one of the batch's columns still fails the
+    // merge's unionByName, and is left as it was
+    val narrow = s"$dir/narrow"
+    Seq((1L, 1L)).toDF("k", "ver").write.parquet(narrow)
+    val e = intercept[org.apache.spark.sql.AnalysisException](mergeBatch(
+      Seq((1L, 5L, "a5")).toDF("k", "ver", "payload"), narrow, "k", "ver"))
+    assert(e.getCondition == "NUM_COLUMNS_MISMATCH", e.getMessage)
+    assert(spark.read.parquet(narrow).as[(Long, Long)].collect().toSeq == Seq((1L, 1L)))
   }
 
   test("stream-static broadcast enrichment joins without shuffling the stream") {
