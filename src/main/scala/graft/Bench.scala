@@ -1,6 +1,5 @@
 package graft
 import org.apache.logging.log4j.LogManager
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at the configured
   * scale factor and prints ONE JSON line. Queries run in name order after a
@@ -16,7 +15,6 @@ object Bench {
     // must not overwrite them, so benches publish to their own directory.
     if (sys.props.get("graft.artifact.dir").isEmpty)
       System.setProperty("graft.artifact.dir", "/tmp/graft_bench_artifacts")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Pre-bench load gate (three rounds of co-tenant-inflated committed
     // artifacts): a timing run that starts under external load measures
     // the neighbors, not the engine. Wait (up to a deadline) for the box
@@ -70,35 +68,7 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] lock write failed: ${e.getMessage}")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing floor (guide §2.2/§2.5). parallelismFirst (default
-      // true) already aims post-shuffle parallelism at the session's core
-      // count, but its 1 MiB minPartitionSize floor — tuned for clusters
-      // where a task's scheduling overhead is network-bound — collapses any
-      // compact-typed intermediate below ~32 MiB to a handful of tasks, so
-      // CPU-dense reduce stages (rolling windows, shingle aggregates) ran
-      // 1-wide at bench SFs (measured: q_rolling_corr 4.7 s -> 1.9 s (64 KiB),
-      // etl_tx_features 4.3 s -> 1.8 s; 128 KiB keeps ~95% of that while costing multi-round tiny-stage queries like text_bpe_merges least). At production
-      // scale every post-shuffle partition is >= the advisory size, so a
-      // 64 KiB floor is inert there — this is a floor for small inputs, not
-      // a cluster tuning. Env-overridable for cluster profiles.
-      // MEASURED at sf10 (r14, 3-query A/B, best-of-3 each, two 128k runs
-      // to bound spread): 128k {rolling_corr 27.8/33.3, etl_tx 35.0/29.9,
-      // kll_grouped 8.5/8.9} vs 1m {36.3, 30.0, 7.7} — every delta within
-      // or near the per-query run spread except rolling_corr, where 128k
-      // is still the FASTER side (its compact intermediate is ~1 MiB/task
-      // at sf10, so the 1 MiB floor still over-coalesces there). A
-      // coalescing floor can only limit coalescing, never split, so its
-      // worst case at any scale is more, smaller reduce tasks — no
-      // size-conditional guard needed.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "128k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench")
 
     // warmup: parquet reader + shuffle + codegen paths, not measured
     try {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.queries.Tables
@@ -9,15 +8,7 @@ import graft.queries.Tables
 object DevProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // mirror Bench's session config so profiles measure the bench plan
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "128k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-devprofile")
     // plan-shape triage (no execution): print the formatted physical plan
     // of each named registry entry — used in round 11 to pin which sf100
     // entry owns a bhj→generate→hashAgg stage without running it

@@ -125,15 +125,7 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args.toIndexedSeq)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(s"graft-${cfg.network}")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"graft-${cfg.network}")
     var exitCode = 0
     try {
       println(s"pipeline.init network=${cfg.network} chain_id=${cfg.chainId} " +

@@ -1,32 +1,33 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import graft.queries.{Behavioral, Domain, Extensions, Probes, Relational, Relational2, Relational3, Relational4, Relational5, Relational6, Relational7, Sketches, Transpile, Web}
+import graft.queries.{Behavioral, Domain, Entry, Extensions, Probes, Q, Relational, Relational2, Relational3, Relational4, Relational5, Relational6, Relational7, Sketches, Transpile, Web}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
-  * `queries` maps one named entry per implemented operator from SURVEY.md §2
-  * to a DataFrame builder over the driver's parquet tables; `oracleSql` holds
-  * the DuckDB twin of each SQL-expressible query. Column names and row order
-  * are made to match exactly (every query has a total ORDER BY and aliases
-  * shared with its oracle).
+  * The registry is one [[graft.queries.Entry]] per implemented operator
+  * from SURVEY.md §2: a DataFrame builder over the driver's parquet tables
+  * plus, for each SQL-expressible query, its DuckDB twin. Column names and
+  * row order are made to match exactly (every query has a total ORDER BY
+  * and aliases shared with its oracle). `queries` and `oracleSql` are the
+  * two views the driver and the benchmark read.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Relational.queries("q_join_star")(spark, "/root/testdata/sf0.001")
+    Relational.joinStar(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Relational2.queries ++ Relational3.queries ++
-      Relational4.queries ++ Relational5.queries ++ Relational6.queries ++ Relational7.queries ++ Domain.queries ++
-      Extensions.queries ++ Behavioral.queries ++ Sketches.queries ++ Web.queries ++
-      Transpile.queries ++ Probes.queries
+  /** Every record by name; a name two modules both list fails here. */
+  private val entries: Map[String, Entry] = Entry.registry(
+    Relational.entries ++ Relational2.entries ++ Relational3.entries ++
+      Relational4.entries ++ Relational5.entries ++ Relational6.entries ++
+      Relational7.entries ++ Domain.entries ++ Extensions.entries ++
+      Behavioral.entries ++ Sketches.entries ++ Web.entries ++
+      Transpile.entries ++ Probes.entries)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracleSql ++ Relational2.oracleSql ++ Relational3.oracleSql ++
-      Relational4.oracleSql ++ Relational5.oracleSql ++ Relational6.oracleSql ++ Relational7.oracleSql ++ Domain.oracleSql ++
-      Extensions.oracleSql ++ Behavioral.oracleSql ++ Sketches.oracleSql ++ Web.oracleSql ++
-      Transpile.oracleSql ++ Probes.oracleSql
+  /** Name → builder, one per record. */
+  val queries: Map[String, Q] = entries.map { case (n, e) => n -> e.build }
+
+  /** Name → DuckDB twin, for the records that have one. */
+  lazy val oracleSql: Map[String, String] =
+    entries.flatMap { case (n, e) => e.oracle.map(n -> _) }
 }

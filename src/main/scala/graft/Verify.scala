@@ -1,41 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Default to the whole box: the round-10 sf10 sweep silently ran its
-    // first wave on local[4] (an eighth of a 32-core host) because the old
-    // default mirrored the driver's sf0.01 setting. Correctness output is
-    // parallelism-invariant (every query's row order is deterministic),
-    // so the only effect of more cores is wall-clock.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    System.err.println(s"[verify] running local[$cpus] on $sfDir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale sweeps read SINGLE parquet files per table; the default
-      // 128 MiB maxPartitionBytes gives a 500 MiB sf100 documents file
-      // only 4 input splits, and every codegen stage PIPELINED onto that
-      // scan (explode → join → agg) inherits 4-way parallelism on a
-      // 32-core box (round-11 finding: sf100 stage 172 ran exactly 4
-      // tasks for 70+ minutes — the round-9 parallelism-inheritance class
-      // at the scan itself, where no repartition sits upstream to fix
-      // it). 16 MiB is the same knob a real cluster tunes for its
-      // executor count; tiny driver fixtures still get 1 split.
-      .config("spark.sql.files.maxPartitionBytes", (16L * 1024 * 1024).toString)
-      // same AQE coalescing floor as Bench (see Bench.scala): keeps
-      // CPU-dense reduce stages at the session's parallelism on small
-      // inputs; inert at scale where partitions exceed the advisory size
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "128k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = GraftSession.mainCores
+    System.err.println(s"[verify] running local[$cores] on $sfDir")
+    val spark = GraftSession("graft-verify", cores)
     new java.io.File(outDir).mkdirs()
     // optional comma-separated query filter (as in Bench) for targeted
     // re-verification of new queries at expensive scale factors

@@ -80,15 +80,7 @@ object ApiServer {
     val port = args.filterNot(_.startsWith("--"))
       .headOption.map(_.toInt).getOrElse(5000)
     val host = if (args.contains("--external")) "0.0.0.0" else "127.0.0.1"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-api")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors())
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("graft-api")
     val srv = new ApiServer(spark, port, host)
     srv.start()
     println(s"graft api listening on $host:${srv.boundPort}")

@@ -64,7 +64,13 @@ object GraftFunctions {
     fn("kll_sketch", classOf[KllSketchAgg])(
       e => KllSketchAgg(e.head, intArg(e, 1, KllFunctions.DefaultK))),
     // Spark's runtime-filter pair, callable by name so a query can place
-    // the bloom filter the InjectRuntimeFilter rule would (q_runtime_filter)
+    // the bloom filter the InjectRuntimeFilter rule would (q_runtime_filter).
+    // Spark 4.1.2's own BloomFilterMightContain codegen fails to compile
+    // ("java.lang.Long" is not an rvalue, logged as ERROR CodeGenerator)
+    // when the probe is a negative long literal, e.g. xxhash64('a') folded
+    // to -8582455328737087284, or -5L; Spark then evaluates it interpreted,
+    // with the right answer. A column probe, as in q_runtime_filter, and a
+    // positive literal compile cleanly.
     fn("graft_bloom_agg", classOf[BloomFilterAggregate])(
       e => new BloomFilterAggregate(e.head)),
     fn("graft_might_contain", classOf[BloomFilterMightContain])(

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.analytics.{AsOfJoin, EventAnalytics, RangeJoin, SkewJoin}
@@ -10,8 +9,6 @@ import graft.analytics.{AsOfJoin, EventAnalytics, RangeJoin, SkewJoin}
   * Every output is count/min/max/string-exact, so all four oracles are
   * hash-exact (no float leniency anywhere). */
 object Behavioral {
-  type Q = (SparkSession, String) => DataFrame
-
   private val sessionize: Q = (s, dir) =>
     EventAnalytics.sessionize(Tables.events(s, dir))
 
@@ -167,7 +164,7 @@ object Behavioral {
     * window" around a sampled set of purchases — the point-in-interval
     * join. Bucketed on 1-h epoch buckets so the plan is an equi-join
     * (never a nested loop); the DuckDB twin is the plain BETWEEN join. */
-  private val rangeJoin: Q = (s, dir) => {
+  private[queries] val rangeJoin: Q = (s, dir) => {
     val ev = Tables.events(s, dir)
     val views = ev.filter(col("event_type") === "view")
       .select("event_id", "ts")
@@ -1003,75 +1000,39 @@ object Behavioral {
       |    AS cum_users
       |FROM d ORDER BY first_date""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_sessionize"        -> sessionize,
-    "q_funnel"            -> funnel,
-    "q_retention"         -> retention,
-    "q_hash_split"        -> hashSplit,
-    "q_stratified_sample" -> stratifiedSample,
-    "q_pack_sequences"    -> packSequences,
-    "q_mixture_sample"    -> mixtureSample,
-    "q_temp_sample"       -> tempSample,
-    "q_asof_join"         -> asofJoin,
-    "q_range_join"        -> rangeJoin,
-    "q_skew_join"         -> skewJoin,
-    "q_quality_ntile"     -> qualityNtile,
-    "q_token_budget"      -> tokenBudget,
-    "q_flat_mixture"      -> flatMixture,
-    "q_scd2"              -> scd2,
-    "q_merge_upsert"      -> mergeUpsert,
-    "q_latest_per_key"    -> latestPerKey,
-    "q_anomaly_zscore"    -> anomalyZscore,
-    "q_winsorize"         -> winsorize,
-    "q_profile"           -> profile,
-    "q_chunk_docs"        -> chunkDocs,
-    "q_time_window_sum"   -> timeWindowSum,
-    "dedup_chunks"        -> dedupChunks,
-    "q_pagerank"          -> pagerank,
-    "q_contingency"       -> contingency,
-    "q_event_sequences"   -> eventSequences,
-    "q_hopping_window"    -> hoppingWindow,
-    "q_degree_dist"       -> degreeDist,
-    "q_markov"            -> markovTransitions,
-    "q_source_entropy"    -> sourceEntropy,
-    "q_gap_histogram"     -> gapHistogram,
-    "q_seasonality"       -> seasonality,
-    "q_user_growth"       -> userGrowth,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_sessionize"        -> sessionizeSql,
-    "q_funnel"            -> funnelSql,
-    "q_retention"         -> retentionSql,
-    "q_hash_split"        -> hashSplitSql,
-    "q_stratified_sample" -> stratifiedSampleSql,
-    "q_pack_sequences"    -> packSequencesSql,
-    "q_mixture_sample"    -> mixtureSampleSql,
-    "q_temp_sample"       -> tempSampleSql,
-    "q_asof_join"         -> asofJoinSql,
-    "q_range_join"        -> rangeJoinSql,
-    "q_skew_join"         -> skewJoinSql,
-    "q_quality_ntile"     -> qualityNtileSql,
-    "q_token_budget"      -> tokenBudgetSql,
-    "q_flat_mixture"      -> flatMixtureSql,
-    "q_scd2"              -> scd2Sql,
-    "q_merge_upsert"      -> mergeUpsertSql,
-    "q_latest_per_key"    -> latestPerKeySql,
-    "q_anomaly_zscore"    -> anomalyZscoreSql,
-    "q_winsorize"         -> winsorizeSql,
-    "q_profile"           -> profileSql,
-    "q_chunk_docs"        -> chunkDocsSql,
-    "q_time_window_sum"   -> timeWindowSumSql,
-    "dedup_chunks"        -> dedupChunksSql,
-    "q_pagerank"          -> pagerankSql,
-    "q_contingency"       -> contingencySql,
-    "q_event_sequences"   -> eventSequencesSql,
-    "q_hopping_window"    -> hoppingWindowSql,
-    "q_degree_dist"       -> degreeDistSql,
-    "q_markov"            -> markovTransitionsSql,
-    "q_source_entropy"    -> sourceEntropySql,
-    "q_gap_histogram"     -> gapHistogramSql,
-    "q_seasonality"       -> seasonalitySql,
-    "q_user_growth"       -> userGrowthSql,
+  val entries: Seq[Entry] = Seq(
+    Entry("q_sessionize", sessionize, sessionizeSql),
+    Entry("q_funnel", funnel, funnelSql),
+    Entry("q_retention", retention, retentionSql),
+    Entry("q_hash_split", hashSplit, hashSplitSql),
+    Entry("q_stratified_sample", stratifiedSample, stratifiedSampleSql),
+    Entry("q_pack_sequences", packSequences, packSequencesSql),
+    Entry("q_mixture_sample", mixtureSample, mixtureSampleSql),
+    Entry("q_temp_sample", tempSample, tempSampleSql),
+    Entry("q_asof_join", asofJoin, asofJoinSql),
+    Entry("q_range_join", rangeJoin, rangeJoinSql),
+    Entry("q_skew_join", skewJoin, skewJoinSql),
+    Entry("q_quality_ntile", qualityNtile, qualityNtileSql),
+    Entry("q_token_budget", tokenBudget, tokenBudgetSql),
+    Entry("q_flat_mixture", flatMixture, flatMixtureSql),
+    Entry("q_scd2", scd2, scd2Sql),
+    Entry("q_merge_upsert", mergeUpsert, mergeUpsertSql),
+    Entry("q_latest_per_key", latestPerKey, latestPerKeySql),
+    Entry("q_anomaly_zscore", anomalyZscore, anomalyZscoreSql),
+    Entry("q_winsorize", winsorize, winsorizeSql),
+    Entry("q_profile", profile, profileSql),
+    Entry("q_chunk_docs", chunkDocs, chunkDocsSql),
+    Entry("q_time_window_sum", timeWindowSum, timeWindowSumSql),
+    Entry("dedup_chunks", dedupChunks, dedupChunksSql),
+    Entry("q_pagerank", pagerank, pagerankSql),
+    Entry("q_contingency", contingency, contingencySql),
+    Entry("q_event_sequences", eventSequences, eventSequencesSql),
+    Entry("q_hopping_window", hoppingWindow, hoppingWindowSql),
+    Entry("q_degree_dist", degreeDist, degreeDistSql),
+    Entry("q_markov", markovTransitions, markovTransitionsSql),
+    Entry("q_source_entropy", sourceEntropy, sourceEntropySql),
+    Entry("q_gap_histogram", gapHistogram, gapHistogramSql),
+    Entry("q_seasonality", seasonality, seasonalitySql),
+    Entry("q_user_growth", userGrowth, userGrowthSql),
   )
 }

@@ -27,8 +27,6 @@ import graft.sql.CanonicalQueries
   * expression is mirrored operation-for-operation.
   */
 object Domain {
-  type Q = (SparkSession, String) => DataFrame
-
   /** The driver parquet is one small file per table, so the scan is ONE
     * input partition and the parse→decode chain would run on a single core.
     * A real deployment reads thousands of files (or a Kafka topic with many
@@ -449,31 +447,17 @@ object Domain {
        |FROM j ORDER BY block_number""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "etl_decode_transfers"  -> decodeTransfers,
-    "etl_parse_swaps"       -> parseSwaps,
-    "etl_tx_features"       -> txFeatures,
-    "etl_block_agg"         -> blockAgg,
-    "etl_transfer_volume"   -> transferVolume,
-    "etl_swap_price_impact" -> swapPriceImpact,
-    "model_var_compute"     -> varCompute,
-    "model_rolling_var"     -> rollingVar,
-    "model_stress_test"     -> stressTest,
-    "model_il_scan"         -> ilScan,
-    "model_mev_scores"      -> mevScores,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "etl_decode_transfers"  -> decodeTransfersSql,
-    "etl_parse_swaps"       -> parseSwapsSql,
-    "etl_tx_features"       -> txFeaturesSql,
-    "etl_block_agg"         -> blockAggSql,
-    "etl_transfer_volume"   -> transferVolumeSql,
-    "etl_swap_price_impact" -> swapPriceImpactSql,
-    "model_var_compute"     -> varComputeSql,
-    "model_rolling_var"     -> rollingVarSql,
-    "model_stress_test"     -> stressTestSql,
-    "model_il_scan"         -> ilScanSql,
-    "model_mev_scores"      -> mevScoresSql,
+  val entries: Seq[Entry] = Seq(
+    Entry("etl_decode_transfers", decodeTransfers, decodeTransfersSql),
+    Entry("etl_parse_swaps", parseSwaps, parseSwapsSql),
+    Entry("etl_tx_features", txFeatures, txFeaturesSql),
+    Entry("etl_block_agg", blockAgg, blockAggSql),
+    Entry("etl_transfer_volume", transferVolume, transferVolumeSql),
+    Entry("etl_swap_price_impact", swapPriceImpact, swapPriceImpactSql),
+    Entry("model_var_compute", varCompute, varComputeSql),
+    Entry("model_rolling_var", rollingVar, rollingVarSql),
+    Entry("model_stress_test", stressTest, stressTestSql),
+    Entry("model_il_scan", ilScan, ilScanSql),
+    Entry("model_mev_scores", mevScores, mevScoresSql),
   )
 }

@@ -34,8 +34,6 @@ import org.apache.spark.sql.functions._
   * sf0.01 gate and at sf1.
   */
 object Probes {
-  import Relational.Q
-
   /** 1/16 of keys: md5 first hex digit = 0. */
   private val Hex16 = Seq("0")
   /** 1/16 of keys, digit 5: the range-join probe's cut. Digit 0 selects
@@ -62,7 +60,7 @@ object Probes {
     * mining). Spark runs the full mine + filter; the twin pushes the
     * restriction into its join, shrinking it 16x. */
   private val hardNegativesProbe: Q = (s, dir) =>
-    Relational7.queries("sim_hard_negatives")(s, dir)
+    Relational7.hardNegatives(s, dir)
       .filter(md5Sel(col("anchor"), Hex16))
       .orderBy("anchor", "rk")
 
@@ -71,7 +69,7 @@ object Probes {
     * every vector's bucket (linear) but explodes/dots only the selected
     * sixteenth of the pairs. */
   private val embLshPairsProbe: Q = (s, dir) =>
-    Extensions.queries("emb_lsh_pairs")(s, dir)
+    Extensions.embLshPairs(s, dir)
       .filter(md5Sel(col("v1"), Hex16))
       .orderBy("v1", "v2")
 
@@ -126,29 +124,22 @@ object Probes {
     * AFTER the join computes, so no temp/memory grant can save it; the
     * 1/16 cut bounds the fetched frame at ~34 M rows. */
   private val rangeJoinProbe: Q = (s, dir) =>
-    Behavioral.queries("q_range_join")(s, dir)
+    Behavioral.rangeJoin(s, dir)
       .filter(md5Sel(col("interval_id"), Hex16RJ))
       .orderBy("interval_id", "event_id")
 
-  val queries: Map[String, Q] = Map(
-    "sim_hard_negatives_probe" -> hardNegativesProbe,
-    "emb_lsh_pairs_probe" -> embLshPairsProbe,
-    "pipeline_passage_graph_probe" -> tokenGraphProbe,
-    "sim_semdedup_probe" -> semDedupProbe,
-    "q_hits_probe" -> hitsProbe,
-    "q_range_join_probe" -> rangeJoinProbe)
-
-  val oracleSql: Map[String, String] = Map(
-    "sim_hard_negatives_probe" ->
-      Relational7.hardNegativesSqlOver(sqlSel("a.doc_id", Hex16)),
-    "emb_lsh_pairs_probe" ->
-      Extensions.embLshPairsSqlOver(sqlSel("a.vec_id", Hex16)),
-    "pipeline_passage_graph_probe" ->
-      Relational6.tokenGraphSqlOver(sqlSel("doc_id", Hex16)),
-    "sim_semdedup_probe" ->
-      Extensions.simSemDedupSqlOver(sqlSel("vec_id", Hex4)),
-    "q_hits_probe" ->
-      Relational4.hitsSqlOver(sqlSel("doc_id // 50", Hex4)),
-    "q_range_join_probe" ->
-      Behavioral.rangeJoinSqlOver(sqlSel("event_id", Hex16RJ)))
+  val entries: Seq[Entry] = Seq(
+    Entry("sim_hard_negatives_probe", hardNegativesProbe,
+      Relational7.hardNegativesSqlOver(sqlSel("a.doc_id", Hex16))),
+    Entry("emb_lsh_pairs_probe", embLshPairsProbe,
+      Extensions.embLshPairsSqlOver(sqlSel("a.vec_id", Hex16))),
+    Entry("pipeline_passage_graph_probe", tokenGraphProbe,
+      Relational6.tokenGraphSqlOver(sqlSel("doc_id", Hex16))),
+    Entry("sim_semdedup_probe", semDedupProbe,
+      Extensions.simSemDedupSqlOver(sqlSel("vec_id", Hex4))),
+    Entry("q_hits_probe", hitsProbe,
+      Relational4.hitsSqlOver(sqlSel("doc_id // 50", Hex4))),
+    Entry("q_range_join_probe", rangeJoinProbe,
+      Behavioral.rangeJoinSqlOver(sqlSel("event_id", Hex16RJ))),
+  )
 }

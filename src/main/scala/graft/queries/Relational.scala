@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.Num._
@@ -12,8 +11,6 @@ import graft.queries.Num._
   * double-valued aggregate uses the decimal-exact pattern in [[Num]].
   */
 object Relational {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- scans
   /** Projection + filter pushdown (P2/P13/P14): the physical scan must show
     * PushedFilters on l_shipdate and a 4-column ReadSchema. The sort
@@ -58,7 +55,7 @@ object Relational {
   // ---------------------------------------------------------------- joins
   /** Star-schema join (J1 generalization): lineitem⋈orders⋈customer⋈nation⋈region
     * with small dims broadcast — no shuffle on the dim side at any scale. */
-  private val joinStar: Q = (s, dir) => {
+  private[graft] val joinStar: Q = (s, dir) => {
     val li = Tables.lineitem(s, dir)
     val o  = Tables.orders(s, dir)
     val c  = Tables.customer(s, dir)
@@ -381,45 +378,24 @@ object Relational {
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
   // ------------------------------------------------------------- registry
-  val queries: Map[String, Q] = Map(
-    "q_scan_prune"       -> scanPrune,
-    "q_agg_pricing"      -> aggPricing,
-    "q_join_star"        -> joinStar,
-    "q_semi_join"        -> semiJoin,
-    "q_anti_join"        -> antiJoin,
-    "q_hour_spine"       -> hourSpine,
-    "q_hourly_events"    -> hourlyEvents,
-    "q_having_stddev"    -> havingStddev,
-    "q_conditional_agg"  -> conditionalAgg,
-    "q_topk_parts"       -> topkParts,
-    "q_between_range"    -> betweenRange,
-    "q_set_intersect"    -> setIntersect,
-    "q_set_except"       -> setExcept,
-    "q_window_rank"      -> windowRank,
-    "q_rolling_quantile" -> rollingQuantile,
-    "q_window_running"   -> windowRunning,
-    "q_var_cvar"         -> varCvar,
-    "q_robust_stats"     -> robustStats,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_scan_prune"       -> scanPruneSql,
-    "q_agg_pricing"      -> aggPricingSql,
-    "q_join_star"        -> joinStarSql,
-    "q_semi_join"        -> semiJoinSql,
-    "q_anti_join"        -> antiJoinSql,
-    "q_hour_spine"       -> hourSpineSql,
-    "q_hourly_events"    -> hourlyEventsSql,
-    "q_having_stddev"    -> havingStddevSql,
-    "q_conditional_agg"  -> conditionalAggSql,
-    "q_topk_parts"       -> topkPartsSql,
-    "q_between_range"    -> betweenRangeSql,
-    "q_set_intersect"    -> setIntersectSql,
-    "q_set_except"       -> setExceptSql,
-    "q_window_rank"      -> windowRankSql,
-    "q_rolling_quantile" -> rollingQuantileSql,
-    "q_window_running"   -> windowRunningSql,
-    "q_var_cvar"         -> varCvarSql,
-    "q_robust_stats"     -> robustStatsSql,
+  val entries: Seq[Entry] = Seq(
+    Entry("q_scan_prune", scanPrune, scanPruneSql),
+    Entry("q_agg_pricing", aggPricing, aggPricingSql),
+    Entry("q_join_star", joinStar, joinStarSql),
+    Entry("q_semi_join", semiJoin, semiJoinSql),
+    Entry("q_anti_join", antiJoin, antiJoinSql),
+    Entry("q_hour_spine", hourSpine, hourSpineSql),
+    Entry("q_hourly_events", hourlyEvents, hourlyEventsSql),
+    Entry("q_having_stddev", havingStddev, havingStddevSql),
+    Entry("q_conditional_agg", conditionalAgg, conditionalAggSql),
+    Entry("q_topk_parts", topkParts, topkPartsSql),
+    Entry("q_between_range", betweenRange, betweenRangeSql),
+    Entry("q_set_intersect", setIntersect, setIntersectSql),
+    Entry("q_set_except", setExcept, setExceptSql),
+    Entry("q_window_rank", windowRank, windowRankSql),
+    Entry("q_rolling_quantile", rollingQuantile, rollingQuantileSql),
+    Entry("q_window_running", windowRunning, windowRunningSql),
+    Entry("q_var_cvar", varCvar, varCvarSql),
+    Entry("q_robust_stats", robustStats, robustStatsSql),
   )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -12,8 +11,6 @@ import graft.queries.Num._
   * pattern (M11) — all with exact DuckDB oracles.
   */
 object Relational2 {
-  type Q = (SparkSession, String) => DataFrame
-
   /** JSON field extraction from a string column (F1 analog on `props`).
     *
     * Single parse by construction: `json_tuple` is a Generator, and
@@ -240,31 +237,17 @@ object Relational2 {
       |)
       |ORDER BY l_orderkey, l_linenumber, metric, value""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_json_extract"    -> jsonExtract,
-    "q_map_lookup"      -> mapLookup,
-    "q_date_format"     -> dateFormat,
-    "q_pivot_types"     -> pivotTypes,
-    "q_rollup"          -> rollupAgg,
-    "q_cube"            -> cubeAgg,
-    "q_union_all"       -> unionAll,
-    "q_latest_hours"    -> latestHours,
-    "q_cumprod"         -> cumprod,
-    "q_approx_distinct" -> approxDistinct,
-    "q_unpivot"         -> unpivotMeasures,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_json_extract" -> jsonExtractSql,
-    "q_map_lookup"   -> mapLookupSql,
-    "q_date_format"  -> dateFormatSql,
-    "q_pivot_types"  -> pivotTypesSql,
-    "q_rollup"       -> rollupAggSql,
-    "q_cube"         -> cubeAggSql,
-    "q_union_all"    -> unionAllSql,
-    "q_latest_hours" -> latestHoursSql,
-    "q_cumprod"      -> cumprodSql,
-    "q_approx_distinct" -> approxDistinctSql,
-    "q_unpivot"      -> unpivotMeasuresSql,
+  val entries: Seq[Entry] = Seq(
+    Entry("q_json_extract", jsonExtract, jsonExtractSql),
+    Entry("q_map_lookup", mapLookup, mapLookupSql),
+    Entry("q_date_format", dateFormat, dateFormatSql),
+    Entry("q_pivot_types", pivotTypes, pivotTypesSql),
+    Entry("q_rollup", rollupAgg, rollupAggSql),
+    Entry("q_cube", cubeAgg, cubeAggSql),
+    Entry("q_union_all", unionAll, unionAllSql),
+    Entry("q_latest_hours", latestHours, latestHoursSql),
+    Entry("q_cumprod", cumprod, cumprodSql),
+    Entry("q_approx_distinct", approxDistinct, approxDistinctSql),
+    Entry("q_unpivot", unpivotMeasures, unpivotMeasuresSql),
   )
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Third coverage batch: the SQL front door (Q1 — `spark.sql` over temp
@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
   * extraction, and array statistics. All oracle-checked.
   */
 object Relational3 {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Correlated scalar subquery through spark.sql — Catalyst rewrites the
     * per-row subquery into an aggregate + join (decorrelation). The mean is
     * authored decimal-exact IN THE SQL TEXT (AVG(double) is evaluation-order
@@ -206,27 +204,15 @@ object Relational3 {
       |  CAST(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS bucket_value
       |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_correlated_subquery" -> correlatedSubquerySpark,
-    "q_sql_correlated"      -> correlatedSubquery,
-    "q_exists_inequality"   -> existsInequality,
-    "q_grouping_sets"       -> groupingSets,
-    "q_window_ranks"        -> windowRanks,
-    "q_first_last"          -> firstLastOrder,
-    "q_regexp_extract"      -> regexpExtract,
-    "q_array_stats"         -> arrayStats,
-    "q_value_histogram"     -> valueHistogram,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_correlated_subquery" -> correlatedSubquerySql,
-    "q_sql_correlated"      -> sqlCorrelatedSql,
-    "q_exists_inequality"   -> existsInequalitySql,
-    "q_grouping_sets"       -> groupingSetsSql,
-    "q_window_ranks"        -> windowRanksSql,
-    "q_first_last"          -> firstLastOrderSql,
-    "q_regexp_extract"      -> regexpExtractSql,
-    "q_array_stats"         -> arrayStatsSql,
-    "q_value_histogram"     -> valueHistogramSql,
+  val entries: Seq[Entry] = Seq(
+    Entry("q_correlated_subquery", correlatedSubquerySpark, correlatedSubquerySql),
+    Entry("q_sql_correlated", correlatedSubquery, sqlCorrelatedSql),
+    Entry("q_exists_inequality", existsInequality, existsInequalitySql),
+    Entry("q_grouping_sets", groupingSets, groupingSetsSql),
+    Entry("q_window_ranks", windowRanks, windowRanksSql),
+    Entry("q_first_last", firstLastOrder, firstLastOrderSql),
+    Entry("q_regexp_extract", regexpExtract, regexpExtractSql),
+    Entry("q_array_stats", arrayStats, arrayStatsSql),
+    Entry("q_value_histogram", valueHistogram, valueHistogramSql),
   )
 }

@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions._
   * Misra–Gries sketch in [[graft.functions.MisraGriesAgg]]).
   */
 object Relational4 {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Deterministic doc graph shared with `q_pagerank`'s chain, thickened
     * with skip links so triangles exist: within each 50-doc block,
     * undirected edges u—u+1 and u—u+2 (canonical u < v). Every interior
@@ -351,19 +349,11 @@ object Relational4 {
        |ORDER BY doc_id""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_triangles"         -> triangles,
-    "q_lpa_communities"   -> lpaCommunities,
-    "q_adamic_adar"       -> adamicAdar,
-    "text_heavy_hitters"  -> heavyHitters,
-    "q_hits"              -> hits,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_triangles"         -> trianglesSql,
-    "q_lpa_communities"   -> lpaCommunitiesSql,
-    "q_adamic_adar"       -> adamicAdarSql,
-    "text_heavy_hitters"  -> heavyHittersSql,
-    "q_hits"              -> hitsSql,
+  val entries: Seq[Entry] = Seq(
+    Entry("q_triangles", triangles, trianglesSql),
+    Entry("q_lpa_communities", lpaCommunities, lpaCommunitiesSql),
+    Entry("q_adamic_adar", adamicAdar, adamicAdarSql),
+    Entry("text_heavy_hitters", heavyHitters, heavyHittersSql),
+    Entry("q_hits", hits, hitsSql),
   )
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,8 +13,6 @@ import org.apache.spark.sql.functions._
   * single-task shape VERDICT r6 flagged).
   */
 object Relational5 {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Equal-width bucket expression over the OBSERVED [min, max] of
     * `raw`'s `value` column — the count-bounded grid
     * [[DistributedRolling]] uses. The driver offset tables the two-phase
@@ -1269,49 +1267,26 @@ object Relational5 {
       |  FROM adc)
       |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_mode_argmax"     -> modeArgmax,
-    "q_weighted_median" -> weightedMedian,
-    "q_concurrency"     -> concurrency,
-    "q_ks_test"         -> ksTest,
-    "q_chi2"            -> chi2,
-    "q_runtime_filter"  -> runtimeFilter,
-    "q_autocorr"        -> autocorr,
-    "q_decayed_agg"     -> decayedAgg,
-    "q_linreg_trend"    -> linregTrend,
-    "q_kmv_setops"      -> kmvSetOps,
-    "q_ab_ttest"        -> abTtest,
-    "q_mannwhitney"     -> mannWhitney,
-    "q_gini"            -> gini,
-    "q_cusum"           -> cusum,
-    "q_rolling_corr"    -> rollingCorr,
-    "q_skew_report"     -> skewReport,
-    "q_benfords"        -> benfords,
-    "sim_pq_topk"       -> pqTopK,
-    "sim_ivfpq_topk"    -> ivfPqTopK,
-    "text_bigram_pmi"   -> bigramPmi,
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_mode_argmax"     -> modeArgmaxSql,
-    "q_weighted_median" -> weightedMedianSql,
-    "q_concurrency"     -> concurrencySql,
-    "q_ks_test"         -> ksTestSql,
-    "q_chi2"            -> chi2Sql,
-    "q_runtime_filter"  -> runtimeFilterSql,
-    "q_autocorr"        -> autocorrSql,
-    "q_decayed_agg"     -> decayedAggSql,
-    "q_linreg_trend"    -> linregTrendSql,
-    "q_kmv_setops"      -> kmvSetOpsSql,
-    "q_ab_ttest"        -> abTtestSql,
-    "q_mannwhitney"     -> mannWhitneySql,
-    "q_gini"            -> giniSql,
-    "q_cusum"           -> cusumSql,
-    "q_rolling_corr"    -> rollingCorrSql,
-    "q_skew_report"     -> skewReportSql,
-    "q_benfords"        -> benfordsSql,
-    "sim_pq_topk"       -> pqTopKSql,
-    "sim_ivfpq_topk"    -> ivfPqTopKSql,
-    "text_bigram_pmi"   -> bigramPmiSql,
+  val entries: Seq[Entry] = Seq(
+    Entry("q_mode_argmax", modeArgmax, modeArgmaxSql),
+    Entry("q_weighted_median", weightedMedian, weightedMedianSql),
+    Entry("q_concurrency", concurrency, concurrencySql),
+    Entry("q_ks_test", ksTest, ksTestSql),
+    Entry("q_chi2", chi2, chi2Sql),
+    Entry("q_runtime_filter", runtimeFilter, runtimeFilterSql),
+    Entry("q_autocorr", autocorr, autocorrSql),
+    Entry("q_decayed_agg", decayedAgg, decayedAggSql),
+    Entry("q_linreg_trend", linregTrend, linregTrendSql),
+    Entry("q_kmv_setops", kmvSetOps, kmvSetOpsSql),
+    Entry("q_ab_ttest", abTtest, abTtestSql),
+    Entry("q_mannwhitney", mannWhitney, mannWhitneySql),
+    Entry("q_gini", gini, giniSql),
+    Entry("q_cusum", cusum, cusumSql),
+    Entry("q_rolling_corr", rollingCorr, rollingCorrSql),
+    Entry("q_skew_report", skewReport, skewReportSql),
+    Entry("q_benfords", benfords, benfordsSql),
+    Entry("sim_pq_topk", pqTopK, pqTopKSql),
+    Entry("sim_ivfpq_topk", ivfPqTopK, ivfPqTopKSql),
+    Entry("text_bigram_pmi", bigramPmi, bigramPmiSql),
   )
 }

@@ -13,7 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Relational6 {
   private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
-  type Q = (SparkSession, String) => DataFrame
 
   /** k-hop reach profile of the doc graph from the block-head seed set —
     * multi-source BFS ([[graft.analytics.Bfs]]) bounded at 8 hops, then a
@@ -1386,45 +1385,25 @@ object Relational6 {
        |ORDER BY ci.event_type""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_bfs_reach" -> bfsReach,
-    "q_kcore" -> kcoreHindex,
-    "q_assoc_rules" -> assocRules,
-    "q_k_anonymity" -> kAnonymity,
-    "q_dp_counts" -> dpCounts,
-    "q_mutual_info" -> mutualInfo,
-    "q_corr_matrix" -> corrMatrix,
-    "q_weighted_sample" -> weightedSample,
-    "q_fk_orphans" -> fkOrphans,
-    "text_heaps_law" -> heapsLaw,
-    "text_feature_hash" -> featureHash,
-    "text_tfidf" -> tfidfKeywords,
-    "q_psi_drift" -> psiDrift,
-    "text_bpe_merges" -> bpeMerges,
-    "text_bpe_encode" -> bpeEncode,
-    "q_zorder_layout" -> zorderLayout,
-    "q_expectations" -> expectations,
-    "q_bootstrap_ci" -> bootstrapCi,
-    "pipeline_passage_graph" -> tokenGraph)
-
-  val oracleSql: Map[String, String] = Map(
-    "q_bfs_reach" -> bfsReachSql,
-    "q_kcore" -> kcoreHindexSql,
-    "q_assoc_rules" -> assocRulesSql,
-    "q_k_anonymity" -> kAnonymitySql,
-    "q_dp_counts" -> dpCountsSql,
-    "q_mutual_info" -> mutualInfoSql,
-    "q_corr_matrix" -> corrMatrixSql,
-    "q_weighted_sample" -> weightedSampleSql,
-    "q_fk_orphans" -> fkOrphansSql,
-    "text_heaps_law" -> heapsLawSql,
-    "text_feature_hash" -> featureHashSql,
-    "text_tfidf" -> tfidfKeywordsSql,
-    "q_psi_drift" -> psiDriftSql,
-    "text_bpe_merges" -> bpeMergesSql,
-    "text_bpe_encode" -> bpeEncodeSql,
-    "q_zorder_layout" -> zorderLayoutSql,
-    "q_expectations" -> expectationsSql,
-    "q_bootstrap_ci" -> bootstrapCiSql,
-    "pipeline_passage_graph" -> tokenGraphSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q_bfs_reach", bfsReach, bfsReachSql),
+    Entry("q_kcore", kcoreHindex, kcoreHindexSql),
+    Entry("q_assoc_rules", assocRules, assocRulesSql),
+    Entry("q_k_anonymity", kAnonymity, kAnonymitySql),
+    Entry("q_dp_counts", dpCounts, dpCountsSql),
+    Entry("q_mutual_info", mutualInfo, mutualInfoSql),
+    Entry("q_corr_matrix", corrMatrix, corrMatrixSql),
+    Entry("q_weighted_sample", weightedSample, weightedSampleSql),
+    Entry("q_fk_orphans", fkOrphans, fkOrphansSql),
+    Entry("text_heaps_law", heapsLaw, heapsLawSql),
+    Entry("text_feature_hash", featureHash, featureHashSql),
+    Entry("text_tfidf", tfidfKeywords, tfidfKeywordsSql),
+    Entry("q_psi_drift", psiDrift, psiDriftSql),
+    Entry("text_bpe_merges", bpeMerges, bpeMergesSql),
+    Entry("text_bpe_encode", bpeEncode, bpeEncodeSql),
+    Entry("q_zorder_layout", zorderLayout, zorderLayoutSql),
+    Entry("q_expectations", expectations, expectationsSql),
+    Entry("q_bootstrap_ci", bootstrapCi, bootstrapCiSql),
+    Entry("pipeline_passage_graph", tokenGraph, tokenGraphSql),
+  )
 }

@@ -17,8 +17,6 @@ import org.apache.spark.sql.functions._
   * fingerprint — a detection guarantee MinHash cannot give.
   */
 object Relational7 {
-  type Q = (SparkSession, String) => DataFrame
-
   /** k-gram width (tokens) and winnow window (k-grams). A match of
     * ≥ WinnowW + WinnowK − 1 = 6 consecutive tokens is guaranteed to
     * share a fingerprint. */
@@ -1587,7 +1585,7 @@ object Relational7 {
     * The join is block-bucketed (never all-pairs); the per-anchor rank
     * partitions on the anchor. Anchors subsample doc_id ≡ 0 (mod 5) to
     * bound the output like the other pair reports. */
-  private val hardNegatives: Q = (s, dir) => {
+  private[queries] val hardNegatives: Q = (s, dir) => {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         md5(col("text")).as("h"),
@@ -2610,39 +2608,39 @@ object Relational7 {
       |  doc_id, lang, logw
       |FROM keyed ORDER BY gk, doc_id LIMIT 40""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "text_dsir_sample"   -> dsirSample,
-    "text_winnowing"     -> winnowing,
-    "text_winnow_pairs"  -> winnowPairs,
-    "text_phrase_search" -> phraseSearch,
-    "sim_mmr_topk"       -> mmrTopK,
-    "q_permutation_fdr"  -> permutationFdr,
-    "q_permutation_fdr_sampled" -> permutationFdrSampled,
-    "q_quantile_norm"    -> quantileNorm,
-    "text_winnow_spans"  -> winnowSpans,
-    "q_snapshot_diff"    -> snapshotDiff,
-    "q_feature_gain"     -> featureGain,
-    "text_lang_confusion" -> langConfusion,
-    "q_ppr"              -> ppr,
-    "text_compress_ratio" -> compressRatio,
-    "q_mv_maintain"      -> mvMaintain,
-    "q_attribution"      -> attribution,
-    "q_km_survival"      -> kmSurvival,
-    "q_logrank"          -> logrank,
-    "q_rfm"              -> rfm,
-    "q_did"              -> did,
-    "text_zipf_fit"      -> zipfFit,
-    "q_assortativity"    -> assortativity,
-    "text_burstiness"    -> burstiness,
-    "q_rmst"             -> rmst,
-    "sim_hard_negatives" -> hardNegatives,
-    "sim_hard_negatives_bounded" -> hardNegativesBounded,
-    "text_mlm_plan"      -> mlmPlan,
-    "q_clustering_coef"  -> clusteringCoef,
-    "q_ipw_ate"          -> ipw,
-    "q_matching_att"     -> matchingAtt,
-    "q_ipw_ess"          -> ipwEss,
-    "q_aipw_ate"         -> aipw,
+  val entries: Seq[Entry] = Seq(
+    Entry("text_dsir_sample", dsirSample, dsirSampleSql),
+    Entry("text_winnowing", winnowing, winnowingSql),
+    Entry("text_winnow_pairs", winnowPairs, winnowPairsSql),
+    Entry("text_phrase_search", phraseSearch, phraseSearchSql),
+    Entry("sim_mmr_topk", mmrTopK, mmrTopKSql),
+    Entry("q_permutation_fdr", permutationFdr, permutationFdrSql),
+    Entry("q_permutation_fdr_sampled", permutationFdrSampled, permutationFdrSampledSql),
+    Entry("q_quantile_norm", quantileNorm, quantileNormSql),
+    Entry("text_winnow_spans", winnowSpans, winnowSpansSql),
+    Entry("q_snapshot_diff", snapshotDiff, snapshotDiffSql),
+    Entry("q_feature_gain", featureGain, featureGainSql),
+    Entry("text_lang_confusion", langConfusion, langConfusionSql),
+    Entry("q_ppr", ppr, pprSql),
+    Entry("text_compress_ratio", compressRatio),
+    Entry("q_mv_maintain", mvMaintain, mvMaintainSql),
+    Entry("q_attribution", attribution, attributionSql),
+    Entry("q_km_survival", kmSurvival, kmSurvivalSql),
+    Entry("q_logrank", logrank, logrankSql),
+    Entry("q_rfm", rfm, rfmSql),
+    Entry("q_did", did, didSql),
+    Entry("text_zipf_fit", zipfFit, zipfFitSql),
+    Entry("q_assortativity", assortativity, assortativitySql),
+    Entry("text_burstiness", burstiness, burstinessSql),
+    Entry("q_rmst", rmst, rmstSql),
+    Entry("sim_hard_negatives", hardNegatives, hardNegativesSql),
+    Entry("sim_hard_negatives_bounded", hardNegativesBounded, hardNegativesBoundedSql),
+    Entry("text_mlm_plan", mlmPlan, mlmPlanSql),
+    Entry("q_clustering_coef", clusteringCoef, clusteringCoefSql),
+    Entry("q_ipw_ate", ipw, ipwSql),
+    Entry("q_matching_att", matchingAtt, matchingAttSql),
+    Entry("q_ipw_ess", ipwEss, ipwEssSql),
+    Entry("q_aipw_ate", aipw, aipwSql),
   )
 
   private def permutationFdrSqlImpl(sampleDen: Long) =
@@ -2720,38 +2718,4 @@ object Relational7 {
 
   private val permutationFdrSql = permutationFdrSqlImpl(1L)
   private val permutationFdrSampledSql = permutationFdrSqlImpl(PfsDen)
-
-  val oracleSql: Map[String, String] = Map(
-    "text_winnowing"     -> winnowingSql,
-    "text_winnow_pairs"  -> winnowPairsSql,
-    "text_phrase_search" -> phraseSearchSql,
-    "sim_mmr_topk"       -> mmrTopKSql,
-    "q_permutation_fdr"  -> permutationFdrSql,
-    "q_permutation_fdr_sampled" -> permutationFdrSampledSql,
-    "q_quantile_norm"    -> quantileNormSql,
-    "text_winnow_spans"  -> winnowSpansSql,
-    "q_snapshot_diff"    -> snapshotDiffSql,
-    "q_feature_gain"     -> featureGainSql,
-    "text_lang_confusion" -> langConfusionSql,
-    "q_ppr"              -> pprSql,
-    "q_mv_maintain"      -> mvMaintainSql,
-    "q_attribution"      -> attributionSql,
-    "q_km_survival"      -> kmSurvivalSql,
-    "q_logrank"          -> logrankSql,
-    "q_rfm"              -> rfmSql,
-    "q_did"              -> didSql,
-    "text_zipf_fit"      -> zipfFitSql,
-    "q_assortativity"    -> assortativitySql,
-    "text_burstiness"    -> burstinessSql,
-    "q_rmst"             -> rmstSql,
-    "sim_hard_negatives" -> hardNegativesSql,
-    "sim_hard_negatives_bounded" -> hardNegativesBoundedSql,
-    "text_mlm_plan"      -> mlmPlanSql,
-    "text_dsir_sample"   -> dsirSampleSql,
-    "q_clustering_coef"  -> clusteringCoefSql,
-    "q_ipw_ate"          -> ipwSql,
-    "q_matching_att"     -> matchingAttSql,
-    "q_ipw_ess"          -> ipwEssSql,
-    "q_aipw_ate"         -> aipwSql,
-  )
 }

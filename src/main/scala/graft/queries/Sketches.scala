@@ -32,8 +32,6 @@ import org.apache.spark.sql.functions._
   * included, is one collect plus a driver replay.
   */
 object Sketches {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Sketch capacity: ≤ K items survive; rank error ≤ ~L·n/(2·K) with
     * L = ceil(log2(n/K)) halving levels. */
   val K = 256
@@ -762,21 +760,13 @@ object Sketches {
        |ORDER BY event_type""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "q_hll_rollup" -> hllRollup,
-    "q_kll_quantile" -> kllQuantile,
-    "q_kll_grouped" -> kllGrouped,
-    "text_cms_counts" -> cmsCounts,
-    "q_bloom_membership" -> bloomMembership,
-    "q_cms_join_size" -> cmsJoinSize,
-    "q_hll_distinct" -> hllDistinct)
-
-  val oracleSql: Map[String, String] = Map(
-    "q_hll_rollup" -> hllRollupSql,
-    "q_kll_quantile" -> kllQuantileSql,
-    "q_kll_grouped" -> kllGroupedSql,
-    "text_cms_counts" -> cmsCountsSql,
-    "q_bloom_membership" -> bloomMembershipSql,
-    "q_cms_join_size" -> cmsJoinSizeSql,
-    "q_hll_distinct" -> hllDistinctSql)
+  val entries: Seq[Entry] = Seq(
+    Entry("q_hll_rollup", hllRollup, hllRollupSql),
+    Entry("q_kll_quantile", kllQuantile, kllQuantileSql),
+    Entry("q_kll_grouped", kllGrouped, kllGroupedSql),
+    Entry("text_cms_counts", cmsCounts, cmsCountsSql),
+    Entry("q_bloom_membership", bloomMembership, bloomMembershipSql),
+    Entry("q_cms_join_size", cmsJoinSize, cmsJoinSizeSql),
+    Entry("q_hll_distinct", hllDistinct, hllDistinctSql),
+  )
 }

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sql.Transpiler
 
 /** Registry entries that exercise [[graft.sql.Transpiler]] END TO END on
@@ -22,8 +21,6 @@ import graft.sql.Transpiler
   * partial aggregation) like every other registry entry.
   */
 object Transpile {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Hourly event rollup — DATE_TRUNC, timestamp-literal minus interval,
     * COUNT(DISTINCT), scientific-notation literal, ordinal GROUP BY. */
   private val hourlyPg: String =
@@ -185,30 +182,23 @@ object Transpile {
       table = "orders", dialect = "spark", column = "o_orderkey"))
   }
 
-  def queries: Map[String, Q] = Map(
-    "q_transpile_hourly"      -> runSparkEmission(hourlyPg, Seq("events")),
-    "q_transpile_pricing"     -> runSparkEmission(pricingPg, Seq("lineitem")),
-    "q_transpile_quoting"     -> runSparkEmission(quotingPg, Seq("events")),
-    "q_transpile_window"      -> runSparkEmission(windowPg, Seq("events")),
-    "q_transpile_frame"       -> runSparkEmission(framePg, Seq("events")),
-    "q_transpile_setprec"     -> runSparkEmission(setPrecPg, Seq("events", "documents")),
-    "q_transpile_setop"       -> runSparkEmission(setopPg, Seq("events", "documents")),
-    "q_transpile_subquery"    -> runSparkEmission(subqueryPg, Seq("orders", "lineitem")),
-    "q_transpile_cte"         -> runSparkEmission(ctePg, Seq("events")),
-    "q_transpile_block_range" -> blockRange)
+  /** A canonical query's entry: Spark runs the Spark emission; the oracle
+    * IS the transpiler's DuckDB emission — the driver runs that text in
+    * DuckDB, closing the loop on the duckdb generator. */
+  private def emitted(name: String, pg: String, tables: String*): Entry =
+    Entry(name, runSparkEmission(pg, tables), Transpiler.transpile(pg, "postgres", "duckdb"))
 
-  /** The oracle IS the transpiler's DuckDB emission — the driver runs this
-    * text in DuckDB, closing the loop on the duckdb generator. */
-  def oracleSql: Map[String, String] = Map(
-    "q_transpile_hourly"      -> Transpiler.transpile(hourlyPg, "postgres", "duckdb"),
-    "q_transpile_pricing"     -> Transpiler.transpile(pricingPg, "postgres", "duckdb"),
-    "q_transpile_quoting"     -> Transpiler.transpile(quotingPg, "postgres", "duckdb"),
-    "q_transpile_window"      -> Transpiler.transpile(windowPg, "postgres", "duckdb"),
-    "q_transpile_frame"       -> Transpiler.transpile(framePg, "postgres", "duckdb"),
-    "q_transpile_setprec"     -> Transpiler.transpile(setPrecPg, "postgres", "duckdb"),
-    "q_transpile_setop"       -> Transpiler.transpile(setopPg, "postgres", "duckdb"),
-    "q_transpile_subquery"    -> Transpiler.transpile(subqueryPg, "postgres", "duckdb"),
-    "q_transpile_cte"         -> Transpiler.transpile(ctePg, "postgres", "duckdb"),
-    "q_transpile_block_range" -> Transpiler.buildBlockRangeQuery(100, 600,
-      table = "orders", dialect = "duckdb", column = "o_orderkey"))
+  val entries: Seq[Entry] = Seq(
+    emitted("q_transpile_hourly", hourlyPg, "events"),
+    emitted("q_transpile_pricing", pricingPg, "lineitem"),
+    emitted("q_transpile_quoting", quotingPg, "events"),
+    emitted("q_transpile_window", windowPg, "events"),
+    emitted("q_transpile_frame", framePg, "events"),
+    emitted("q_transpile_setprec", setPrecPg, "events", "documents"),
+    emitted("q_transpile_setop", setopPg, "events", "documents"),
+    emitted("q_transpile_subquery", subqueryPg, "orders", "lineitem"),
+    emitted("q_transpile_cte", ctePg, "events"),
+    Entry("q_transpile_block_range", blockRange, Transpiler.buildBlockRangeQuery(100, 600,
+      table = "orders", dialect = "duckdb", column = "o_orderkey")),
+  )
 }

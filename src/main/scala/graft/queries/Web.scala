@@ -25,8 +25,6 @@ import org.apache.spark.sql.functions._
   * map-side like any low-cardinality groupBy.
   */
 object Web {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Deterministic synthetic URL, mirrored verbatim in [[urlCteSql]]. */
   private def withUrl(docs: DataFrame): DataFrame =
     docs.withColumn("url", concat(
@@ -350,17 +348,11 @@ object Web {
        |GROUP BY 1, 2 ORDER BY 1""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "text_domain_stats" -> domainStats,
-    "text_blocklist_filter" -> blocklistFilter,
-    "text_domain_curation" -> domainCuration,
-    "web_canonical_dedup" -> canonicalDedup,
-    "web_prefix_policy" -> prefixPolicy)
-
-  val oracleSql: Map[String, String] = Map(
-    "text_domain_stats" -> domainStatsSql,
-    "text_blocklist_filter" -> blocklistFilterSql,
-    "text_domain_curation" -> domainCurationSql,
-    "web_canonical_dedup" -> canonicalDedupSql,
-    "web_prefix_policy" -> prefixPolicySql)
+  val entries: Seq[Entry] = Seq(
+    Entry("text_domain_stats", domainStats, domainStatsSql),
+    Entry("text_blocklist_filter", blocklistFilter, blocklistFilterSql),
+    Entry("text_domain_curation", domainCuration, domainCurationSql),
+    Entry("web_canonical_dedup", canonicalDedup, canonicalDedupSql),
+    Entry("web_prefix_policy", prefixPolicy, prefixPolicySql),
+  )
 }

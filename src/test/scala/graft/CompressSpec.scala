@@ -1,6 +1,5 @@
 package graft
 
-import graft.queries.Relational7
 import org.apache.spark.sql.functions._
 import graft.functions.{Compress, CompressFunctions}
 
@@ -43,7 +42,7 @@ class CompressSpec extends SparkSpec {
   }
 
   test("registry entry yields one bounded ratio per non-empty doc") {
-    val out = Relational7.queries("text_compress_ratio")(
+    val out = SparkEntry.queries("text_compress_ratio")(
       spark, "/root/testdata/sf0.001")
     val rows = out.collect()
     assert(rows.nonEmpty)

@@ -406,7 +406,7 @@ class DedupSpec extends SparkSpec {
       .withColumn("n_chars", length(col("text")).cast("long"))
     val dir = java.nio.file.Files.createTempDirectory("graft_fz").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def pairs(q: String) = Extensions.queries(q)(spark, dir)
+    def pairs(q: String) = SparkEntry.queries(q)(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val full = pairs("dedup_fuzzy")
     val bounded = pairs("dedup_fuzzy_bounded")
@@ -441,7 +441,7 @@ class DedupSpec extends SparkSpec {
       .withColumn("n_chars", length(col("text")).cast("long"))
     val dir = java.nio.file.Files.createTempDirectory("graft_sp").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Extensions.queries("dedup_spans")(spark, dir)
+    val out = SparkEntry.queries("dedup_spans")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.toSeq == Seq(
       (1L, 6L, 15L, 10L),   // passage at tokens 6..15 of A
@@ -464,7 +464,7 @@ class DedupSpec extends SparkSpec {
       .withColumn("n_chars", length(col("text")).cast("long"))
     val dir = java.nio.file.Files.createTempDirectory("graft_nv").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Extensions.queries("text_novelty")(spark, dir)
+    val out = SparkEntry.queries("text_novelty")(spark, dir)
       .collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(out == Seq(
@@ -499,7 +499,7 @@ class DedupSpec extends SparkSpec {
       .withColumn("n_chars", length(col("text")).cast("long"))
     val dir = java.nio.file.Files.createTempDirectory("graft_cu").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Extensions.queries("text_curation")(spark, dir)
+    val out = SparkEntry.queries("text_curation")(spark, dir)
       .select("doc_id", "verdict")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(out == Seq(
@@ -519,7 +519,7 @@ class DedupSpec extends SparkSpec {
       .withColumn("n_chars", length(col("text")).cast("long"))
     val dir = java.nio.file.Files.createTempDirectory("graft_ov").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Extensions.queries("text_overlap_matrix")(spark, dir).collect()
+    val out = SparkEntry.queries("text_overlap_matrix")(spark, dir).collect()
     // A and B share exactly the 3 windows inside the passage; C overlaps
     // nothing and must be absent entirely (inner join, no zero rows)
     assert(out.length == 1)
@@ -555,7 +555,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dedup_spans rows are maximal: disjoint, non-adjacent per doc") {
-    val spans = Extensions.queries("dedup_spans")(spark, "/root/testdata/sf0.01")
+    val spans = SparkEntry.queries("dedup_spans")(spark, "/root/testdata/sf0.01")
       .collect()
     assert(spans.nonEmpty)
     spans.groupBy(_.getLong(0)).foreach { case (_, rows) =>
@@ -817,7 +817,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("hybrid RRF: scores reconstruct from ranks, order holds, no 1-part window") {
-    val df = graft.queries.Extensions.queries("sim_hybrid_rrf")(spark, dir)
+    val df = SparkEntry.queries("sim_hybrid_rrf")(spark, dir)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange SinglePartition"), plan)
     val rows = df.collect().map(r => (r.getLong(0),
@@ -858,8 +858,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("quality kappa: reconstructs from the 2x2 table, bounded, invariant") {
-    val r = graft.queries.Extensions
-      .queries("text_quality_kappa")(spark, "/root/testdata/sf0.001")
+    val r = SparkEntry.queries("text_quality_kappa")(spark, "/root/testdata/sf0.001")
     val row = r.collect()(0)
     val Seq(n11, n10, n01, n00) = (0 to 3).map(row.getLong)
     val n = (n11 + n10 + n01 + n00).toDouble

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.MisraGriesFunctions
-import graft.queries.{Relational4, Tables}
+import graft.queries.Tables
 
 /** Round-7 additions: degree-ordered triangle counting and the mergeable
   * Misra–Gries heavy-hitters sketch. */
@@ -14,7 +14,7 @@ class TriangleSpec extends SparkSpec {
     // are exactly (u, u+1, u+2) for block positions 0..47. A node at block
     // position p belongs to the triangles starting at p, p-1, p-2 (clamped
     // to [0, 47]) — 3 for interior nodes, fewer at block edges.
-    val rows = Relational4.queries("q_triangles")(spark, dir)
+    val rows = SparkEntry.queries("q_triangles")(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val nDocs = Tables.documents(spark, dir).count()
     assert(nDocs % 50 === 0, "closed form below assumes complete 50-doc blocks")
@@ -44,7 +44,7 @@ class TriangleSpec extends SparkSpec {
         col("e3.u") === col("e1.u") && col("e3.v") === col("e2.v"),
         "left_semi")
       .count()
-    val engineTotal = Relational4.queries("q_triangles")(spark, dir)
+    val engineTotal = SparkEntry.queries("q_triangles")(spark, dir)
       .agg(sum("n_triangles")).collect()(0).getLong(0)
     assert(engineTotal === 3L * tri) // each triangle counted at 3 nodes
     e.unpersist()
@@ -84,7 +84,7 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("exact heavy-hitters query agrees with a driver-side recount") {
-    val hh = Relational4.queries("text_heavy_hitters")(spark, dir).collect()
+    val hh = SparkEntry.queries("text_heavy_hitters")(spark, dir).collect()
     val exact = tokenStream.groupBy("token").agg(count(lit(1)).as("tf"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val n = exact.values.sum
@@ -371,7 +371,7 @@ class HllSketchSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val p = 12
     val dir = "/root/testdata/sf0.001"
-    val rollup = graft.queries.Sketches.queries("q_hll_rollup")(spark, dir)
+    val rollup = SparkEntry.queries("q_hll_rollup")(spark, dir)
       .collect()
       .map(r => r.getString(0) -> ((r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getLong(5)))).toMap

@@ -39,7 +39,7 @@ class HardNegativesSpec extends SparkSpec {
       .filter(col("rk") <= 4)
       .select(col("anchor"), col("rk").cast("long").as("rk"),
         col("neg"), col("dn"))
-    val got = Relational7.queries("sim_hard_negatives_bounded")(spark, dir)
+    val got = SparkEntry.queries("sim_hard_negatives_bounded")(spark, dir)
     assert(got.count() > 0)
     assert(got.exceptAll(brute).isEmpty && brute.exceptAll(got).isEmpty)
   }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.{Extensions, Probes, Relational6, Relational7}
 
 /** The restricted-twin probe entries must be EXACTLY the md5-selected
   * subset of their full query's rows (hard negatives, LSH pairs) — the
@@ -16,25 +15,25 @@ class ProbesSpec extends SparkSpec {
     substring(md5(c.cast("string")), 1, 1)
 
   test("hard-negatives probe rows are exactly the md5-selected anchors' rows") {
-    val full = Relational7.queries("sim_hard_negatives")(spark, dir)
+    val full = SparkEntry.queries("sim_hard_negatives")(spark, dir)
       .filter(md5Hex1(col("anchor")) === "0")
-    val probe = Probes.queries("sim_hard_negatives_probe")(spark, dir)
+    val probe = SparkEntry.queries("sim_hard_negatives_probe")(spark, dir)
     assert(probe.exceptAll(full).isEmpty && full.exceptAll(probe).isEmpty)
   }
 
   test("LSH-pairs probe rows are exactly the md5-selected left endpoints' rows") {
-    val full = Extensions.queries("emb_lsh_pairs")(spark, dir)
+    val full = SparkEntry.queries("emb_lsh_pairs")(spark, dir)
       .filter(md5Hex1(col("v1")) === "0")
-    val probe = Probes.queries("emb_lsh_pairs_probe")(spark, dir)
+    val probe = SparkEntry.queries("emb_lsh_pairs_probe")(spark, dir)
     assert(probe.exceptAll(full).isEmpty && full.exceptAll(probe).isEmpty)
   }
 
   test("passage-graph probe keeps the full entry's schema and is deterministic") {
-    val full = Relational6.queries("pipeline_passage_graph")(spark, dir)
-    val probe = Probes.queries("pipeline_passage_graph_probe")(spark, dir)
+    val full = SparkEntry.queries("pipeline_passage_graph")(spark, dir)
+    val probe = SparkEntry.queries("pipeline_passage_graph_probe")(spark, dir)
     assert(probe.schema == full.schema)
     val a = probe.collect().toSeq
-    val b = Probes.queries("pipeline_passage_graph_probe")(spark, dir)
+    val b = SparkEntry.queries("pipeline_passage_graph_probe")(spark, dir)
       .collect().toSeq
     assert(a == b && a.nonEmpty)
   }

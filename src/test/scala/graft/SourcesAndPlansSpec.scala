@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.etl.{Fixtures, Ingest, TokenTransferDecoder}
-import graft.queries.{Relational, Tables}
+import graft.queries.Tables
 
 /** Source/sink round-trips beyond parquet (S2/S3/S5): the envelope JSON
   * wire format through json-lines files, and csv for flat exports. */
@@ -345,7 +345,7 @@ class PlanSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =
-    Relational.queries(name)(spark, dir).queryExecution.executedPlan.toString
+    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
   test("scan-prune pushes the shipdate filter and prunes columns") {
     val p = plan("q_scan_prune")
@@ -365,7 +365,7 @@ class PlanSpec extends SparkSpec {
     assert("HashAggregate".r.findAllIn(p).size >= 2, p)
     // codegen spans only materialize in the final adaptive plan — execute
     // first, then look for the `*(n)` whole-stage markers
-    val df = Relational.queries("q_agg_pricing")(spark, dir)
+    val df = SparkEntry.queries("q_agg_pricing")(spark, dir)
     df.collect()
     val finalPlan = df.queryExecution.executedPlan.toString
     assert(finalPlan.contains("isFinalPlan=true"), finalPlan)
@@ -397,7 +397,7 @@ class PlanSpec extends SparkSpec {
     // ntile/percent_rank over a total order must NOT compile to a
     // no-partition Window (Exchange SinglePartition = every row through one
     // task); the histogram-rank form keeps the window partitioned by bucket
-    val df = graft.queries.Relational3.queries("q_window_ranks")(spark, dir)
+    val df = SparkEntry.queries("q_window_ranks")(spark, dir)
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange SinglePartition"), p)
     assert(p.contains("Window"), p)
@@ -421,7 +421,7 @@ class PlanSpec extends SparkSpec {
     Seq("q_sessionize", "q_stratified_sample", "q_pack_sequences",
         "q_asof_join", "q_quality_ntile", "q_token_budget",
         "q_scd2", "q_time_window_sum").foreach { q =>
-      val plan = graft.queries.Behavioral.queries(q)(spark, dir)
+      val plan = SparkEntry.queries(q)(spark, dir)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange SinglePartition"), s"$q:\n$plan")
     }
@@ -429,15 +429,15 @@ class PlanSpec extends SparkSpec {
 
   test("per-group stats frames broadcast back to the fact scan") {
     Seq("q_anomaly_zscore", "q_winsorize").foreach { q =>
-      val p = graft.queries.Behavioral.queries(q)(spark, dir)
+      val p = SparkEntry.queries(q)(spark, dir)
         .queryExecution.executedPlan.toString
       assert(p.contains("BroadcastHashJoin"), s"$q:\n$p")
     }
   }
 
   test("blocklist filter: broadcast anti-join, blocked domains gone, counts reconcile") {
-    val stats = graft.queries.Web.queries("text_domain_stats")(spark, dir)
-    val kept = graft.queries.Web.queries("text_blocklist_filter")(spark, dir)
+    val stats = SparkEntry.queries("text_domain_stats")(spark, dir)
+    val kept = SparkEntry.queries("text_blocklist_filter")(spark, dir)
     val p = kept.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"), p)
     val statsMap = stats.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -453,14 +453,14 @@ class PlanSpec extends SparkSpec {
     // the URL synthesizes from (source, lang, doc_id) — a scan that drags
     // the document BODY along for a per-domain count is reading ~100× the
     // bytes it needs at corpus scale
-    val plan = graft.queries.Web.queries("text_domain_stats")(spark, dir)
+    val plan = SparkEntry.queries("text_domain_stats")(spark, dir)
       .queryExecution.executedPlan.toString
     val readSchema = "ReadSchema: [^\\n]*".r.findFirstIn(plan).getOrElse("")
     assert(readSchema.nonEmpty && !readSchema.contains("text"), readSchema)
   }
 
   test("range join plans as an equi-join, never a nested loop") {
-    val plan = graft.queries.Behavioral.queries("q_range_join")(spark, dir)
+    val plan = SparkEntry.queries("q_range_join")(spark, dir)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
@@ -474,7 +474,7 @@ class PlanSpec extends SparkSpec {
     // back to a nested loop or cartesian
     Seq("dedup_spans", "text_novelty", "text_curation",
         "text_overlap_matrix", "text_curation_inc").foreach { q =>
-      val plan = graft.queries.Extensions.queries(q)(spark, dir)
+      val plan = SparkEntry.queries(q)(spark, dir)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"$q:\n$plan")
       assert(!plan.contains("CartesianProduct"), s"$q:\n$plan")
@@ -487,20 +487,20 @@ class PlanSpec extends SparkSpec {
       " doc-partitioned winnow window, no corpus NLJ") {
     // prefix policy: the rule table must broadcast (never shuffle the
     // corpus against a 10-row dimension) and the winner is a keyed agg
-    val pp = graft.queries.Web.queries("web_prefix_policy")(spark, dir)
+    val pp = SparkEntry.queries("web_prefix_policy")(spark, dir)
       .queryExecution.executedPlan.toString
     assert(pp.contains("BroadcastHashJoin"), pp)
     assert(!pp.contains("CartesianProduct"), pp)
     // phrase search: postings filter against the 1-row broadcast phrase
     // before the adjacency joins; the trigram count is map-side partial
-    val ps = graft.queries.Relational7.queries("text_phrase_search")(
+    val ps = SparkEntry.queries("text_phrase_search")(
       spark, dir).queryExecution.executedPlan.toString
     assert(ps.contains("BroadcastExchange"), ps)
     assert(ps.contains("partial_count"), ps)
     // winnowing: the rolling min partitions by doc_id — a corpus-wide
     // single-partition window would be the classic scale-killer
     Seq("text_winnowing", "text_winnow_pairs").foreach { q =>
-      val wp = graft.queries.Relational7.queries(q)(spark, dir)
+      val wp = SparkEntry.queries(q)(spark, dir)
         .queryExecution.executedPlan.toString
       assert(!wp.contains("Exchange SinglePartition"), s"$q:\n$wp")
       assert(!wp.contains("CartesianProduct"), s"$q:\n$wp")
@@ -512,12 +512,12 @@ class PlanSpec extends SparkSpec {
     // it assert the heavy replicate stage combines map-side and nothing
     // degenerates to a cartesian product
     Seq("q_quantile_norm", "q_mv_maintain").foreach { q =>
-      val p = graft.queries.Relational7.queries(q)(spark, dir)
+      val p = SparkEntry.queries(q)(spark, dir)
         .queryExecution.executedPlan.toString
       assert(!p.contains("Exchange SinglePartition"), s"$q:\n$p")
       assert(!p.contains("CartesianProduct"), s"$q:\n$p")
     }
-    val fdr = graft.queries.Relational7.queries("q_permutation_fdr")(
+    val fdr = SparkEntry.queries("q_permutation_fdr")(
       spark, dir).queryExecution.executedPlan.toString
     assert(!fdr.contains("CartesianProduct"), fdr)
     assert(fdr.contains("partial_"), s"no map-side partials\n$fdr")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.{Relational5, Tables}
+import graft.queries.Tables
 
 /** Round-7 statistics batch: plan-shape guards (no single-task prefix sums)
   * and semantic cross-checks of the two-phase forms against naive
@@ -13,7 +13,7 @@ class StatsOpsSpec extends SparkSpec {
 
   test("q_concurrency two-phase carry-in matches the naive per-type sweep") {
     import spark.implicits._
-    val twoPhase = Relational5.queries("q_concurrency")(spark, dir)
+    val twoPhase = SparkEntry.queries("q_concurrency")(spark, dir)
       .as[(String, Long, java.sql.Timestamp)].collect().toSeq
     // naive twin: one running sum per event_type over the full delta stream
     val ev = Tables.events(spark, dir)
@@ -43,7 +43,7 @@ class StatsOpsSpec extends SparkSpec {
     val globalWindow =
       "Window[^\\n]*\\n\\s*[+:]- Sort[^\\n]*\\n\\s*[+:]- Exchange SinglePartition".r
     Seq("q_concurrency", "q_ks_test").foreach { name =>
-      val df = Relational5.queries(name)(spark, dir)
+      val df = SparkEntry.queries(name)(spark, dir)
       val plan = df.queryExecution.executedPlan.toString
       assert(globalWindow.findFirstIn(plan).isEmpty, s"$name:\n$plan")
       if (name == "q_concurrency")
@@ -53,7 +53,7 @@ class StatsOpsSpec extends SparkSpec {
 
   test("q_ks_test matches a single-window ECDF twin and is bounded") {
     import spark.implicits._
-    val (ksD, n1, n2) = Relational5.queries("q_ks_test")(spark, dir)
+    val (ksD, n1, n2) = SparkEntry.queries("q_ks_test")(spark, dir)
       .as[(Double, Long, Long)].collect().head
     assert(ksD >= 0.0 && ksD <= 1.0)
     // naive twin: global-window cumulative counts (test scale only)
@@ -88,7 +88,7 @@ class StatsOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_wide").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val g = Relational5.queries("q_gini")(spark, dir)
+    val g = SparkEntry.queries("q_gini")(spark, dir)
       .as[(String, Double)].collect().toMap
     val sorted = vals.sorted
     val n = sorted.size.toDouble
@@ -98,7 +98,7 @@ class StatsOpsSpec extends SparkSpec {
     val expected = BigDecimal(2 * six / (n * sorted.sum) - (n + 1) / n)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(math.abs(g("click") - expected) < 2e-6, s"${g("click")} vs $expected")
-    val b = Relational5.queries("q_benfords")(spark, dir)
+    val b = SparkEntry.queries("q_benfords")(spark, dir)
       .as[(String, Double, Long)].collect()
     assert(b.length == 1)
     val (_, chi2, bn) = b.head
@@ -111,8 +111,7 @@ class StatsOpsSpec extends SparkSpec {
       "Window[^\\n]*\\n\\s*[+:]- Sort[^\\n]*\\n\\s*[+:]- Exchange SinglePartition".r
     for (name <- Seq("q_kll_quantile", "q_kll_grouped", "q_skew_report",
         "q_cusum", "q_rolling_corr")) {
-      val df = (graft.queries.Sketches.queries ++ Relational5.queries)
-        .apply(name)(spark, dir)
+      val df = SparkEntry.queries(name)(spark, dir)
       val plan = df.queryExecution.executedPlan.toString
       assert(globalWindow.findFirstIn(plan).isEmpty, s"$name:\n$plan")
     }
@@ -137,7 +136,7 @@ class StatsOpsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<float>"),
         col("label").cast("int"))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val pc = graft.queries.Extensions.queries("emb_power_pc1")(spark, dir)
+    val pc = SparkEntry.queries("emb_power_pc1")(spark, dir)
       .collect().map(r => r.getDouble(1))
     val dot = pc.zip(u).map { case (a, b) => a * b }.sum
     val pcn = math.sqrt(pc.map(x => x * x).sum)
@@ -157,7 +156,7 @@ class StatsOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_cusum").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val df = Relational5.queries("q_cusum")(spark, dir)
+    val df = SparkEntry.queries("q_cusum")(spark, dir)
     val globalWindow =
       "Window[^\\n]*\\n\\s*[+:]- Sort[^\\n]*\\n\\s*[+:]- Exchange SinglePartition".r
     val plan = df.queryExecution.executedPlan.toString
@@ -170,7 +169,7 @@ class StatsOpsSpec extends SparkSpec {
   }
 
   test("runtime bloom filter is injected above the fact scan") {
-    val df = Relational5.queries("q_runtime_filter")(spark, dir)
+    val df = SparkEntry.queries("q_runtime_filter")(spark, dir)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("might_contain"), plan)
@@ -198,13 +197,13 @@ class StatsOpsSpec extends SparkSpec {
 
   test("bigram PMI output is deterministic, ranked, and count-thresholded") {
     import spark.implicits._
-    val rows = Relational5.queries("text_bigram_pmi")(spark, dir)
+    val rows = SparkEntry.queries("text_bigram_pmi")(spark, dir)
       .as[(String, String, Long, Double)].collect()
     assert(rows.length <= 40 && rows.nonEmpty)
     assert(rows.forall(_._3 >= 3))
     val pmis = rows.map(_._4)
     assert(pmis.zip(pmis.tail).forall { case (a, b) => a >= b })
-    val again = Relational5.queries("text_bigram_pmi")(spark, dir)
+    val again = SparkEntry.queries("text_bigram_pmi")(spark, dir)
       .as[(String, String, Long, Double)].collect()
     assert(rows.toSeq == again.toSeq)
   }
@@ -260,12 +259,12 @@ class StatsOpsSpec extends SparkSpec {
   test("stats invariants: correlation bounds, decay contraction, peak sanity") {
     import spark.implicits._
     // autocorrelation is a correlation: |r| <= 1 by Cauchy-Schwarz
-    val ac = Relational5.queries("q_autocorr")(spark, dir)
+    val ac = SparkEntry.queries("q_autocorr")(spark, dir)
       .as[(String, Double, Long)].collect()
     assert(ac.nonEmpty && ac.forall(r => math.abs(r._2) <= 1.0))
     // every decay weight is in (0, 1] (tmax >= ts), so the decayed sum is
     // positive and strictly below the plain sum for any non-degenerate mix
-    val dec = Relational5.queries("q_decayed_agg")(spark, dir)
+    val dec = SparkEntry.queries("q_decayed_agg")(spark, dir)
       .as[(String, Double)].collect().toMap
     val plain = Tables.events(spark, dir).groupBy("event_type")
       .agg(sum("value")).as[(String, Double)].collect().toMap
@@ -273,7 +272,7 @@ class StatsOpsSpec extends SparkSpec {
     dec.foreach { case (k, v) => assert(v > 0.0 && v <= plain(k), k) }
     // peak concurrency is at least 1 while any session is open, and the
     // peak instant lies inside the stream's active envelope
-    val conc = Relational5.queries("q_concurrency")(spark, dir)
+    val conc = SparkEntry.queries("q_concurrency")(spark, dir)
       .as[(String, Long, java.sql.Timestamp)].collect()
     val (tsMin, tsMax) = Tables.events(spark, dir)
       .agg(min("ts"), max("ts"))
@@ -285,7 +284,7 @@ class StatsOpsSpec extends SparkSpec {
       assert(!at.before(tsMin) && !at.after(envelopeEnd), s"$t $at")
     }
     // weighted median is invariant under uniform weight scaling
-    val base = Relational5.queries("q_weighted_median")(spark, dir)
+    val base = SparkEntry.queries("q_weighted_median")(spark, dir)
       .as[(String, Double)].collect().toSeq
     val scaled = {
       val g = Tables.lineitem(spark, dir)
@@ -353,7 +352,7 @@ class StatsOpsSpec extends SparkSpec {
 
   test("chi2 contributions are non-negative and cover every lang") {
     import spark.implicits._
-    val rows = Relational5.queries("q_chi2")(spark, dir)
+    val rows = SparkEntry.queries("q_chi2")(spark, dir)
       .as[(String, Double)].collect()
     val langs = Tables.documents(spark, dir)
       .select("lang").distinct().as[String].collect().toSet
@@ -455,14 +454,13 @@ class Round8EdgeSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val dir = java.nio.file.Files.createTempDirectory("graft_edge").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = graft.queries.Relational5.queries("q_cusum")(spark, dir).collect()
+    val r = SparkEntry.queries("q_cusum")(spark, dir).collect()
     // one row: the only index is the changepoint, deviation 0
     assert(r.length == 1 && r(0).getLong(2) == 1L && r(0).getDouble(4) == 0.0)
   }
 
   test("poisson bootstrap: CI brackets the mean, shrinks at 10x rows") {
-    def cis(dir: String) = graft.queries.Relational6
-      .queries("q_bootstrap_ci")(spark, dir).collect()
+    def cis(dir: String) = SparkEntry.queries("q_bootstrap_ci")(spark, dir).collect()
       .map(r => r.getString(0) ->
         ((r.getDouble(1), r.getDouble(2), r.getDouble(3)))).toMap
     val small = cis("/root/testdata/sf0.001")
@@ -481,7 +479,7 @@ class Round8EdgeSpec extends SparkSpec {
 
   test("z-order tiles stay narrow in BOTH dims; 1-col sort does not") {
     val dir = "/root/testdata/sf0.001"
-    val t = graft.queries.Relational6.queries("q_zorder_layout")(spark, dir)
+    val t = SparkEntry.queries("q_zorder_layout")(spark, dir)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
     val total = t.map(_._1).sum

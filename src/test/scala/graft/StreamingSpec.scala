@@ -901,8 +901,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val batch = graft.queries.Relational6
-      .queries("q_weighted_sample")(spark, dir)
+    val batch = SparkEntry.queries("q_weighted_sample")(spark, dir)
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
       .groupBy(_._1)
