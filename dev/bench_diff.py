@@ -11,6 +11,13 @@ and summarizes adds/removes. Exit code 1 if any regression or new failure.
 
 Sub-100ms queries are exempt from the ratio flag: at that grain the
 scheduler noise floor dominates and a 2x on 40 ms is not a regression.
+
+When both files carry per-entry "counters" (graft.Bench writes, per entry
+and section, each run's jobs, stages, tasks, shuffle-write bytes and
+observed-metric misses), it also lists the entries whose jobs, stages or
+shuffle-write bytes differ between the files, and, separately, those that
+differ between runs within one file. These counts do not depend on the
+box's speed; they do not change the exit code.
 """
 import json, re, sys
 
@@ -30,6 +37,29 @@ def load(path):
         except json.JSONDecodeError:
             pass  # a chunk line cut mid-map by the tail budget
     return q, d
+
+COUNTED = ("jobs", "stages", "shuffle_write_bytes")
+
+def counter_values(counters):
+    """(entry, "section.counter", per-run values) for each counted value."""
+    for name, sections in sorted(counters.items()):
+        for section, cs in sorted(sections.items()):
+            for c in COUNTED:
+                if c in cs:
+                    yield name, f"{section}.{c}", cs[c]
+
+def report_counters(old, new):
+    varying = [(p, n, k, v) for p, d in (("old", old), ("new", new))
+               for n, k, v in counter_values(d) if len(set(v)) > 1]
+    old_v = {(n, k): v for n, k, v in counter_values(old)}
+    changed = [(n, k, old_v[(n, k)], v) for n, k, v in counter_values(new)
+               if (n, k) in old_v and set(old_v[(n, k)]) != set(v)]
+    print(f"counters: {len(changed)} differ between the files, "
+          f"{len(varying)} vary between runs within a file")
+    for n, k, a, b in changed:
+        print(f"COUNTS {n} {k}: {a} -> {b}")
+    for p, n, k, v in varying:
+        print(f"varies ({p}) {n} {k}: {v}")
 
 def main(old_path, new_path, ratio=1.5):
     old, old_meta = load(old_path)
@@ -66,6 +96,8 @@ def main(old_path, new_path, ratio=1.5):
         print(f"improved   {name}: {a:.3f}s -> {b:.3f}s")
     if not regressions and not new_fails:
         print("no regressions")
+    if old_meta.get("counters") and new_meta.get("counters"):
+        report_counters(old_meta["counters"], new_meta["counters"])
     return 1 if (regressions or new_fails) else 0
 
 if __name__ == "__main__":

@@ -8,6 +8,11 @@ import org.apache.logging.log4j.LogManager
 object Bench {
   private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
 
+  /** A timing run waits for the 1-minute loadavg to fall to this... */
+  private val LoadGate = 2.0
+  /** ...for at most this many seconds, then runs anyway and says so. */
+  private val LoadGateWaitSec = 600
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // fingerprint artifacts published by mm_*_pairs queries feed the DuckDB
@@ -15,6 +20,9 @@ object Bench {
     // must not overwrite them, so benches publish to their own directory.
     if (sys.props.get("graft.artifact.dir").isEmpty)
       System.setProperty("graft.artifact.dir", "/tmp/graft_bench_artifacts")
+    // the session first: building it configures log4j2, whose default
+    // configuration would drop the gate's warnings below
+    val spark = GraftSession("graft-bench")
     // Pre-bench load gate (three rounds of co-tenant-inflated committed
     // artifacts): a timing run that starts under external load measures
     // the neighbors, not the engine. Wait (up to a deadline) for the box
@@ -33,26 +41,23 @@ object Bench {
     def loadJson(v: Double): String =
       if (v.isNaN) "null" else BigDecimal(v)
         .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    val loadGate = sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE", "2.0").toDouble
-    val gateDeadlineSec =
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE_WAIT", "600").toInt
     val gateT0 = System.nanoTime()
     def gateRemainingSec(): Double =
-      gateDeadlineSec - (System.nanoTime() - gateT0) / 1e9
+      LoadGateWaitSec - (System.nanoTime() - gateT0) / 1e9
     if (loadavg().isNaN)
-      System.err.println("[bench] WARNING: /proc/loadavg unreadable — " +
+      logger.warn("[bench] /proc/loadavg unreadable — " +
         "no quiescence gate possible; loads recorded as null")
-    while (loadavg() > loadGate && gateRemainingSec() > 0) {
-      System.err.println(
-        f"[bench] loadavg ${loadavg()}%.2f > gate $loadGate%.1f — waiting")
+    while (loadavg() > LoadGate && gateRemainingSec() > 0) {
+      logger.warn(
+        f"[bench] loadavg ${loadavg()}%.2f > gate $LoadGate%.1f — waiting")
       // clamp to the remaining deadline so the loop cannot overshoot it
       Thread.sleep(math.max(1000L,
         math.min(30000L, (gateRemainingSec() * 1000).toLong)))
     }
     val startLoad = loadavg()
-    if (startLoad > loadGate)
-      System.err.println(f"[bench] WARNING: benching under load " +
-        f"$startLoad%.2f (gate $loadGate%.1f, deadline ${gateDeadlineSec}s " +
+    if (startLoad > LoadGate)
+      logger.warn(f"[bench] benching under load " +
+        f"$startLoad%.2f (gate $LoadGate%.1f, deadline ${LoadGateWaitSec}s " +
         "expired) — times will carry co-tenant inflation")
     // Bench-live marker: dev/sweep_overlap.sh (and any other timed
     // co-tenant) refuses to start while this file names a live PID —
@@ -66,9 +71,8 @@ object Bench {
         ProcessHandle.current().pid().toString + "\n")
       lockPath.toFile.deleteOnExit()
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] lock write failed: ${e.getMessage}")
+      logger.warn(s"[bench] lock write failed: ${RunRecorder.describe(e)}")
     }
-    val spark = GraftSession("graft-bench")
 
     // warmup: parquet reader + shuffle + codegen paths, not measured
     try {
@@ -91,21 +95,28 @@ object Bench {
     // optional comma-separated query filter for focused timing runs
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
+    // Each run records the builder call (eager pre-passes) and the noop
+    // write as two sections; the recorder's marker job runs after the
+    // timed region.
+    val recorder = new RunRecorder(spark)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       val samples = (1 to RUNS).map { _ =>
         val t0 = System.nanoTime()
         val ok = try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
+          val df = recorder.section("builder")(fn(spark, sfDir))
+          recorder.section("exec")(
+            df.write.mode("overwrite").format("noop").save())
+          true
         } catch { case e: Throwable =>
           // the output keeps only -1 and the "failed" list; the cause goes
           // to the log
-          logger.warn(s"[bench] $name failed: ${e.getClass.getName}: " +
-            e.getMessage)
+          logger.warn(s"[bench] $name failed: ${RunRecorder.describe(e)}")
           false
         }
         val dt = (System.nanoTime() - t0) / 1e9
+        val counts = recorder.finish()
         // cache hygiene between runs (outside the timed section): a query
         // that persists intermediates must not warm or crowd the next one.
         // NOTE: an explicit System.gc() here was tried (round 7) to drain
@@ -114,11 +125,12 @@ object Bench {
         // broadcast state, inflating the MEASURED times by a median 1.25×
         // across the registry. Leave collection to the JVM.
         spark.catalog.clearCache()
-        (dt, ok)
+        (dt, ok, counts)
       }
       val ok = samples.forall(_._2)
-      (name, samples.map(_._1).min, ok)
+      (name, samples.map(_._1).min, ok, samples.map(_._3))
     }
+    recorder.close()
     // a crashed query must not read as a healthy timing: report -1 for it
     // and list it under "failed". Times are 3-decimal (ms grain), and the
     // per-query map is emitted as SHORT self-describing JSON lines rather
@@ -132,18 +144,18 @@ object Bench {
     //     families (the ones whose regressions matter most) sit nearest the
     //     tail and survive even a few-line budget.
     def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
+    val failed = results.collect { case (k, _, false, _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.filter(_._3).map(_._2).sum
     val MAX_PER_LINE = 12
-    results.groupBy { case (k, _, _) => k.takeWhile(_ != '_') }
+    results.groupBy { case (k, _, _, _) => k.takeWhile(_ != '_') }
       .toSeq
       .map { case (family, rs) => (family, rs.filter(_._3).map(_._2).sum, rs) }
       .sortBy(_._2) // ascending cost: costliest family prints last
       .foreach { case (family, famTotal, rs) =>
         val chunks = rs.sortBy(_._1).grouped(MAX_PER_LINE).toSeq
         chunks.zipWithIndex.foreach { case (chunk, i) =>
-          val qs = chunk.map { case (k, v, ok) =>
+          val qs = chunk.map { case (k, v, ok, _) =>
             s"\"" + k + "\":" + (if (ok) fmt(v) else -1)
           }.mkString("{", ",", "}")
           val part = s""","part":${i + 1},"parts":${chunks.size}"""
@@ -155,9 +167,9 @@ object Bench {
     // under the bench's tail). Record it in the HEADLINE too and warn, so
     // the committed artifact carries both sides of the window.
     val endLoad = loadavg()
-    if (endLoad > loadGate)
-      System.err.println(f"[bench] WARNING: loadavg $endLoad%.2f > gate " +
-        f"$loadGate%.1f at bench END — a co-tenant overlapped the run; " +
+    if (endLoad > LoadGate)
+      logger.warn(f"[bench] loadavg $endLoad%.2f > gate " +
+        f"$LoadGate%.1f at bench END — a co-tenant overlapped the run; " +
         "treat the slowest-family times as suspect")
     // the minimal headline line LAST: survives even a one-line tail budget
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$RUNS,"n_queries":${results.size},"failed":$failed,"load":${loadJson(startLoad)},"end_load":${loadJson(endLoad)},"sf":"$sfDir"}""")
@@ -172,15 +184,27 @@ object Bench {
     // round shipped a 6-query "detail"). Partial runs get their own file.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       if (only.isDefined) "BENCH_detail_partial.json" else "BENCH_detail.json")
-    val qJson = results.map { case (k, v, ok) =>
+    val qJson = results.map { case (k, v, ok, _) =>
       "\"" + k + "\":" + (if (ok) fmt(v) else -1)
     }.mkString("{", ",", "}")
+    // per entry and section, each counter as one value per run, in run
+    // order: run-to-run variance stays visible
+    def sectionJson(runs: Seq[Map[String, RunRecorder.Counts]], s: String) = {
+      val cs = runs.map(_.getOrElse(s, RunRecorder.Counts.Zero))
+      def arr(f: RunRecorder.Counts => Long) = cs.map(f).mkString("[", ",", "]")
+      s""""$s":{"jobs":${arr(_.jobs)},"stages":${arr(_.stages)},""" +
+        s""""tasks":${arr(_.tasks)},"shuffle_write_bytes":""" +
+        s"""${arr(_.shuffleWriteBytes)},"misses":${arr(_.misses)}}"""
+    }
+    val cJson = results.map { case (k, _, _, runs) =>
+      s""""$k":{${sectionJson(runs, "builder")},${sectionJson(runs, "exec")}}"""
+    }.mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$RUNS,"n_queries":${results.size},"failed":$failed,"load":${loadJson(startLoad)},"end_load":${loadJson(endLoad)},"sf":"$sfDir","queries":$qJson}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$RUNS,"n_queries":${results.size},"failed":$failed,"load":${loadJson(startLoad)},"end_load":${loadJson(endLoad)},"sf":"$sfDir","queries":$qJson,"counters":$cJson}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailPath), detail + "\n")
     catch { case e: Throwable =>
-      System.err.println(s"[bench] detail write failed: ${e.getMessage}")
+      logger.warn(s"[bench] detail write failed: ${RunRecorder.describe(e)}")
     }
     try java.nio.file.Files.deleteIfExists(lockPath)
     catch { case _: Throwable => () }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import graft.functions.GraftExtensions
 
 /** The one session policy of every graft entry point (Bench, Verify,
-  * DevProfile, Main, ApiServer) and of the test suites.
+  * Main, ApiServer) and of the test suites.
   *
   *  - master: `SPARK_MASTER` when set (a deployment address), else
   *    `local[cores]`; shuffle partitions = `cores`.

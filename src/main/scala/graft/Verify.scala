@@ -1,8 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.logging.log4j.LogManager
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cores = GraftSession.mainCores
@@ -55,7 +58,7 @@ object Verify {
           f"[verify] $name done in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       }
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        logger.warn(s"[verify] $name failed: ${RunRecorder.describe(e)}")
       }
       // queries that persist intermediates (dedup/ANN) must not leak cached
       // blocks into the rest of the session

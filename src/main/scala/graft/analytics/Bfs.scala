@@ -1,6 +1,5 @@
 package graft.analytics
 
-import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,8 +26,6 @@ import org.apache.spark.sql.functions._
   * strategy — exact, so the registry entry is hash-checkable.
   */
 object Bfs {
-  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
-
   /** Min-hop distance from any source within `maxHops` hops. `nbrs` must
     * carry DIRECTED (u, v) rows (callers wanting undirected semantics
     * pass both directions); `sources` carries `id`. Returns (id, dist)
@@ -57,22 +54,13 @@ object Bfs {
         .select(col("v").as("id")).distinct()
         .join(settled, Seq("id"), "left_anti")
         .select(col("id"), lit(i).as("dist"))
-      val metric = s"bfs_frontier_$i"
-      val observed = settled.union(next)
-        .observe(metric, sum(when(col("dist") === i, 1L).otherwise(0L))
-          .as("f"))
-      settled = observed.localCheckpoint(true)
-      val grew = observed.queryExecution.observedMetrics.get(metric) match {
-        case Some(row) if !row.isNullAt(row.fieldIndex("f")) =>
-          row.getAs[Long]("f")
-        case _ =>
-          logger.warn(s"[graft] observed-metric miss: $metric — " +
-            "falling back to a count over the checkpointed frame")
-          settled.filter(col("dist") === i).count()
-      }
-      // empty frontier: every later level is provably empty too — exiting
-      // changes nothing in the settled rows
-      live = grew > 0L
+      val (out, row) = graft.Observed.checkpoint(settled.union(next),
+        s"bfs_frontier_$i",
+        sum(when(col("dist") === i, 1L).otherwise(0L)).as("f"))
+      settled = out
+      // empty frontier (or nothing settled: a null sum): every later level
+      // is provably empty too — exiting changes nothing in the settled rows
+      live = !row.isNullAt(0) && row.getLong(0) > 0L
     }
     settled
   }

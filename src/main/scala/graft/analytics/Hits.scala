@@ -1,6 +1,5 @@
 package graft.analytics
 
-import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -25,8 +24,6 @@ import org.apache.spark.sql.types.DecimalType
   * statically unrolled by the caller-chosen count.
   */
 object Hits {
-  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
-
   private val Dec = DecimalType(38, 12)
 
   /** Run `iters` HITS iterations over `edges` (`src`, `dst`). Returns
@@ -57,29 +54,17 @@ object Hits {
     def pull(scores: DataFrame, from: String, to: String,
              out: String): DataFrame = {
       step += 1
-      val metric = s"hits_ss_$step"
-      val observed = nodes.join(
+      val pulled = nodes.join(
         edges.join(scores, edges(from) === scores("id"))
           .groupBy(edges(to).as("id"))
           .agg(sum(col("s").cast(Dec)).cast("double").as("raw")),
         Seq("id"), "left")
         .select(col("id"), coalesce(col("raw"), lit(0.0)).as("raw"))
-        .observe(metric, sum((col("raw") * col("raw")).cast(Dec)).as("ss"))
-      val raw = observed.localCheckpoint(true)
-      val ss = observed.queryExecution.observedMetrics.get(metric) match {
-        case Some(row) if !row.isNullAt(row.fieldIndex("ss")) =>
-          Some(row.getDecimal(row.fieldIndex("ss")))
-        case Some(_) => None // empty frame: SUM is null
-        case None => // metric miss: scan the checkpointed leaf
-          // loud, so a Spark-internals change that systematically stops
-          // populating observedMetrics shows up in profiles as a message,
-          // not just as one silent extra pass per half-step
-          logger.warn(s"[graft] observed-metric miss: $metric — " +
-            "falling back to a scan of the checkpointed frame")
-          Option(raw.agg(sum((col("raw") * col("raw")).cast(Dec)).as("ss"))
-            .collect()(0).getDecimal(0))
-      }
-      val nrm = ss.map(v => lit(math.sqrt(v.doubleValue)))
+      val (raw, row) = graft.Observed.checkpoint(pulled, s"hits_ss_$step",
+        sum((col("raw") * col("raw")).cast(Dec)).as("ss"))
+      // empty frame: SUM is null, and so is the norm
+      val nrm = Option(row.getDecimal(0))
+        .map(v => lit(math.sqrt(v.doubleValue)))
         .getOrElse(lit(null).cast("double"))
       raw.select(col("id"), (col("raw") / nrm).as(out))
     }

@@ -1,6 +1,5 @@
 package graft.analytics
 
-import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -23,8 +22,6 @@ import org.apache.spark.sql.types.DecimalType
   * [[graft.dedup.Dedup.connectedComponents]] does.
   */
 object PageRank {
-  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
-
   /** Run `iters` damped iterations over `edges` (`src`, `dst` columns).
     * Returns (id, pr). Nodes are the union of edge endpoints; a node's
     * outdegree is its edge count as `src` (callers wanting undirected
@@ -70,20 +67,9 @@ object PageRank {
     var step = 0
     def ckpt(df: DataFrame): (DataFrame, Double) = {
       step += 1
-      val metric = s"pr_dm_$step"
-      val observed = df.observe(metric, dmAgg.as("dm"))
-      val out = observed.localCheckpoint(true)
-      val dm = observed.queryExecution.observedMetrics.get(metric) match {
-        case Some(row) if !row.isNullAt(row.fieldIndex("dm")) =>
-          row.getAs[Double]("dm")
-        case _ =>
-          // loud, so a systematic metric miss is visible in profiles, not
-          // just as one silent extra aggregate pass per iteration
-          logger.warn(s"[graft] observed-metric miss: $metric — " +
-            "falling back to an aggregate over the checkpointed frame")
-          out.agg(dmAgg.as("dm")).collect()(0).getDouble(0)
-      }
-      (out, dm)
+      val (out, row) =
+        graft.Observed.checkpoint(df, s"pr_dm_$step", dmAgg.as("dm"))
+      (out, row.getDouble(0))
     }
     var (pr, dm) = ckpt(base.withColumn("pr", lit(1.0) / lit(n)))
     for (_ <- 1 to iters) {
@@ -136,18 +122,9 @@ object PageRank {
     var step = 0
     def ckpt(df: DataFrame): (DataFrame, Double) = {
       step += 1
-      val metric = s"ppr_dm_$step"
-      val observed = df.observe(metric, dmAgg.as("dm"))
-      val out = observed.localCheckpoint(true)
-      val dm = observed.queryExecution.observedMetrics.get(metric) match {
-        case Some(row) if !row.isNullAt(row.fieldIndex("dm")) =>
-          row.getAs[Double]("dm")
-        case _ =>
-          logger.warn(s"[graft] observed-metric miss: $metric — " +
-            "falling back to an aggregate over the checkpointed frame")
-          out.agg(dmAgg.as("dm")).collect()(0).getDouble(0)
-      }
-      (out, dm)
+      val (out, row) =
+        graft.Observed.checkpoint(df, s"ppr_dm_$step", dmAgg.as("dm"))
+      (out, row.getDouble(0))
     }
     var (pr, dm) =
       ckpt(nodes.select(col("id"), col("sv"), col("__dang"),

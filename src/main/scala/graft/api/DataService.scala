@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.etl._
 import graft.model.{HistoricalVaR, ImpermanentLossModel, MEVExposureModel}

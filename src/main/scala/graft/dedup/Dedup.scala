@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
 
@@ -356,15 +356,6 @@ object Dedup {
     new graft.CachedResult(df, cached)
   }
 
-  /** Iterations the last [[connectedComponents]] call took (diagnostics). */
-  @volatile private[graft] var lastComponentIterations: Int = 0
-
-  /** Rounds whose convergence count came from the piggybacked `observe`
-    * metric (vs the fallback scan of the checkpointed frame) — diagnostics
-    * so a Spark-internals change that silently stops populating
-    * `observedMetrics` under RDD-action materialization shows up in tests. */
-  @volatile private[graft] var lastObservedRounds: Int = 0
-
   private def connectedComponentsWithCaches(pairs: DataFrame,
       maxIter: Int): (DataFrame, Seq[DataFrame]) = {
     // localCheckpoint the pair input FIRST, not persist: persist caches the
@@ -384,7 +375,6 @@ object Dedup {
       .withColumn("rep", col("a")).localCheckpoint(true)
     var changed = 1L
     var iter = 0
-    lastObservedRounds = 0
     while (changed > 0 && iter < maxIter) {
       // ONE plan, ONE eager materialization per round. `labels` is already
       // a materialized leaf (persist in round 0, localCheckpoint after), so
@@ -407,33 +397,21 @@ object Dedup {
         .select(col("a"),
           least(col("rep"), coalesce(col("nmin"), col("rep"))).as("t"),
           col("rep").as("old"))
-      val metric = s"cc_changed_$iter"
-      val observed = stepped
+      val jumped = stepped
         .join(labels.select(col("a").as("t"), col("rep").as("jump")),
           Seq("t"), "left")
         .select(col("a"),
           least(col("t"), coalesce(col("jump"), col("t"))).as("rep"),
           col("old"))
-        // piggyback the convergence count on the checkpoint job: the
-        // CollectMetrics accumulator fills while the round materializes,
-        // so no separate aggregation job runs per round
-        .observe(metric, sum(when(col("rep") =!= col("old"), 1L)
-          .otherwise(0L)).as("changed"))
-      val next = observed.localCheckpoint(true)
-      changed = observed.queryExecution.observedMetrics.get(metric) match {
-        case Some(row) if !row.isNullAt(row.fieldIndex("changed")) =>
-          lastObservedRounds += 1
-          row.getAs[Long]("changed")
-        case _ =>
-          // fallback: scan of the just-checkpointed blocks — cheap, but
-          // an extra job; tracked via lastObservedRounds
-          next.filter(col("rep") =!= col("old")).count()
-      }
+      // the convergence count rides the checkpoint job, so no separate
+      // aggregation job runs per round; no labels → null sum → 0 changed
+      val (next, row) = graft.Observed.checkpoint(jumped, s"cc_changed_$iter",
+        sum(when(col("rep") =!= col("old"), 1L).otherwise(0L)).as("changed"))
+      changed = if (row.isNullAt(0)) 0L else row.getLong(0)
       labels.unpersist(blocking = false)
       labels = next
       iter += 1
     }
-    lastComponentIterations = iter
     // silent wrong answers are worse than a loud stop: unconverged labels
     // are NOT components (ADVICE r3)
     require(changed == 0,
@@ -527,8 +505,7 @@ object Dedup {
         .repartition(col("hi"))
         .distinct()
       // small-star: key = the larger endpoint, rewrite its smaller fringe
-      val metric = s"lss_sig_$iter"
-      val observed = ls
+      val star = ls
         .withColumn("m", min(col("lo")).over(wHi))
         .select(explode(when(col("lo") =!= col("m"),
             array(struct(col("lo").as("hi"), col("m").as("lo")),
@@ -537,19 +514,12 @@ object Dedup {
           .as("e"))
         .select(col("e.hi").as("hi"), col("e.lo").as("lo"))
         .distinct()
-        // fixpoint signature rides the checkpoint job — no extra pass
-        .observe(metric, count(lit(1)).as("cnt"),
-          expr("bit_xor(xxhash64(hi, lo))").as("sig"))
-      val next = observed.localCheckpoint(true)
-      val stats = observed.queryExecution.observedMetrics.get(metric) match {
-        case Some(row) if !row.isNullAt(row.fieldIndex("cnt")) =>
-          (row.getAs[Long]("cnt"),
-            Option(row.getAs[java.lang.Long]("sig")).fold(0L)(_.longValue))
-        case _ => // empty edge set or metric miss: scan the tiny leaf
-          (next.count(),
-            Option(next.agg(expr("bit_xor(xxhash64(hi, lo))")).collect()(0)
-              .getAs[java.lang.Long](0)).fold(0L)(_.longValue))
-      }
+      // fixpoint signature rides the checkpoint job — no extra pass; an
+      // empty edge set has a null bit_xor, read as 0
+      val (next, row) = graft.Observed.checkpoint(star, s"lss_sig_$iter",
+        count(lit(1)).as("cnt"), expr("bit_xor(xxhash64(hi, lo))").as("sig"))
+      val stats = (row.getAs[Long]("cnt"),
+        Option(row.getAs[java.lang.Long]("sig")).fold(0L)(_.longValue))
       converged = stats == prev
       prev = stats
       edges = next

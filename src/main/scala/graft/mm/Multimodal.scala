@@ -1,6 +1,6 @@
 package graft.mm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
@@ -309,16 +309,16 @@ object Codecs {
   /** Deterministic fallback decode for unknown formats / corrupt headers:
     * interprets content bytes as the decoded sample stream, so decode
     * failures are data, not crashes, in a 100 TB pipeline. */
-  def decodeStub(content: Array[Byte], meta: MediaMeta): Array[Int] =
+  def decodeStub(content: Array[Byte]): Array[Int] =
     content.map(b => b & 0xff)
 
   /** Format dispatch: real parse for bmp/wav/avi, fallback otherwise. */
   def decode(content: Array[Byte], meta: MediaMeta): Array[Int] =
     meta.format match {
-      case "bmp" => decodeBmp(content).getOrElse(decodeStub(content, meta))
-      case "wav" => decodeWav(content).getOrElse(decodeStub(content, meta))
-      case "avi" => decodeAvi(content).getOrElse(decodeStub(content, meta))
-      case _     => decodeStub(content, meta)
+      case "bmp" => decodeBmp(content).getOrElse(decodeStub(content))
+      case "wav" => decodeWav(content).getOrElse(decodeStub(content))
+      case "avi" => decodeAvi(content).getOrElse(decodeStub(content))
+      case _     => decodeStub(content)
     }
 
   /** "Resize": stride-sample the decoded stream to ≤ target elements. */

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Third coverage batch: the SQL front door (Q1 — `spark.sql` over temp

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,8 +11,6 @@ import org.apache.spark.sql.functions._
   * the hash gate cross-checks semantics rather than echoing the plan.
   */
 object Relational6 {
-  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
-
   /** k-hop reach profile of the doc graph from the block-head seed set —
     * multi-source BFS ([[graft.analytics.Bfs]]) bounded at 8 hops, then a
     * histogram of min-hop distances with -1 = "outside the 8-hop
@@ -863,23 +860,14 @@ object Relational6 {
         // tokens_after rides the rebuild checkpoint as an observed metric
         // (the PageRank/CC pattern): the stats job then only computes the
         // vocab countDistinct (distinct aggregates cannot ride observe)
-        val metric = s"bpe_tokens_$r"
         val rebuilt = bpeRebuild(d, s1, s2)
           .withColumn("nxt", lead("sym", 1).over(w))
-        val observed =
-          if (needSummary)
-            rebuilt.observe(metric, count(lit(1)).as("t"))
-          else rebuilt
-        d = observed.localCheckpoint()
-        if (needSummary) {
-          val t = observed.queryExecution.observedMetrics.get(metric) match {
-            case Some(row) if !row.isNullAt(row.fieldIndex("t")) =>
-              row.getAs[Long]("t")
-            case _ =>
-              logger.warn(s"[graft] observed-metric miss: $metric" +
-                " — falling back to a count over the checkpointed frame")
-              d.count()
-          }
+        if (!needSummary) d = rebuilt.localCheckpoint()
+        else {
+          val (ckpt, row) = graft.Observed.checkpoint(rebuilt,
+            s"bpe_tokens_$r", count(lit(1)).as("t"))
+          d = ckpt
+          val t = row.getLong(0)
           val v = d.agg(countDistinct("sym").as("v")).collect()(0).getLong(0)
           out += ((r, s1, s2, cnt, v, t))
         }

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed Lloyd k-means over an embedding column — the corpus

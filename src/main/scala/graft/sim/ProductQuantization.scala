@@ -81,45 +81,6 @@ object ProductQuantization {
   def encode(emb: DataFrame, anchors: Array[Array[Float]]): DataFrame =
     emb.select(col("vec_id") +: codeCols(anchors): _*)
 
-  /** Per-subspace Lloyd training of the codebook, one full scan per
-    * iteration: encode against the current codebook, then one
-    * posexplode + hash-agg computes every (subspace, code, component)
-    * fixed-point mean at once (8×16×8 = 1024 driver rows — the same
-    * scalar boundary as [[KMeans]]'s update). Components quantize to
-    * Float32 each round, mirroring [[KMeans]]'s determinism discipline;
-    * a code that captured no vectors keeps its previous centroid. The
-    * registry query stays on the untrained anchor codebook (that is what
-    * keeps it oracle-exact) — training is the deployment-time recall
-    * lever, measured in PROFILE.md. */
-  def train(emb: DataFrame, init: Array[Array[Float]],
-            iters: Int): Array[Array[Float]] = {
-    graft.functions.GraftFunctions.install(emb.sparkSession)
-    var cb = init
-    for (_ <- 1 to iters) {
-      val coded = emb.select(col("embedding") +: codeCols(cb): _*)
-      val cells = array((0 until SubSpaces).map(m => col(s"c$m")): _*)
-      val stats = coded
-        .select(cells.as("cells"), posexplode(col("embedding")).as(Seq("i", "x")))
-        .select(
-          (col("i") / SubW).cast("int").as("m"),
-          (col("i") % SubW).cast("int").as("j"),
-          element_at(col("cells"), (col("i") / SubW).cast("int") + 1).as("cell"),
-          col("x"))
-        .groupBy("m", "cell", "j")
-        .agg(sum(round(col("x") * lit(1e12)).cast("long")).as("s"),
-          count(lit(1)).as("n"))
-        .collect()
-      val next = cb.map(_.clone())
-      stats.foreach { r =>
-        val m = r.getInt(0); val cell = r.getInt(1) - 1; val j = r.getInt(2)
-        next(cell)(m * SubW + j) =
-          (r.getLong(3).toDouble / 1e12 / r.getLong(4)).toFloat
-      }
-      cb = next
-    }
-    cb
-  }
-
   /** Top-k ADC search of `queries` (qid, qemb) against an encoded corpus.
     * The trick that makes PQ a fast SCAN and not a disguised brute force:
     * d²(q_m, codebook[m][k]) is precomputed ONCE PER QUERY into an 8×16

@@ -650,7 +650,7 @@ object VectorOps {
     }
     // deterministic spread init: every ⌈k/k'⌉-th centroid in label order
     var sups = Array.tabulate(kc)(j => sorted((j.toLong * k / kc).toInt)._2)
-    var assign = new Array[Int](k)
+    val assign = new Array[Int](k)
     var it = 0
     while (it < 6) {
       var i = 0

@@ -264,10 +264,9 @@ object TextOps {
   /** The pruned conditional-probability table [[bigramLmScoreSampled]]
     * broadcasts: (w1, w2, p) with p = c_s(w1 w2)/c_s(w1 ·) over the
     * md5-prefix hash sample, keeping only bigrams seen >= `minCount`
-    * times. Exposed so callers (and `DevProfile lm`) can size the
-    * broadcast for a given sample rate. */
-  def bigramLmModel(docs: DataFrame, sampleRate: Double,
-                    minCount: Long = 2L): DataFrame = {
+    * times. */
+  private def bigramLmModel(docs: DataFrame, sampleRate: Double,
+                    minCount: Long): DataFrame = {
     val bound = graft.analytics.CorpusOps.rateBoundary(sampleRate)
     val trainBg = lmBigrams(docs.filter(
       substring(md5(col("doc_id").cast("string")), 1, 12) < lit(bound)))

@@ -438,7 +438,7 @@ class AnalyticsSpec extends SparkSpec {
         .foldLeft(0)(math.max)
     }
     // driver-simulated 4 rounds of iterated H
-    var c: Map[Long, Int] = adj.map { case (k, ns) => k -> ns.size }
+    val c: Map[Long, Int] = adj.map { case (k, ns) => k -> ns.size }
     val rounds = Iterator.iterate(c)(prev =>
       adj.map { case (k, ns) => k -> hIndex(ns.map(prev)) })
       .take(5).toSeq

@@ -6,7 +6,6 @@ import graft.etl.{Backfill, Fixtures, Ingest}
 /** API shaping layer (E2) and backfill (E0/S4) — behavioral parity with the
   * reference endpoints' structure. */
 class ApiSpec extends SparkSpec {
-  import spark.implicits._
   private lazy val svc = new DataService(spark)
 
   test("var endpoint: 90 points, rolling series gated at window, summary") {

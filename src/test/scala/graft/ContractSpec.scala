@@ -38,7 +38,7 @@ class ContractSpec extends SparkSpec {
 
   test("every query runs and returns rows at sf0.001") {
     val dir = "/root/testdata/sf0.001"
-    val empty = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, fn) =>
+    val empty = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (_, fn) =>
       fn(spark, dir).isEmpty
     }.map(_._1)
     assert(empty.isEmpty, s"empty results at sf0.001: $empty")

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 import graft.etl._
 import graft.functions.GraftFunctions
-import graft.schema.Envelope
 
 /** Ports of the reference's ETL unit tests
   * (/root/reference/tests/test_etl_pipeline.py:86-246). */

@@ -278,15 +278,15 @@ class DedupSpec extends SparkSpec {
     // path 1-2-3 (never a direct 1-3 pair), separate pair 7-8, chain 4-5-6
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L), (5L, 6L), (4L, 5L))
       .toDF("d1", "d2")
+    val misses0 = graft.Observed.misses
     val comp = Dedup.connectedComponents(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(comp == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L,
       6L -> 4L, 7L -> 7L, 8L -> 7L))
     // the convergence count must ride the checkpoint job (observe), not a
     // separate per-round aggregation job
-    assert(Dedup.lastObservedRounds == Dedup.lastComponentIterations,
-      s"observe() piggyback missed: ${Dedup.lastObservedRounds} of " +
-        s"${Dedup.lastComponentIterations} rounds used the metric")
+    val missed = graft.Observed.misses - misses0
+    assert(missed == 0, s"observe() piggyback missed in $missed rounds")
     spark.catalog.clearCache()
   }
 
@@ -742,7 +742,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("kmeans recovers planted clusters; invariant to partitioning") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // 3 tight blobs in 4-d; seed ids 0/1/2 are one member of each blob
     val centers = Seq(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f),
       Array(0f, 0f, 1f, 0f))
@@ -771,7 +770,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("embedding drift: planted mean shift raises mean_shift, invariant") {
-    import spark.implicits._
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val base = graft.queries.Extensions.embDriftOf(emb).collect()
       .map(r => r.getInt(0) -> r.getDouble(3)).toMap

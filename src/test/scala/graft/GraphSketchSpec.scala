@@ -233,8 +233,6 @@ class CountMinSpec extends SparkSpec {
 }
 
 class BloomSetSpec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-
   test("bloom: no false negatives, OR-merge invariance, bounded fp rate") {
     import spark.implicits._
     val keys = (1 to 600).map(i => s"k${i * 7}")
@@ -348,7 +346,7 @@ class HllSketchSpec extends SparkSpec {
   }
 
   test("registry q_approx_distinct: raw HLL++ estimate inside the 15% verdict bound") {
-    import org.apache.spark.sql.functions.{abs => sabs, approx_count_distinct, col, countDistinct}
+    import org.apache.spark.sql.functions.{approx_count_distinct, col, countDistinct}
     val dir = "/root/testdata/sf0.01"
     // the raw estimate (not in the hashed output) honors the tolerance
     // the registry folds into its TRUE-pinned approx_within_15pct column

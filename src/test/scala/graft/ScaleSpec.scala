@@ -114,7 +114,6 @@ class ScaleSpec extends SparkSpec {
     assert(shardRows.toSeq == globalOnShard.toSeq)
 
     // same for rollingVar: partitioned run == global run per shard
-    import spark.implicits._
     val returns = Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("idx"), (col("value") / 300.0 - 0.5).as("r"),

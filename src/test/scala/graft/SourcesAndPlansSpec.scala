@@ -48,7 +48,6 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("compaction writes ceil(rows/target) files and round-trips") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("graft_compact").toString
     // 1000 rows arriving in 100 tiny partitions (the small-files shape)
     val df = spark.range(1000).repartition(100)
@@ -234,7 +233,6 @@ class ZOrderSpec extends SparkSpec {
 }
 
 class BloomFilterSpec extends SparkSpec {
-  import spark.implicits._
 
   test("directory partitioning prunes whole partitions during planning") {
     val dir = Files.createTempDirectory("graft_part").toString

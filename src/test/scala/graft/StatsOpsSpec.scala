@@ -421,7 +421,7 @@ class Round8EdgeSpec extends SparkSpec {
     // level 0 distributed, as the tree did before at every size, took 7:
     // the aggregate, DistributedRank's bucket counts and the level-0
     // checkpoint (2 each), then the tail's collect.
-    val jobs = jobsOf(canon(rows, DriverFinishRows))
+    val jobs = RunRecorder.of(spark)(canon(rows, DriverFinishRows)).jobs
     assert(jobs <= 2, s"$jobs jobs")
     // grouped: two groups of very different depth (one freezes early)
     val grows = ((1 to 500).map(i =>

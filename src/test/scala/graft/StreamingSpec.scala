@@ -596,9 +596,9 @@ class StreamingSpec extends SparkSpec {
     // one merge into the existing table runs 2 jobs, the two AQE stages of
     // the compaction's window; reading the state with spark.read.parquet,
     // whose schema inference is a one-task job, made it 3
-    val jobs = jobsOf(mergeBatch(
+    val jobs = RunRecorder.of(spark)(mergeBatch(
       Seq((1L, 5L, "a5"), (3L, 1L, "c1")).toDF("k", "ver", "payload"),
-      statePath, "k", "ver"))
+      statePath, "k", "ver")).jobs
     assert(jobs == 2, s"$jobs jobs")
     assert(spark.read.parquet(statePath).as[(Long, Long, String)].collect().toSet ==
       Set((1L, 5L, "a5"), (2L, 1L, "b1"), (3L, 1L, "c1")))
