@@ -8,10 +8,9 @@ import org.apache.logging.log4j.LogManager
 object Bench {
   private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
 
-  /** A timing run waits for the 1-minute loadavg to fall to this... */
+  /** A 1-minute loadavg above this at the start or end of a timing run
+    * is warned about: the times then carry co-tenant inflation. */
   private val LoadGate = 2.0
-  /** ...for at most this many seconds, then runs anyway and says so. */
-  private val LoadGateWaitSec = 600
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -21,19 +20,19 @@ object Bench {
     if (sys.props.get("graft.artifact.dir").isEmpty)
       System.setProperty("graft.artifact.dir", "/tmp/graft_bench_artifacts")
     // the session first: building it configures log4j2, whose default
-    // configuration would drop the gate's warnings below
+    // configuration would drop the load warnings below
     val spark = GraftSession("graft-bench")
-    // Pre-bench load gate (three rounds of co-tenant-inflated committed
-    // artifacts): a timing run that starts under external load measures
-    // the neighbors, not the engine. Wait (up to a deadline) for the box
-    // to quiesce, then RECORD the loadavg actually seen at start in both
-    // the headline line and the detail file, so a reader can tell a clean
-    // measurement from a contended one without re-running anything.
-    // NaN = /proc/loadavg unreadable (distinct from a LOW load — a sentinel
-    // like -1.0 would silently pass the gate and read as a clean run in the
-    // committed artifact; NaN fails every > comparison, so an unreadable
-    // gauge neither blocks the bench nor masquerades as quiescence, and is
-    // emitted as JSON null below).
+    // Load stamps (three rounds of co-tenant-inflated committed
+    // artifacts): a timing run under external load measures the
+    // neighbors, not the engine. RECORD the loadavg seen at start and end
+    // in both the headline line and the detail file, so a reader can tell
+    // a clean measurement from a contended one without re-running
+    // anything. No wait for a lower load: a run's own load outlives it,
+    // so a wait would gate each back-to-back run on its predecessor.
+    // NaN = /proc/loadavg unreadable (distinct from a LOW
+    // load — a sentinel like -1.0 would read as a clean run in the
+    // committed artifact; NaN fails every > comparison and is emitted as
+    // JSON null below).
     def loadavg(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString
         .split("\\s+")(0).toDouble
@@ -41,24 +40,12 @@ object Bench {
     def loadJson(v: Double): String =
       if (v.isNaN) "null" else BigDecimal(v)
         .setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    val gateT0 = System.nanoTime()
-    def gateRemainingSec(): Double =
-      LoadGateWaitSec - (System.nanoTime() - gateT0) / 1e9
-    if (loadavg().isNaN)
-      logger.warn("[bench] /proc/loadavg unreadable — " +
-        "no quiescence gate possible; loads recorded as null")
-    while (loadavg() > LoadGate && gateRemainingSec() > 0) {
-      logger.warn(
-        f"[bench] loadavg ${loadavg()}%.2f > gate $LoadGate%.1f — waiting")
-      // clamp to the remaining deadline so the loop cannot overshoot it
-      Thread.sleep(math.max(1000L,
-        math.min(30000L, (gateRemainingSec() * 1000).toLong)))
-    }
     val startLoad = loadavg()
+    if (startLoad.isNaN)
+      logger.warn("[bench] /proc/loadavg unreadable - loads recorded as null")
     if (startLoad > LoadGate)
-      logger.warn(f"[bench] benching under load " +
-        f"$startLoad%.2f (gate $LoadGate%.1f, deadline ${LoadGateWaitSec}s " +
-        "expired) — times will carry co-tenant inflation")
+      logger.warn(f"[bench] benching under load $startLoad%.2f " +
+        f"(gate $LoadGate%.1f) - times will carry co-tenant inflation")
     // Bench-live marker: dev/sweep_overlap.sh (and any other timed
     // co-tenant) refuses to start while this file names a live PID —
     // round-12's committed bench recorded end_load 13.83 because the sf10
@@ -162,14 +149,14 @@ object Bench {
           println(s"""{"metric":"family","family":"$family","value":${fmt(famTotal)},"unit":"sec"$part,"queries":$qs}""")
         }
       }
-    // End-of-run load: the start gate alone cannot see a co-tenant that
+    // End-of-run load: the start stamp alone cannot see a co-tenant that
     // arrived mid-bench (round-12: start 1.64, end 13.83 — a sweep launched
     // under the bench's tail). Record it in the HEADLINE too and warn, so
     // the committed artifact carries both sides of the window.
     val endLoad = loadavg()
     if (endLoad > LoadGate)
       logger.warn(f"[bench] loadavg $endLoad%.2f > gate " +
-        f"$LoadGate%.1f at bench END — a co-tenant overlapped the run; " +
+        f"$LoadGate%.1f at bench END - a co-tenant overlapped the run; " +
         "treat the slowest-family times as suspect")
     // the minimal headline line LAST: survives even a one-line tail budget
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$RUNS,"n_queries":${results.size},"failed":$failed,"load":${loadJson(startLoad)},"end_load":${loadJson(endLoad)},"sf":"$sfDir"}""")

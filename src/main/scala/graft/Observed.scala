@@ -26,7 +26,7 @@ object Observed {
     val out = observed.localCheckpoint(true)
     val row = observed.queryExecution.observedMetrics.getOrElse(metric, {
       missCount.incrementAndGet()
-      logger.warn(s"[graft] observed-metric miss: $metric — " +
+      logger.warn(s"[graft] observed-metric miss: $metric - " +
         "aggregating the checkpointed frame instead")
       out.agg(aggs.head, aggs.tail: _*).collect()(0)
     })

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Distributed as-of (point-in-time) join — for every left row, the payload
   * of the LATEST right row with `rightTs <= leftTs` under the same key
@@ -58,7 +59,7 @@ object AsOfJoin {
           unix_micros(col(s"__m.$rightTs")) <= tol, col("__m")))
       case None => matched
     }
-    gated.select(left.columns.map(col) ++
-      (rightTs +: payload).map(c => col(s"__m.$c").as(c + suffix)): _*)
+    gated.select(ArraySeq.unsafeWrapArray(left.columns.map(col) ++
+      (rightTs +: payload).map(c => col(s"__m.$c").as(c + suffix))): _*)
   }
 }

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Salted equi-join for skewed key distributions.
   *
@@ -31,7 +32,7 @@ object SkewJoin {
     require(r > 0, "salt fan-out must be positive")
     require(keys.nonEmpty, "salted join requires equality keys")
     val lsalt = left.withColumn("__salt",
-      pmod(xxhash64(left.columns.map(col): _*), lit(r.toLong)))
+      pmod(xxhash64(ArraySeq.unsafeWrapArray(left.columns.map(col)): _*), lit(r.toLong)))
     val rsalt = right.withColumn("__salt",
       explode(sequence(lit(0L), lit(r.toLong - 1))))
     lsalt.join(rsalt, keys :+ "__salt").drop("__salt")

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.queries.Tables
 import graft.text.TextOps
 
 /** Deduplication operators for training-data pipelines, each designed
@@ -22,6 +23,9 @@ import graft.text.TextOps
   *
   * All hash material is md5 (identical in Spark and DuckDB), so every
   * operator has an exact oracle twin.
+  *
+  * Persisted and checkpointed intermediates follow the one cache contract
+  * written down on [[FrameStore]].
   */
 object Dedup {
 
@@ -35,27 +39,12 @@ object Dedup {
   val MinhashK = 16
   val LshBands = 4 // 4 bands × 4 rows
 
-  /** Spread a narrow input across the cluster when the source has fewer
-    * partitions than cores: the tokenize→shingle→digest stage is ~100× the
-    * scan cost, and a single small parquet file would otherwise pin it to
-    * one task (shuffling the raw docs once is far cheaper than running the
-    * digest stage serially). At real scale the input has >> cores
-    * partitions and this is a no-op — the body is never shuffled there. */
-  private def spread(docs: DataFrame): DataFrame = {
-    val target = docs.sparkSession.sparkContext.defaultParallelism
-    // toRdd, not .rdd: the partition count only needs the physical plan;
-    // .rdd would additionally build the row-deserializing conversion RDD
-    // on every invocation
-    val parts = docs.queryExecution.toRdd.getNumPartitions
-    if (parts < target) docs.repartition(target) else docs
-  }
-
   /** Per-doc exploded distinct shingles: (doc_id, shingle), via the fused
     * codegen'd [[graft.functions.WordShinglesExpr]] (identical semantics to
     * the composable TextOps.shingles form — see its scaladoc for why the
     * HOF route was 8× slower even with materialized tokens). */
   def shingled(docsRaw: DataFrame, n: Int = 3): DataFrame = {
-    val docs = spread(docsRaw)
+    val docs = Tables.spread(docsRaw)
     if (n == 3) {
       graft.functions.GraftFunctions.install(docs.sparkSession)
       docs.select(col("doc_id"),
@@ -167,76 +156,40 @@ object Dedup {
       maxBucket: Int = DefaultMaxBucket): DataFrame =
     lshFromSignatures(minhashSignatures(docs), maxBucket)
 
-  /** Shingles restricted to document frequency ≤ maxDf. At scale this is
-    * THE lever for exact-Jaccard passes: ubiquitous shingles contribute
-    * quadratically to the equi-join but almost nothing to discrimination —
-    * dropping them bounds join fan-out by maxDf per shingle while near-dup
-    * pairs (whose shared shingles are rare by definition) keep their
-    * overlap. */
-  def rareShingled(docs: DataFrame, maxDf: Int, n: Int = 3): DataFrame =
-    rareShingledWithCaches(docs, maxDf, n)._1
+  /** Exact n-gram Jaccard over all colliding pairs (shingle equi-join).
+    * `threshold` keeps only near-dups. Persists the shingle digest frame. */
+  def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame =
+    jaccardOverShingles(shingled(docs), threshold)
 
-  /** The document-frequency cut is a count over the shingle partition —
+  /** Jaccard over the shingles of document frequency ≤ maxDf — the 100 TB
+    * exact pass. Ubiquitous shingles contribute quadratically to the
+    * equi-join but almost nothing to discrimination; dropping them bounds
+    * join fan-out by maxDf per shingle while near-dup pairs (whose shared
+    * shingles are rare by definition) keep their overlap.
+    *
+    * The document-frequency cut is a count over the shingle partition —
     * one exchange, one pass. The old aggregate + semi-join pair ran the
     * tokenize→shingle DAG into two non-shareable exchanges (partial-agg vs
     * full-row payloads) and needed a persist to avoid recomputing it; the
     * window form has a single consumer chain, so no cache either. Hot
     * shingles land on one sort-spillable window task — the same skew
     * posture the semi-join's probe side had. */
-  private def rareShingledWithCaches(docs: DataFrame, maxDf: Int,
-      n: Int = 3): (DataFrame, Seq[DataFrame]) = {
-    val hW = org.apache.spark.sql.expressions.Window.partitionBy("shingle")
-    (shingled(docs, n)
-      .withColumn("df", count(lit(1)).over(hW))
-      .filter(col("df") <= maxDf).drop("df"), Seq.empty)
-  }
-
-  /** Exact n-gram Jaccard over all colliding pairs (shingle equi-join).
-    * `threshold` keeps only near-dups. Session-caches the shingle digest
-    * frame — long-lived callers should use [[jaccardPairsManaged]]. */
-  def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame =
-    jaccardOverShingles(shingled(docs), threshold)._1
-
-  /** [[jaccardPairs]] with an [[graft.CachedResult]] handle that releases
-    * the cached shingle frame on close(). */
-  def jaccardPairsManaged(docs: DataFrame, threshold: Double): graft.CachedResult = {
-    val (df, cached) = jaccardOverShingles(shingled(docs), threshold)
-    new graft.CachedResult(df, cached)
-  }
-
-  /** Jaccard over the DF-filtered shingle set — the 100 TB exact pass. */
   def jaccardPairsRare(docs: DataFrame, threshold: Double, maxDf: Int): DataFrame = {
-    val (rare, _) = rareShingledWithCaches(docs, maxDf)
-    jaccardOverShingles(rare, threshold)._1
-  }
-
-  /** [[jaccardPairsRare]] with a cache-releasing handle. */
-  def jaccardPairsRareManaged(docs: DataFrame, threshold: Double,
-                              maxDf: Int): graft.CachedResult = {
-    val (rare, rareCaches) = rareShingledWithCaches(docs, maxDf)
-    val (df, cached) = jaccardOverShingles(rare, threshold)
-    new graft.CachedResult(df, rareCaches ++ cached)
+    val hW = org.apache.spark.sql.expressions.Window.partitionBy("shingle")
+    val rare = shingled(docs)
+      .withColumn("df", count(lit(1)).over(hW))
+      .filter(col("df") <= maxDf).drop("df")
+    jaccardOverShingles(rare, threshold)
   }
 
   /** Asymmetric containment: |A∩B| / |A| (and /|B|) over shingle sets —
     * catches subset/quote relationships Jaccard misses (a doc fully
     * contained in a much larger one has low Jaccard but containment ≈ 1).
     * Same digest equi-join skeleton as [[jaccardPairs]]; a pair is kept
-    * when EITHER direction clears `threshold`. Session-caches the digest
-    * frame — long-lived callers use [[containmentPairsManaged]]. */
-  def containmentPairs(docs: DataFrame, threshold: Double): DataFrame =
-    containmentPairsWithCaches(docs, threshold)._1
-
-  /** [[containmentPairs]] with a cache-releasing handle. */
-  def containmentPairsManaged(docs: DataFrame,
-                              threshold: Double): graft.CachedResult = {
-    val (df, cached) = containmentPairsWithCaches(docs, threshold)
-    new graft.CachedResult(df, cached)
-  }
-
-  private def containmentPairsWithCaches(docs: DataFrame,
-      threshold: Double): (DataFrame, Seq[DataFrame]) = {
-    val (sh, caches) = digested(shingled(docs))
+    * when EITHER direction clears `threshold`. Persists the digest
+    * frame. */
+  def containmentPairs(docs: DataFrame, threshold: Double): DataFrame = {
+    val sh = digested(shingled(docs))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val a = sh.as("a"); val b = sh.as("b")
     a.join(b, col("a.shingle") === col("b.shingle") &&
@@ -250,19 +203,16 @@ object Dedup {
       .filter(col("containment_a") >= threshold ||
         col("containment_b") >= threshold)
       .select("d1", "d2", "common", "containment_a", "containment_b")
-      .orderBy("d1", "d2") -> caches
+      .orderBy("d1", "d2")
   }
 
-  /** (digest frame persisted, caches) — shared by the pair generators. */
-  private def digested(shRaw: DataFrame): (DataFrame, Seq[DataFrame]) = {
-    val sh = shRaw
-      .select(col("doc_id"), unhex(md5(col("shingle"))).as("shingle"))
+  /** The persisted digest frame shared by the pair generators. */
+  private def digested(shRaw: DataFrame): DataFrame =
+    shRaw.select(col("doc_id"), unhex(md5(col("shingle"))).as("shingle"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (sh, Seq(sh))
-  }
 
   private def jaccardOverShingles(shRaw: DataFrame,
-      threshold: Double): (DataFrame, Seq[DataFrame]) = {
+      threshold: Double): DataFrame = {
     // Join key: the 16-byte md5 digest instead of the raw shingle string —
     // a fixed-width binary exchange with cheaper comparisons (measured 3.5×
     // on the self-join at sf0.1, and the gap widens with shingle length).
@@ -275,14 +225,14 @@ object Dedup {
     // filter)→digest DAG isn't re-executed per branch. persist (not
     // localCheckpoint): blocks are evictable under memory pressure with
     // recompute fallback, and no job runs at construction time.
-    val (sh, caches) = digested(shRaw)
+    val sh = digested(shRaw)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val a = sh.as("a"); val b = sh.as("b")
     val common = a.join(b, col("a.shingle") === col("b.shingle") &&
         col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("common"))
-    val result = common
+    common
       .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("n", "na"), "d1")
       .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n", "nb"), "d2")
       // raw double ratio of exact integers — bit-identical across engines;
@@ -292,7 +242,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("d1", "d2", "common", "jaccard")
       .orderBy("d1", "d2")
-    (result, caches)
   }
 
   /** MinHash+LSH near-dup pipeline: LSH candidates verified with exact
@@ -304,20 +253,8 @@ object Dedup {
     * re-tokenizes). `cand` is persisted too — it is consumed by both union
     * branches of the candidate-id frame, and without the cache each branch
     * would re-execute the whole LSH DAG (the round-1 41 s plan ran the
-    * shingle explode ≥3×; this one runs it once). Callers that loop should
-    * `spark.catalog.clearCache()` between invocations. */
-  def nearDuplicates(docs: DataFrame, threshold: Double): DataFrame =
-    nearDuplicatesWithCaches(docs, threshold)._1
-
-  /** [[nearDuplicates]] with a handle releasing all three persisted frames
-    * (shingles, candidates, shingle digests). */
-  def nearDuplicatesManaged(docs: DataFrame, threshold: Double): graft.CachedResult = {
-    val (df, cached) = nearDuplicatesWithCaches(docs, threshold)
-    new graft.CachedResult(df, cached)
-  }
-
-  private def nearDuplicatesWithCaches(docs: DataFrame,
-      threshold: Double): (DataFrame, Seq[DataFrame]) = {
+    * shingle explode ≥3×; this one runs it once). */
+  def nearDuplicates(docs: DataFrame, threshold: Double): DataFrame = {
     val sh = shingled(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // pairs arrive DEDUPLICATED — see lshFromSignatures' scaladoc for the
@@ -326,9 +263,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val candIds = cand.select(col("d1").as("doc_id"))
       .union(cand.select(col("d2").as("doc_id"))).distinct()
-    val (df, inner) =
-      jaccardOverShingles(sh.join(candIds, Seq("doc_id"), "left_semi"), threshold)
-    (df, Seq(sh, cand) ++ inner)
+    jaccardOverShingles(sh.join(candIds, Seq("doc_id"), "left_semi"), threshold)
   }
 
   /** Consolidate near-dup PAIRS into clusters: connected components by
@@ -342,22 +277,10 @@ object Dedup {
     * (doc_id, rep_id = min doc_id of the component) for every doc that
     * appears in a pair — downstream keeps rep_id rows and drops the rest.
     *
-    * The returned frame reads the final iteration's persisted labels
-    * (unpersisting them would force a recompute through the whole iteration
-    * lineage); one-shot harnesses end with `clearCache()`, long-lived
-    * callers use [[connectedComponentsManaged]]. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame =
-    connectedComponentsWithCaches(pairs, maxIter)._1
-
-  /** [[connectedComponents]] with a cache-releasing handle. */
-  def connectedComponentsManaged(pairs: DataFrame,
-                                 maxIter: Int = 20): graft.CachedResult = {
-    val (df, cached) = connectedComponentsWithCaches(pairs, maxIter)
-    new graft.CachedResult(df, cached)
-  }
-
-  private def connectedComponentsWithCaches(pairs: DataFrame,
-      maxIter: Int): (DataFrame, Seq[DataFrame]) = {
+    * The returned frame reads the final iteration's checkpointed labels;
+    * every round's checkpoint blocks are freed by the ContextCleaner once
+    * the round's frame is unreachable. */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // localCheckpoint the pair input FIRST, not persist: persist caches the
     // PHYSICAL result but the LOGICAL plan still carries the whole
     // LSH+verify DAG, the symmetric union then doubles it, and every round
@@ -377,7 +300,7 @@ object Dedup {
     var iter = 0
     while (changed > 0 && iter < maxIter) {
       // ONE plan, ONE eager materialization per round. `labels` is already
-      // a materialized leaf (persist in round 0, localCheckpoint after), so
+      // a materialized leaf (a localCheckpoint in every round), so
       // it can appear on three sides — neighbor join, step, jump — without
       // re-executing anything.
       val neighborMin = edges
@@ -391,8 +314,9 @@ object Dedup {
       // checkpoint. The eager localCheckpoint (NOT persist) truncates
       // lineage: labels appears several times per round, and without
       // truncation the LOGICAL plan doubles per round and Catalyst
-      // re-analysis goes exponential (blocks are reclaimed by the context
-      // cleaner when the previous round's frame goes out of scope).
+      // re-analysis goes exponential. The previous round's blocks are freed
+      // only by the ContextCleaner, once that frame is unreachable —
+      // `unpersist` does not touch checkpoint blocks.
       val stepped = labels.join(neighborMin, Seq("a"), "left")
         .select(col("a"),
           least(col("rep"), coalesce(col("nmin"), col("rep"))).as("t"),
@@ -408,7 +332,6 @@ object Dedup {
       val (next, row) = graft.Observed.checkpoint(jumped, s"cc_changed_$iter",
         sum(when(col("rep") =!= col("old"), 1L).otherwise(0L)).as("changed"))
       changed = if (row.isNullAt(0)) 0L else row.getLong(0)
-      labels.unpersist(blocking = false)
       labels = next
       iter += 1
     }
@@ -416,9 +339,8 @@ object Dedup {
     // are NOT components (ADVICE r3)
     require(changed == 0,
       s"connected components did not converge in $maxIter iterations")
-    val out = labels.select(col("a").as("doc_id"), col("rep").as("rep_id"))
+    labels.select(col("a").as("doc_id"), col("rep").as("rep_id"))
       .orderBy("doc_id")
-    (out, Seq(p, edges, labels))
   }
 
   /** Iterations the last [[connectedComponentsStars]] call took. */
@@ -452,20 +374,9 @@ object Dedup {
     *
     * Same contract as [[connectedComponents]]: returns (doc_id, rep_id =
     * component-min doc_id) for every doc that appears in a pair. */
-  def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 50): DataFrame =
-    connectedComponentsStarsWithCaches(pairs, maxIter)._1
-
-  /** [[connectedComponentsStars]] with a cache-releasing handle. */
-  def connectedComponentsStarsManaged(pairs: DataFrame,
-                                      maxIter: Int = 50): graft.CachedResult = {
-    val (df, cached) = connectedComponentsStarsWithCaches(pairs, maxIter)
-    new graft.CachedResult(df, cached)
-  }
-
-  private def connectedComponentsStarsWithCaches(pairs: DataFrame,
-      maxIter: Int): (DataFrame, Seq[DataFrame]) = {
+  def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     // one analysis + one execution of the (possibly giant) input DAG — see
-    // connectedComponentsWithCaches for why checkpoint, not persist
+    // connectedComponents for why checkpoint, not persist
     val p = pairs.filter(col("d1") =!= col("d2")).localCheckpoint(true)
     var edges = p.select(greatest(col("d1"), col("d2")).as("hi"),
         least(col("d1"), col("d2")).as("lo"))
@@ -532,12 +443,11 @@ object Dedup {
     // has exactly one edge, to the component min (min() is a defensive
     // no-op there); representatives have none and map to themselves
     val stars = edges.groupBy("hi").agg(min(col("lo")).as("rep"))
-    val out = nodes
+    nodes
       .join(stars.withColumnRenamed("hi", "v"), Seq("v"), "left")
       .select(col("v").as("doc_id"),
         coalesce(col("rep"), col("v")).as("rep_id"))
       .orderBy("doc_id")
-    (out, Seq(p, edges, nodes))
   }
 
   val SimhashBits = 16
@@ -546,7 +456,7 @@ object Dedup {
     * high bit of hex digit j of md5(token) is set. Output is a '0'/'1'
     * string, engine-exact. */
   def simhash(docsRaw: DataFrame): DataFrame = {
-    val docs = spread(docsRaw)
+    val docs = Tables.spread(docsRaw)
     val toks = docs.select(col("doc_id"),
       explode(TextOps.tokens(col("text"))).as("w"))
       .withColumn("h", md5(col("w")))
@@ -567,7 +477,7 @@ object Dedup {
     * aggregation; the argmax is an exact struct-min (no window, no
     * second pass). Returns (fp, survivor_id, n_docs) per group. */
   def canonicalByFingerprint(docsRaw: DataFrame): DataFrame =
-    spread(docsRaw).localCheckpoint(true)
+    Tables.spread(docsRaw).localCheckpoint(true)
       .select(col("doc_id"), col("text"),
         TextOps.tokens(col("text")).as("toks"))
       .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"),
@@ -584,7 +494,7 @@ object Dedup {
     * which copy of each near-duplicate family ships in the training set.
     * Same single-aggregation struct-min as [[canonicalByFingerprint]]. */
   def survivors(docsRaw: DataFrame, clusters: DataFrame): DataFrame =
-    spread(docsRaw).select(col("doc_id"), col("text"),
+    Tables.spread(docsRaw).select(col("doc_id"), col("text"),
         TextOps.tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         TextOps.qualityScore(col("text"), col("toks")).as("q"))
@@ -598,13 +508,9 @@ object Dedup {
   /** All artifacts of one [[Dedup.pipeline]] run. `pairs` and the final
     * cluster labels are materialized leaves, so any subset of the four
     * frames can be consumed (in any order, several times) without
-    * re-running the shingle→LSH→verify→CC chain. close() releases every
-    * cached block. */
+    * re-running the shingle→LSH→verify→CC chain. */
   final case class PipelineResult(pairs: DataFrame, clusters: DataFrame,
-      survivors: DataFrame, verdict: DataFrame,
-      private[dedup] val caches: Seq[DataFrame]) {
-    def close(): Unit = caches.foreach(_.unpersist(false))
-  }
+      survivors: DataFrame, verdict: DataFrame)
 
   /** The whole near-dup pipeline off ONE shingle materialization:
     * shingles → minhash signatures → LSH candidates → exact-Jaccard
@@ -622,18 +528,16 @@ object Dedup {
     * per-document outcome: (doc_id, rep_id, survivor_id, n_docs, keep).
     */
   def pipeline(docs: DataFrame, threshold: Double): PipelineResult = {
-    val (pairsRaw, caches) = nearDuplicatesWithCaches(docs, threshold)
     // one materialization of the verified pairs; CC's own input checkpoint
     // then just re-snapshots these blocks instead of re-running the verify
-    val pairs = pairsRaw.localCheckpoint(true)
-    val (clusters, ccCaches) = connectedComponentsWithCaches(pairs, 20)
+    val pairs = nearDuplicates(docs, threshold).localCheckpoint(true)
+    val clusters = connectedComponents(pairs, 20)
     val surv = survivors(docs, clusters)
     val verdict = clusters.join(surv, "rep_id")
       .select(col("doc_id"), col("rep_id"), col("survivor_id"),
         col("n_docs"), (col("doc_id") === col("survivor_id")).as("keep"))
       .orderBy("doc_id")
-    PipelineResult(pairs, clusters, surv, verdict,
-      (caches :+ pairs) ++ ccCaches)
+    PipelineResult(pairs, clusters, surv, verdict)
   }
 
   /** Leak-safe train/val/test split from a PRECOMPUTED near-dup clusters
@@ -685,27 +589,13 @@ object Dedup {
     * verdict ∈ keep | exact_dup | near_dup); matches are the smallest
     * matching existing doc_id, exact taking precedence in the verdict.
     *
-    * Persists three intermediate frames for the session (both shingle
-    * frames feed two plan branches each; the candidate set feeds three).
-    * One-shot callers that end with `spark.catalog.clearCache()` may use
-    * this form; the documented per-batch production-ingest use MUST use
-    * [[incrementalFlagsManaged]] so repeated batches don't accumulate
-    * session-lifetime cached blocks.
+    * Persists the corpus shingle frame plus [[IncrementalIndex.probe]]'s
+    * frames (each feeds two or more plan branches). The per-batch ingest
+    * form is [[graft.streaming.IngestDedup.processBatch]], which releases
+    * its probe frames after every batch.
     */
   def incrementalFlags(existing: DataFrame, increment: DataFrame,
-                       threshold: Double): DataFrame =
-    incrementalFlagsWithCaches(existing, increment, threshold)._1
-
-  /** [[incrementalFlags]] with a [[graft.CachedResult]] handle that
-    * releases the cached shingle + candidate frames on close(). */
-  def incrementalFlagsManaged(existing: DataFrame, increment: DataFrame,
-                              threshold: Double): graft.CachedResult = {
-    val (df, cached) = incrementalFlagsWithCaches(existing, increment, threshold)
-    new graft.CachedResult(df, cached)
-  }
-
-  private def incrementalFlagsWithCaches(existing: DataFrame,
-      increment: DataFrame, threshold: Double): (DataFrame, Seq[DataFrame]) = {
+                       threshold: Double): DataFrame = {
     // the one-shot form: derive the corpus-side index inline (the corpus
     // shingle frame persisted — it feeds both the band keys and the
     // verify digests) and run the SAME probe the materialized-index path
@@ -720,8 +610,7 @@ object Dedup {
         .withColumnRenamed("doc_id", "ex_id"),
       shingles = shEx.select(col("doc_id").as("ex_id"),
         unhex(md5(col("shingle"))).as("d")))
-    val (out, caches) = IncrementalIndex.probeWithCaches(increment, idx, threshold)
-    (out, caches :+ shEx)
+    IncrementalIndex.probe(increment, idx, threshold)
   }
 
   /** n-gram decontamination: for each corpus doc, the number of distinct

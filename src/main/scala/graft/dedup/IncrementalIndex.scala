@@ -77,20 +77,15 @@ object IncrementalIndex {
     * exact_match, near_match, verdict ∈ keep | exact_dup | near_dup).
     * Only the increment is shingled; the corpus side is three index
     * probes (digest equi-join, band-bucket join, candidate-restricted
-    * digest join). Persists the increment's shingle frame and the
-    * candidate set — use [[probeManaged]] from long-lived callers. */
+    * digest join). Persists the increment's shingle frame, the candidate
+    * set and both verify digest frames. */
   def probe(increment: DataFrame, idx: Index, threshold: Double): DataFrame =
     probeWithCaches(increment, idx, threshold)._1
 
-  /** [[probe]] with a [[graft.CachedResult]] releasing the increment-side
-    * caches on close() — the per-micro-batch form. */
-  def probeManaged(increment: DataFrame, idx: Index,
-                   threshold: Double): graft.CachedResult = {
-    val (df, cached) = probeWithCaches(increment, idx, threshold)
-    new graft.CachedResult(df, cached)
-  }
-
-  private[dedup] def probeWithCaches(increment: DataFrame, idx: Index,
+  /** [[probe]] plus the four frames it persists, for the per-micro-batch
+    * caller ([[graft.streaming.IngestDedup.processBatch]]) that releases
+    * them after each batch. */
+  private[graft] def probeWithCaches(increment: DataFrame, idx: Index,
       threshold: Double): (DataFrame, Seq[DataFrame]) = {
     val exact = increment.select(col("doc_id"), md5(col("text")).as("h"))
       .join(idx.digests, Seq("h"), "left")

@@ -478,7 +478,7 @@ object Multimodal {
 
   /** Write `df` to `artifactDir/name` (overwrite) and return the
     * re-read materialized table — the filesystem twin of
-    * [[graft.dedup.ClusterStore]]: downstream consumers (the Spark pair
+    * [[graft.dedup.FrameStore]]: downstream consumers (the Spark pair
     * join AND the DuckDB oracle) both feed from the same published leaf. */
   def publishFingerprints(df: DataFrame, name: String): DataFrame = {
     val path = s"$artifactDir/$name"
@@ -528,7 +528,7 @@ object Multimodal {
   def nearDupImages(hashes: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming <= 3,
       s"4-band/16-bit banding guarantees full recall only to hamming 3; " +
-        s"got $maxHamming — add bands before raising the radius")
+        s"got $maxHamming - add bands before raising the radius")
     val bands = hashes.select(col("media_id"), col("dhash"),
       explode(array((0 until 4).map { b =>
         struct(lit(b).as("band"),

@@ -28,31 +28,25 @@ import graft.sql.CanonicalQueries
   */
 object Domain {
   /** The driver parquet is one small file per table, so the scan is ONE
-    * input partition and the parse→decode chain would run on a single core.
-    * A real deployment reads thousands of files (or a Kafka topic with many
-    * partitions); this round-robin repartition stands in for that layout so
-    * the decode parallelizes — the shuffle payload is just the compact
-    * envelope strings. */
-  private def spread(env: org.apache.spark.sql.Dataset[String]) =
-    env.repartition(env.sparkSession.sparkContext.defaultParallelism)
-
-  /** Spread the EVENTS scan, before envelope derivation: the envelope JSON
-    * build itself (an md5 + string assembly per row) pipelined onto the
-    * single-split scan and ran 1-wide ahead of the old post-envelope
-    * repartition (r14 profile: a 0.78 s 1-task stage under
-    * etl_transfer_volume). The exchange carries the raw event columns —
-    * same compact order of bytes as the envelope strings — and at real
-    * scale the scan has >= cores splits, so this is a no-op there. The
-    * post-envelope [[spread]] call stays for that case and no-ops here. */
-  private def spreadEvents(s: SparkSession, dir: String): DataFrame =
+    * input partition and the envelope build → parse → decode chain would
+    * run on a single core. A real deployment reads thousands of files (or
+    * a Kafka topic with many partitions); spreading the EVENTS scan, before
+    * envelope derivation, stands in for that layout so the whole chain
+    * parallelizes (r14 profile: the envelope JSON build alone was a 0.78 s
+    * 1-task stage under etl_transfer_volume). The exchange carries the raw
+    * event columns — the same compact order of bytes as the envelope
+    * strings — and at real scale the scan has >= cores splits, so this is
+    * a no-op there. The envelopes keep the spread scan's partitioning, so
+    * nothing after it repartitions. */
+  private def scanEvents(s: SparkSession, dir: String): DataFrame =
     Tables.spread(Tables.events(s, dir))
 
   private def transfers(s: SparkSession, dir: String): DataFrame =
     TokenTransferDecoder.decode(
-      Ingest.parseRaw(spread(EventEnvelopes.transferEnvelopes(spreadEvents(s, dir)))))
+      Ingest.parseRaw(EventEnvelopes.transferEnvelopes(scanEvents(s, dir))))
 
   private def txFrame(s: SparkSession, dir: String): DataFrame = {
-    val env = Ingest.parseRaw(spread(EventEnvelopes.txEnvelopes(spreadEvents(s, dir))))
+    val env = Ingest.parseRaw(EventEnvelopes.txEnvelopes(scanEvents(s, dir)))
     env.filter(col("event_type") === "transaction")
       .select(col("payload.*"), col("block_number"),
         col("block_timestamp"), col("chain_id"))
@@ -71,7 +65,7 @@ object Domain {
 
   private def swaps(s: SparkSession, dir: String): DataFrame =
     DeFiSwapParser.parse(
-      Ingest.parseRaw(spread(EventEnvelopes.swapEnvelopes(spreadEvents(s, dir)))))
+      Ingest.parseRaw(EventEnvelopes.swapEnvelopes(scanEvents(s, dir))))
 
   // -------------------------------------------------- oracle SQL building
   // DuckDB twins of the EventEnvelopes derivations. Every formula below is

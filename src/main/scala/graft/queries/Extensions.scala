@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, FrameStore}
 import graft.mm.Multimodal
 import graft.sim.VectorOps
 import graft.text.TextOps
@@ -737,7 +737,7 @@ object Extensions {
     val art = Dedup.pipeline(Tables.documents(s, dir), JaccardThreshold)
     // publish the clusters leaf for downstream consumers (q_leak_split,
     // pipeline_corpus) — the production dedup-then-consume order
-    graft.dedup.ClusterStore.publish(s, dir, JaccardThreshold, art.clusters)
+    FrameStore.getOrCompute(s, s"clusters|$dir|$JaccardThreshold")(art.clusters)
     art.verdict
   }
 
@@ -1766,10 +1766,9 @@ object Extensions {
     * fallback ([[graft.dedup.Dedup.leakSplit]]) produces identical output. */
   private val leakSplit: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
-    val clusters = graft.dedup.ClusterStore
-      .getOrCompute(s, dir, JaccardThreshold) {
-        Dedup.pipeline(docs, JaccardThreshold).clusters
-      }
+    val clusters = FrameStore.getOrCompute(s, s"clusters|$dir|$JaccardThreshold") {
+      Dedup.pipeline(docs, JaccardThreshold).clusters
+    }
     Dedup.leakSplitFromClusters(docs, clusters)
       .orderBy("doc_id")
   }
@@ -1795,7 +1794,7 @@ object Extensions {
   /** The composed end-to-end "curate a corpus" entry — the proof that the
     * artifact-reuse pattern composes: ONE registry query chaining
     *
-    *   near-dup clusters (fetched from [[graft.dedup.ClusterStore]], so a
+    *   near-dup clusters (fetched from [[graft.dedup.FrameStore]], so a
     *   session that already ran `dedup_pipeline` pays nothing)
     *   → near-dup survivor selection ([[Dedup.survivors]])
     *   → curation verdicts ([[curationFrame]], the `text_curation` chain)
@@ -1811,10 +1810,9 @@ object Extensions {
     * novelty twins, md5 split, windowed packing) in one statement. */
   private val pipelineCorpus: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
-    val clusters = graft.dedup.ClusterStore
-      .getOrCompute(s, dir, JaccardThreshold) {
-        Dedup.pipeline(docs, JaccardThreshold).clusters
-      }
+    val clusters = FrameStore.getOrCompute(s, s"clusters|$dir|$JaccardThreshold") {
+      Dedup.pipeline(docs, JaccardThreshold).clusters
+    }
     val losers = clusters.join(Dedup.survivors(docs, clusters), "rep_id")
       .filter(col("doc_id") =!= col("survivor_id")).select("doc_id")
     val split = Dedup.leakSplitFromClusters(docs, clusters)
@@ -2308,8 +2306,8 @@ object Extensions {
       System.err.println(
         s"[graft] WARNING: dedup_fuzzy block with $maxBlock distinct prefixes " +
           s"(cap $cap): the all-pairs DP inside it is quadratic. Use " +
-          "dedup_fuzzy_bounded (block-capped, O(n·w)) above ~1M rows per " +
-          "block key — see DEPLOY.md.")
+          "dedup_fuzzy_bounded (block-capped, O(n*w)) above ~1M rows per " +
+          "block key - see DEPLOY.md.")
     maxBlock
   }
 

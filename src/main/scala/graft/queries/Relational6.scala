@@ -1135,8 +1135,8 @@ object Relational6 {
     import org.apache.spark.sql.expressions.Window
     import graft.dedup.FrameStore
     // Stage artifacts (shingle counts, passage graph, LPA labels) are
-    // published to the session FrameStore — the ClusterStore discipline
-    // that took q_leak_split from 3.66 s to 0.25 s: a production corpus
+    // published to the session FrameStore — the discipline that took
+    // q_leak_split from 3.66 s to 0.25 s: a production corpus
     // builds the passage graph ONCE and every labeling/reporting consumer
     // (including re-runs of this entry) reads the materialized leaf.
     // Results are identical artifact-fed or inline (PipelineReuseSpec).

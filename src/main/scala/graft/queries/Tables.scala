@@ -15,8 +15,7 @@ object Tables {
   /** Round-robin spread of a (projected-narrow) frame across the session's
     * cores when the scan has fewer partitions — the driver fixtures are
     * single-row-group parquet files, so a scan is ONE input split and any
-    * CPU-dense stage pipelined onto it runs on one core (the
-    * [[graft.dedup.Dedup]]/Domain spread pattern, shared). Project to the
+    * CPU-dense stage pipelined onto it runs on one core. Project to the
     * needed columns BEFORE spreading so the exchange carries only them
     * (guide §2.3). At real scale inputs have >= cores splits and this is a
     * no-op — nothing is shuffled there. */

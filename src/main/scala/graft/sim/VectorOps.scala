@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -94,24 +95,18 @@ object VectorOps {
     * per-block rank is a sort (O(n log n), spillable via Spark's window
     * sorter), never a pair explosion. Missing a straddling pair only
     * means keeping an extra document — the conservative direction for
-    * dedup. */
-  def cosinePairsBy(emb: DataFrame, threshold: Double,
-                    blockCol: String,
-                    maxBlock: Int = PairBlockCap): DataFrame =
-    cosinePairsByWithCaches(emb, threshold, blockCol, maxBlock)._1
-
-  /** [[cosinePairsBy]] exposing its persisted normed frame for callers
-    * that manage cache lifetime ([[cosinePairsLshManaged]] et al.).
+    * dedup.
+    *
     * `persistNorm = false` skips the norm-frame persist — for callers whose
     * input frame is ALREADY a cached leaf (the LSH bucket frame, the
     * persisted semDedup assignment), where re-deriving the norm per branch
     * is one cheap fold over cached blocks and a second materialization just
     * adds blocks and a stage boundary (measured: emb_lsh_pairs_banded
     * 1.01 s → 1.54 s with the double persist). */
-  private[graft] def cosinePairsByWithCaches(emb: DataFrame, threshold: Double,
+  def cosinePairsBy(emb: DataFrame, threshold: Double,
                     blockCol: String,
                     maxBlock: Int = PairBlockCap,
-                    persistNorm: Boolean = true): (DataFrame, Seq[DataFrame]) = {
+                    persistNorm: Boolean = true): DataFrame = {
     graft.functions.GraftFunctions.install(emb.sparkSession)
     // persisted (by default): the normed frame feeds the occupancy gate plus
     // BOTH sides of the in-block self-join (and, in the hot regime, the
@@ -153,8 +148,7 @@ object VectorOps {
     val counts = withNorm.groupBy(blockCol).agg(count(lit(1)).as("blk_n"))
     val anyHot = !counts.filter(col("blk_n") > maxBlock).isEmpty
     if (!anyHot)
-      return (pairsWithin(withNorm, Seq(blockCol)).orderBy("v1", "v2"),
-        if (persistNorm) Seq(withNorm) else Nil)
+      return pairsWithin(withNorm, Seq(blockCol)).orderBy("v1", "v2")
 
     val sized = withNorm.join(counts, blockCol)
 
@@ -173,8 +167,7 @@ object VectorOps {
       pairsWithin(hot.withColumn("band", band), Seq(blockCol, "band"))
     }.reduce(_.unionByName(_)).dropDuplicates("v1", "v2")
 
-    (exact.unionByName(hotPairs).orderBy("v1", "v2"),
-      if (persistNorm) Seq(withNorm) else Nil)
+    exact.unionByName(hotPairs).orderBy("v1", "v2")
   }
 
   /** SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
@@ -196,13 +189,8 @@ object VectorOps {
     * a cluster — SemDeDup's own recipe grows k ∝ corpus so expected
     * cluster size stays constant, making total pair work linear.
     *
-    * CACHE CONTRACT: persists the assigned frame (MEMORY_AND_DISK,
-    * evictable) for the session and returns no unpersist handle — the
-    * one-shot harness convention where the caller ends with
-    * `spark.catalog.clearCache()`. Long-lived callers invoking this
-    * repeatedly should clearCache between invocations or cache-manage at
-    * the session level, as the managed `*WithCaches` dedup entry points
-    * do for their frames. */
+    * Persists the assigned frame (MEMORY_AND_DISK, evictable) under the
+    * cache contract on [[graft.dedup.FrameStore]]. */
   def semDedup(emb: DataFrame, cents: Seq[(Int, Array[Double])],
                threshold: Double,
                maxBlock: Int = PairBlockCap): DataFrame = {
@@ -214,8 +202,8 @@ object VectorOps {
       .select(col("vec_id"), col("assigned_label").as("cluster"),
         col("embedding"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val prunedIds = cosinePairsByWithCaches(assigned, threshold, "cluster",
-      maxBlock, persistNorm = false)._1
+    val prunedIds = cosinePairsBy(assigned, threshold, "cluster",
+      maxBlock, persistNorm = false)
       .select(col("v2").as("vec_id")).distinct()
     assigned
       .join(prunedIds.withColumn("is_pruned", lit(1)), Seq("vec_id"), "left")
@@ -399,8 +387,7 @@ object VectorOps {
     * bucket occupancy (≈ N/2^planes per bucket under the random-projection
     * mixing), and near neighbors land in the same bucket with the standard
     * SimHash collision probability (1 − θ/π per plane). The bucket frame is
-    * persisted so the bucket projection runs once, not per join branch —
-    * long-lived callers should use [[cosinePairsLshManaged]].
+    * persisted so the bucket projection runs once, not per join branch.
     *
     * Since round 12 the default is CAPPED, not exhaustive: a bucket above
     * `maxBlock` rows (default [[LshBucketPairCap]]) is paired via
@@ -408,18 +395,7 @@ object VectorOps {
     * all-pairs — conservative-direction misses only. Pass
     * `maxBlock = Int.MaxValue` for the old exact-everywhere behavior. */
   def cosinePairsLsh(emb: DataFrame, threshold: Double,
-                     maxBlock: Int = LshBucketPairCap): DataFrame =
-    cosinePairsLshWithCache(emb, threshold, maxBlock)._1
-
-  /** [[cosinePairsLsh]] with a handle releasing the persisted bucket frame. */
-  def cosinePairsLshManaged(emb: DataFrame, threshold: Double,
-      maxBlock: Int = LshBucketPairCap): graft.CachedResult = {
-    val (df, cached) = cosinePairsLshWithCache(emb, threshold, maxBlock)
-    new graft.CachedResult(df, cached)
-  }
-
-  private def cosinePairsLshWithCache(emb: DataFrame, threshold: Double,
-      maxBlock: Int): (DataFrame, Seq[DataFrame]) = {
+                     maxBlock: Int = LshBucketPairCap): DataFrame = {
     graft.functions.GraftFunctions.install(emb.sparkSession)
     val withB = emb
       .select(col("vec_id"), bucketCol(LshPlanes).as("bucket"),
@@ -427,9 +403,7 @@ object VectorOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the pairing discipline (exact ≤ cap, sorted-neighborhood banding
     // above) is cosinePairsBy's, with the LSH bucket as the block key
-    val (pairs, inner) = cosinePairsByWithCaches(withB, threshold, "bucket",
-      maxBlock, persistNorm = false)
-    (pairs, withB +: inner)
+    cosinePairsBy(withB, threshold, "bucket", maxBlock, persistNorm = false)
   }
 
   // ------------------------------------------------------------------ IVF
@@ -478,7 +452,7 @@ object VectorOps {
         lit(-cell).as("negcell"))
     }
     emb.select(col("vec_id"), col("embedding"),
-      (-array_max(array(scored: _*)).getField("negcell")).as("cell"))
+      (-array_max(array(ArraySeq.unsafeWrapArray(scored): _*)).getField("negcell")).as("cell"))
   }
 
   /** IVF ANN top-k: probe the `nprobe` cells whose centroids are closest to
@@ -524,7 +498,7 @@ object VectorOps {
       .take(nprobe).map(_._1)
     val candidates = assignWithCells(emb, cells)
       // the query itself must stay a candidate even if its cell isn't probed
-      .filter(col("cell").isin(probed: _*) || col("vec_id") === queryId)
+      .filter(col("cell").isin(ArraySeq.unsafeWrapArray(probed): _*) || col("vec_id") === queryId)
       .select("vec_id", "embedding")
     topKVsQuery(candidates, qe, k)
   }

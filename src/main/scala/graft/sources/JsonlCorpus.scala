@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
+import scala.collection.immutable.ArraySeq
 
 /** JSONL corpus ingestion with corrupt-record quarantine — the shape web
   * corpora actually arrive in (one JSON document per line, a tail of
@@ -36,7 +37,7 @@ object JsonlCorpus {
         Map("columnNameOfCorruptRecord" -> "_corrupt_record")))
     val good = parsed
       .filter(col("j._corrupt_record").isNull)
-      .select(schema.fieldNames.map(f => col(s"j.$f").as(f)): _*)
+      .select(ArraySeq.unsafeWrapArray(schema.fieldNames.map(f => col(s"j.$f").as(f))): _*)
     val quarantine = parsed
       .filter(col("j._corrupt_record").isNotNull)
       .select(col("line"))

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Batch MERGE (SCD1 upsert): `updates` rows replace target rows sharing
   * the key, unmatched update rows insert — the warehouse write pattern
@@ -22,10 +23,10 @@ object Merge {
   def upsert(target: DataFrame, updates: DataFrame, key: String): DataFrame = {
     val cols = target.columns
     val t = target.as("t")
-    val u = updates.select(cols.map(col): _*).as("u")
+    val u = updates.select(ArraySeq.unsafeWrapArray(cols.map(col)): _*).as("u")
     val takeUpdate = col(s"u.$key").isNotNull
     t.join(u, col(s"t.$key") === col(s"u.$key"), "full_outer")
-      .select(cols.map(c =>
-        when(takeUpdate, col(s"u.$c")).otherwise(col(s"t.$c")).as(c)): _*)
+      .select(ArraySeq.unsafeWrapArray(cols.map(c =>
+        when(takeUpdate, col(s"u.$c")).otherwise(col(s"t.$c")).as(c))): _*)
   }
 }

@@ -82,7 +82,7 @@ object IngestDedup {
                    threshold: Double): Unit = {
     val spark = batch.sparkSession
     val idx = IncrementalIndex.read(spark, idxDir)
-    val handle = IncrementalIndex.probeManaged(batch, idx, threshold)
+    val (probed, cached) = IncrementalIndex.probeWithCaches(batch, idx, threshold)
     try {
       val digestsPath = s"$stateDir/stream_digests"
       val fs = new org.apache.hadoop.fs.Path(digestsPath)
@@ -104,7 +104,7 @@ object IngestDedup {
         .withColumn("in_batch", min(col("doc_id")).over(wInBatch))
         .select(col("doc_id"),
           least(col("prior_id"), col("in_batch")).as("stream_match"))
-      val flagged = handle.df.join(sm, "doc_id")
+      val flagged = probed.join(sm, "doc_id")
         .select(col("doc_id"), col("exact_match"), col("near_match"),
           col("stream_match"),
           when(col("verdict") =!= "keep", col("verdict"))
@@ -118,7 +118,7 @@ object IngestDedup {
         withH.groupBy("h").agg(min(col("doc_id")).as("first_id")),
         digestsPath,
         _.groupBy("h").agg(min(col("first_id")).as("first_id")))
-    } finally handle.close()
+    } finally cached.foreach(_.unpersist(blocking = false))
   }
 
   /** Start the streaming ingest-dedup into `stateDir`, probing the

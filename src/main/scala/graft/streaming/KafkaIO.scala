@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamReader, DataStreamWriter}
+import scala.collection.immutable.ArraySeq
 
 /** Kafka connector wiring for the streaming slice, mirroring the reference
   * producer's topic and key layout
@@ -108,7 +109,7 @@ object KafkaIO {
       "sinkRecords needs a tx_hash or block_number column to key records " +
         s"(kafka_producer.py:105-111); got: ${rows.columns.mkString(", ")}")
     rows.select(coalesce(keyCols: _*).as("key"),
-      to_json(struct(rows.columns.map(col): _*)).as("value"))
+      to_json(struct(ArraySeq.unsafeWrapArray(rows.columns.map(col)): _*)).as("value"))
   }
 
   /** Configured `writeStream` for decoded rows; callers `.start()` where a

@@ -18,6 +18,10 @@ import graft.functions.{GraftFunctions, HllFunctions}
   * `readStream.format("kafka")` without touching the transforms.
   */
 object StreamingEtl {
+  /** `c`, or a query failure with `msg` on a null: the stateful operators'
+    * tuple encoders would otherwise die on a null as an opaque NPE. */
+  private def nonNull(c: Column, msg: String): Column =
+    when(c.isNull, raise_error(lit(msg))).otherwise(c)
 
   /** Decode a streaming Dataset of raw envelope JSON into token transfers —
     * identical transform as batch ([[TokenTransferDecoder.decode]]). */
@@ -317,12 +321,10 @@ object StreamingEtl {
     val spark = events.sparkSession
     import spark.implicits._
     import graft.functions.KmvFunctions
-    def req(c: Column, msg: String) =
-      when(c.isNull, raise_error(lit(msg))).otherwise(c)
     events.select(
-        req(col("event_type"),
+        nonNull(col("event_type"),
           "runningDistinct requires non-null event_type").as("event_type"),
-        req(col("user_id").cast("string"),
+        nonNull(col("user_id").cast("string"),
           "runningDistinct requires non-null user_id").as("v"))
       .as[(String, String)]
       .groupByKey(_._1)
@@ -367,12 +369,10 @@ object StreamingEtl {
   def runningHllDistinct(events: DataFrame, p: Int = 12): Dataset[HllUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def req(c: Column, msg: String) =
-      when(c.isNull, raise_error(lit(msg))).otherwise(c)
     events.select(
-        req(col("event_type"),
+        nonNull(col("event_type"),
           "runningHllDistinct requires non-null event_type").as("event_type"),
-        req(col("user_id").cast("string"),
+        nonNull(col("user_id").cast("string"),
           "runningHllDistinct requires non-null user_id").as("v"))
       .as[(String, String)]
       .groupByKey(_._1)
@@ -408,12 +408,10 @@ object StreamingEtl {
     val spark = events.sparkSession
     import spark.implicits._
     import graft.functions.CountMinFunctions
-    def req(c: Column, msg: String) =
-      when(c.isNull, raise_error(lit(msg))).otherwise(c)
     events.select(
-        req(col("event_type"),
+        nonNull(col("event_type"),
           "runningFrequencies requires non-null event_type").as("event_type"),
-        req(col("user_id").cast("string"),
+        nonNull(col("user_id").cast("string"),
           "runningFrequencies requires non-null user_id").as("v"))
       .as[(String, String)]
       .groupByKey(_._1)
@@ -457,13 +455,11 @@ object StreamingEtl {
       "runningPsi reference histograms must have 10 buckets")
     val spark = events.sparkSession
     import spark.implicits._
-    def req(c: Column, msg: String) =
-      when(c.isNull, raise_error(lit(msg))).otherwise(c)
     val width = (v1 - v0) / 10.0
     events.select(
-        req(col("event_type"),
+        nonNull(col("event_type"),
           "runningPsi requires non-null event_type").as("event_type"),
-        req(col("value"),
+        nonNull(col("value"),
           "runningPsi requires non-null value").cast("double").as("v"))
       .as[(String, Double)]
       .groupByKey(_._1)
@@ -510,15 +506,13 @@ object StreamingEtl {
                             k: Int = 5): Dataset[WeightedSampleUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
-    def req(c: Column, msg: String) =
-      when(c.isNull, raise_error(lit(msg))).otherwise(c)
     events.select(
-        req(col("event_type"),
+        nonNull(col("event_type"),
           "runningWeightedSample requires non-null event_type")
           .as("event_type"),
-        req(col("event_id"), "runningWeightedSample requires non-null event_id")
+        nonNull(col("event_id"), "runningWeightedSample requires non-null event_id")
           .cast("long").as("event_id"),
-        req(col("value"), "runningWeightedSample requires non-null value")
+        nonNull(col("value"), "runningWeightedSample requires non-null value")
           .cast("double").as("value"))
       .as[(String, Long, Double)]
       .groupByKey(_._1)
@@ -566,12 +560,10 @@ object StreamingEtl {
     val spark = events.sparkSession
     import spark.implicits._
     import graft.functions.MisraGriesFunctions
-    def req(c: Column, msg: String) =
-      when(c.isNull, raise_error(lit(msg))).otherwise(c)
     events.select(
-        req(col("event_type"),
+        nonNull(col("event_type"),
           "runningHeavyHitters requires non-null event_type").as("event_type"),
-        req(col("user_id").cast("string"),
+        nonNull(col("user_id").cast("string"),
           "runningHeavyHitters requires non-null user_id").as("v"))
       .as[(String, String)]
       .groupByKey(_._1)
@@ -634,12 +626,10 @@ object StreamingEtl {
     val spark = events.sparkSession
     import spark.implicits._
     import graft.functions.{KllBuffer, KllFunctions}
-    def req(c: Column, msg: String) =
-      when(c.isNull, raise_error(lit(msg))).otherwise(c)
     events.select(
-        req(col("event_type"),
+        nonNull(col("event_type"),
           "runningQuantiles requires non-null event_type").as("event_type"),
-        req(col("value").cast("double"),
+        nonNull(col("value").cast("double"),
           "runningQuantiles requires non-null value").as("v"))
       .as[(String, Double)]
       .groupByKey(_._1)
@@ -668,13 +658,11 @@ object StreamingEtl {
     // inside the (String, Long) tuple encoder as an opaque runtime NPE —
     // fail with the same explicit precondition the batch twins
     // (q_ks_test, q_mannwhitney) require of their inputs
-    def req(c: Column, msg: String) =
-      when(c.isNull, raise_error(lit(msg))).otherwise(c)
     val checked = events.select(col("event_type"), term.as("t"))
       .select(
-        req(col("event_type"),
+        nonNull(col("event_type"),
           "decayedTotals requires non-null event_type").as("event_type"),
-        req(col("t"),
+        nonNull(col("t"),
           "decayedTotals requires non-null value and ts").as("t"))
     checked.as[(String, Long)]
       .groupByKey(_._1)

@@ -10,6 +10,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DataType, StructType}
+import scala.collection.immutable.ArraySeq
 
 /** Streaming upsert ("latest row per key") sink over plain parquet — the
   * reference's warehouse sink upgraded to streaming semantics: each
@@ -53,7 +54,7 @@ object UpsertSink {
                    tieBreak: Seq[org.apache.spark.sql.Column] = Nil)
       : DataFrame = {
     val tie = if (tieBreak.nonEmpty) tieBreak.map(_.desc)
-              else Seq(xxhash64(df.columns.map(col): _*).asc)
+              else Seq(xxhash64(ArraySeq.unsafeWrapArray(df.columns.map(col)): _*).asc)
     val w = Window.partitionBy(col(key))
       .orderBy((col(tsCol).desc +: tie): _*)
     df.withColumn("__rn", row_number().over(w))
@@ -109,7 +110,7 @@ object UpsertSink {
         throw new java.io.IOException(s"swap failed: $stage -> $target")
       else
         throw new java.io.IOException(
-          s"swap failed: $stage -> $target; rollback also failed — " +
+          s"swap failed: $stage -> $target; rollback also failed - " +
           s"prior state remains at $aside (recovered on next mergeBatch)")
     }
     fs.delete(aside, true)

@@ -176,21 +176,9 @@ object TextOps {
     * [[bigramLmScoreSampled]]: train on a hash sample, prune, broadcast.
     * Returns (doc_id, n_bigrams, lm_score).
     *
-    * Persists the bigram frame for the session (it feeds the model counts
-    * AND the scoring scan). One-shot callers that end with
-    * `spark.catalog.clearCache()` (Verify, Bench) may use this form;
-    * long-lived callers should use [[bigramLmScoreManaged]]. */
-  def bigramLmScore(docs: DataFrame): DataFrame =
-    bigramLmScoreWithCaches(docs)._1
-
-  /** [[bigramLmScore]] with a [[graft.CachedResult]] handle that releases
-    * the cached bigram frame on close(). */
-  def bigramLmScoreManaged(docs: DataFrame): graft.CachedResult = {
-    val (df, cached) = bigramLmScoreWithCaches(docs)
-    new graft.CachedResult(df, cached)
-  }
-
-  private def bigramLmScoreWithCaches(docs: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    * Persists the bigram frame (it feeds the model counts AND the scoring
+    * scan), under the cache contract on [[graft.dedup.FrameStore]]. */
+  def bigramLmScore(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
     // one row per bigram occurrence; feeds the model counts AND scoring
@@ -203,14 +191,13 @@ object TextOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val c1 = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
     val c12 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    val out = bg.join(c12, Seq("w1", "w2")).join(c1, Seq("w1"))
+    bg.join(c12, Seq("w1", "w2")).join(c1, Seq("w1"))
       .withColumn("p", col("c12").cast("double") / col("c1"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         (sum(col("p").cast(org.apache.spark.sql.types.DecimalType(38, 12)))
           .cast("double") / count(lit(1))).as("lm_score"))
       .orderBy("doc_id")
-    (out, Seq(bg))
   }
 
   /** The 100-TB scale path for [[bigramLmScore]]: train the bigram model

@@ -74,7 +74,7 @@ class DedupSpec extends SparkSpec {
       val survivorIds = pl.survivors.select("survivor_id").collect()
         .map(_.getLong(0)).toSet
       assert(v.filter(_.getBoolean(4)).map(_.getLong(0)).toSet == survivorIds)
-    } finally { pl.close(); spark.catalog.clearCache() }
+    } finally spark.catalog.clearCache()
   }
 
   test("artifact-fed leak split == inline leak split") {
@@ -91,7 +91,7 @@ class DedupSpec extends SparkSpec {
       val cl = pl.clusters.collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(cl.nonEmpty && cl.forall { case (d, rep) =>
         splitOf(d) == splitOf(rep) })
-    } finally { pl.close(); spark.catalog.clearCache() }
+    } finally spark.catalog.clearCache()
   }
 
   test("incremental dedup flags a batch against the accumulated side only") {
@@ -324,31 +324,6 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(stars == minLabel)
     spark.catalog.clearCache()
-  }
-
-  test("Managed variants release every persisted frame on close()") {
-    spark.catalog.clearCache()
-    def cacheEmpty = spark.sharedState.cacheManager.isEmpty
-    val emb = Tables.embeddings(spark, dir)
-    val handles = Seq(
-      Dedup.jaccardPairsManaged(docs, 0.5),
-      Dedup.jaccardPairsRareManaged(docs, 0.5, maxDf = 10),
-      Dedup.nearDuplicatesManaged(docs, 0.5),
-      Dedup.containmentPairsManaged(docs, 0.2),
-      Dedup.connectedComponentsManaged {
-        import spark.implicits._
-        Seq((1L, 2L), (2L, 3L)).toDF("d1", "d2")
-      },
-      Dedup.incrementalFlagsManaged(
-        docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 0),
-        docs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 1),
-        0.5),
-      graft.text.TextOps.bigramLmScoreManaged(docs),
-      VectorOps.cosinePairsLshManaged(emb, 0.3))
-    handles.foreach { h =>
-      assert(h.collectAndClose().nonEmpty)
-    }
-    assert(cacheEmpty, "a dedup/ANN query leaked cached blocks after close()")
   }
 
   test("materialized-index probe equals the inline incrementalFlags") {

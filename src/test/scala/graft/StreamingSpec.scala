@@ -416,6 +416,7 @@ class StreamingSpec extends SparkSpec {
 
   test("end-to-end ingest dedup: index-probed flags survive a mid-stream restart") {
     implicit val sqlCtx = spark.sqlContext
+    spark.catalog.clearCache()
     val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -445,6 +446,9 @@ class StreamingSpec extends SparkSpec {
     try {
       stream.addData(all.drop(4): _*)
       q2.processAllAvailable()
+      // every batch released the frames its index probe persisted
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "an ingest-dedup batch left cached frames behind")
       val got = spark.read.parquet(s"$dir/state/flags")
         .collect().map(r => r.getLong(0) -> ((
           Option(r.get(1)).map(_.asInstanceOf[Long]),
