@@ -107,9 +107,10 @@ case class KmvSketchAgg(
 object KmvFunctions {
   val DefaultK = 256
 
-  /** Lowercase-hex md5 of a string — the digest the sketch keeps mins of
-    * (shared with the streaming state form in
-    * [[graft.streaming.StreamingEtl.runningDistinct]]). */
+  /** Lowercase-hex md5 of a string — the digest the sketch keeps mins of,
+    * and the one driver-side md5-hex helper (A-ES keys in
+    * [[graft.streaming.StreamingEtl.runningWeightedSample]], the LSH and JL
+    * matrices in [[graft.sim.VectorOps]]). */
   private[graft] def md5Hex(s: String): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -156,23 +156,4 @@ object MisraGriesFunctions {
   /** map<item,count_lower_bound> of at most k candidate heavy hitters. */
   def misraGries(c: Column, k: Int = DefaultK): Column =
     call_function("misra_gries", c, lit(k))
-
-  /** One sequential MG step on a driver/state-side map — the classic
-    * update the aggregate's `update` performs, shared with
-    * [[graft.streaming.StreamingEtl.runningHeavyHitters]]'s per-key
-    * state (same eviction rule, same f(x) − n/(k+1) guarantee for any
-    * arrival order). */
-  def updateLocal(buf: scala.collection.mutable.Map[String, Long],
-                  item: String, k: Int): Unit = {
-    buf.get(item) match {
-      case Some(c) => buf.update(item, c + 1L)
-      case None if buf.size < k => buf.update(item, 1L)
-      case None =>
-        val dead = scala.collection.mutable.ArrayBuffer[String]()
-        buf.foreach { case (key, c) =>
-          if (c - 1L <= 0L) dead += key else buf.update(key, c - 1L)
-        }
-        dead.foreach(buf.remove)
-    }
-  }
 }

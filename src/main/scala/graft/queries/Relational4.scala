@@ -312,7 +312,7 @@ object Relational4 {
     // one decimal-exact pull along from→to over the previous score CTE,
     // then L2-normalize by a 1-row scalar — mirrors Hits.pull bit-for-bit
     def pull(prev: String, from: String, to: String, out: String) =
-      s"""r_$out AS (
+      s"""r_$out AS MATERIALIZED (
          |  SELECT n.id, COALESCE(s.raw, CAST(0 AS DOUBLE)) AS raw
          |  FROM n LEFT JOIN (
          |    SELECT ed.$to AS id,
@@ -320,7 +320,7 @@ object Relational4 {
          |    FROM ed JOIN $prev p ON ed.$from = p.id GROUP BY 1) s
          |    ON n.id = s.id
          |),
-         |$out AS (
+         |$out AS MATERIALIZED (
          |  SELECT id, raw / (SELECT sqrt(CAST(CAST(SUM(CAST(raw * raw
          |    AS DECIMAL(38,12))) AS VARCHAR) AS DOUBLE)) FROM r_$out) AS s
          |  FROM r_$out

@@ -234,9 +234,7 @@ object VectorOps {
     * inside an interpreted HOF, which made the "approximate" path slower
     * than the exhaustive scan it was meant to beat. */
   private def planeComponent(p: Int, i: Int): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"$p|$i".getBytes("UTF-8"))
-      .map(b => f"${b & 0xff}%02x").mkString
+    val hex = graft.functions.KmvFunctions.md5Hex(s"$p|$i")
     (java.lang.Long.parseLong(hex.substring(0, 6), 16).toDouble /
       0xffffff.toDouble) * 2.0 - 1.0
   }
@@ -282,9 +280,7 @@ object VectorOps {
     * satisfy the lemma with the same concentration as Gaussians and keep
     * every product exact in fixed point). */
   private def rpSign(j: Int, i: Int): Int = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"rp|$j|$i".getBytes("UTF-8"))
-      .map(b => f"${b & 0xff}%02x").mkString
+    val hex = graft.functions.KmvFunctions.md5Hex(s"rp|$j|$i")
     if ((java.lang.Long.parseLong(hex.substring(0, 6), 16) & 1L) == 1L) 1
     else -1
   }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.etl.{DeFiSwapParser, Ingest, TokenTransferDecoder}
-import graft.functions.{GraftFunctions, HllFunctions}
+import graft.functions.{CountMinFunctions, GraftFunctions, HllFunctions,
+  KllFunctions, KmvFunctions, MisraGriesFunctions}
 
 /** Structured Streaming slice (SURVEY.md §2.9): the reference's ingestion is
   * a 2-second poll loop feeding micro-batches
@@ -18,8 +19,10 @@ import graft.functions.{GraftFunctions, HllFunctions}
   * `readStream.format("kafka")` without touching the transforms.
   */
 object StreamingEtl {
-  /** `c`, or a query failure with `msg` on a null: the stateful operators'
-    * tuple encoders would otherwise die on a null as an opaque NPE. */
+  /** `c`, or a query failure with `msg` on a null: the keyed-state
+    * operators' tuple encoders would otherwise die on a null as an opaque
+    * NPE, and the running aggregates would group a null key or skip a null
+    * value silently. */
   private def nonNull(c: Column, msg: String): Column =
     when(c.isNull, raise_error(lit(msg))).otherwise(c)
 
@@ -261,27 +264,35 @@ object StreamingEtl {
     corpus.groupBy(md5(col(textCol)).as("h"))
       .agg(min(col("doc_id")).as("match_id"))
 
-  /** Running per-contract totals via keyed state (mapGroupsWithState):
-    * bounded state per contract, update-mode output — the pattern for
-    * stateful enrichments the tumbling window can't express. */
-  case class ContractState(transfers: Long, volume: Double)
+  /** Running per-contract totals: a streaming count + sum per contract,
+    * update-mode output (one row per contract touched in the batch) — the
+    * aggregation buffer is the bounded per-key state. */
   case class ContractUpdate(contract: String, transfers: Long, volume: Double)
 
   def runningContractTotals(transfers: DataFrame): Dataset[ContractUpdate] = {
     val spark = transfers.sparkSession
     import spark.implicits._
-    transfers.select(col("contract"), col("amount")).as[(String, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[ContractState, ContractUpdate](
-        GroupStateTimeout.NoTimeout) {
-        case (contract, rows, state: GroupState[ContractState]) =>
-          val prev = state.getOption.getOrElse(ContractState(0L, 0.0))
-          var n = prev.transfers; var v = prev.volume
-          rows.foreach { case (_, amt) => n += 1; v += amt / 1e18 }
-          val next = ContractState(n, v)
-          state.update(next)
-          ContractUpdate(contract, next.transfers, next.volume)
-      }
+    transfers.groupBy("contract")
+      .agg(count(lit(1)).as("transfers"), sum(col("amount") / 1e18).as("volume"))
+      .as[ContractUpdate]
+  }
+
+  /** `events` grouped by their non-null event_type (`key`): `n_rows` and
+    * `agg` of the non-null `value` (`sketch`) — the streaming groupBy each
+    * running-sketch operator is. The state per key is the aggregate's
+    * buffer and each micro-batch's partial buffer is merged into it, so a
+    * slicing is just one more partitioning of the batch aggregate:
+    * bit-identical to it where the merge is order-invariant (KMV, HLL, CMS,
+    * long sums), within the aggregate's bound where it is not (MG, KLL).
+    * Update mode emits one row per key the batch touched. */
+  private def perType(events: DataFrame, op: String, value: Column,
+                      valueName: String)(agg: Column => Column): DataFrame = {
+    GraftFunctions.install(events.sparkSession)
+    events.select(
+        nonNull(col("event_type"), s"$op requires non-null event_type").as("key"),
+        nonNull(value, s"$op requires non-null $valueName").as("v"))
+      .groupBy("key")
+      .agg(count(lit(1)).as("n_rows"), agg(col("v")).as("sketch"))
   }
 
   /** Incrementally maintained exponentially-decayed value sums per key —
@@ -304,52 +315,27 @@ object StreamingEtl {
     * absorbs ~4×10⁸ events before nearing the Long range; longer-lived
     * deployments rotate the anchor epoch (one deliberate, logged
     * re-rounding) rather than letting terms grow unbounded. */
-  case class DecayState(sumFx: Long, n: Long)
   case class DecayUpdate(key: String, sum_fx: Long, n: Long)
 
   case class DistinctUpdate(key: String, n_rows: Long, distinct_est: Double)
 
   /** Incrementally maintained per-key KMV distinct-count estimate — the
     * streaming twin of `q_kmv_distinct`, and the strongest-contract
-    * member of the streaming-sketch states: the k-min digest set is a
-    * pure function of the value SET (min-merge is order-invariant and
-    * duplicate-absorbing), so after any batching/restart the state — and
-    * therefore the estimate — is BIT-IDENTICAL to the one-shot batch
-    * sketch of the same rows (StreamingSpec asserts equality, not a
-    * bound). State per key is ≤ k 32-char digests. */
+    * member of the streaming-sketch states: the state is the `kmv_sketch`
+    * buffer, whose k-min digest set is a pure function of the value SET
+    * (min-merge is order-invariant and duplicate-absorbing), so after any
+    * batching/restart the state — and therefore the estimate — is
+    * BIT-IDENTICAL to the one-shot batch sketch of the same rows
+    * (StreamingSpec asserts equality, not a bound). State per key is ≤ k
+    * 32-char digests. */
   def runningDistinct(events: DataFrame, k: Int = 256): Dataset[DistinctUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
-    import graft.functions.KmvFunctions
-    events.select(
-        nonNull(col("event_type"),
-          "runningDistinct requires non-null event_type").as("event_type"),
-        nonNull(col("user_id").cast("string"),
-          "runningDistinct requires non-null user_id").as("v"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[(Long, String), DistinctUpdate](
-        GroupStateTimeout.NoTimeout) {
-        case (key, rows, state: GroupState[(Long, String)]) =>
-          val (n0, s0) = state.getOption.getOrElse((0L, ""))
-          val set = new java.util.TreeSet[String]()
-          if (s0.nonEmpty) s0.split(",").foreach(set.add)
-          var n = n0
-          rows.foreach { case (_, v) =>
-            n += 1
-            val h = KmvFunctions.md5Hex(v)
-            if (set.size < k || h < set.last()) {
-              set.add(h)
-              if (set.size > k) set.pollLast()
-            }
-          }
-          state.update((n, String.join(",", set)))
-          val sorted = {
-            val it = set.iterator(); val b = Seq.newBuilder[String]
-            while (it.hasNext) b += it.next()
-            b.result()
-          }
-          DistinctUpdate(key, n, KmvFunctions.estimateFromSorted(sorted, k))
+    perType(events, "runningDistinct", col("user_id").cast("string"),
+        "user_id")(KmvFunctions.kmvSketch(_, k))
+      .as[(String, Long, Seq[String])]
+      .map { case (key, n, sorted) =>
+        DistinctUpdate(key, n, KmvFunctions.estimateFromSorted(sorted, k))
       }
   }
 
@@ -359,38 +345,22 @@ object StreamingEtl {
   /** Incrementally maintained per-key HyperLogLog registers — the
     * fixed-memory member of the streaming distinct family: where
     * [[runningDistinct]]'s KMV digest set costs ≤ k·32 chars per key,
-    * the HLL state is exactly 2^p bytes. Like KMV, the register array is
-    * a pure function of the value SET (max-update is order-invariant and
-    * duplicate-absorbing), so after ANY micro-batch slicing or restart
-    * the state — and therefore the estimate — is BIT-IDENTICAL to the
-    * one-shot batch [[graft.functions.HllSketchAgg]] over the same rows
-    * (StreamingSpec asserts register equality, not a bound). Estimates
-    * use the same two-regime formula as `q_hll_distinct`. */
+    * the `hll_sketch` state is exactly 2^p bytes. Like KMV, the register
+    * array is a pure function of the value SET (max-merge is
+    * order-invariant and duplicate-absorbing), so after ANY micro-batch
+    * slicing or restart the state — and therefore the estimate — is
+    * BIT-IDENTICAL to the one-shot batch [[graft.functions.HllSketchAgg]]
+    * over the same rows (StreamingSpec asserts register equality, not a
+    * bound). Estimates are [[HllFunctions.estimateFrom]] (unrounded). */
   def runningHllDistinct(events: DataFrame, p: Int = 12): Dataset[HllUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select(
-        nonNull(col("event_type"),
-          "runningHllDistinct requires non-null event_type").as("event_type"),
-        nonNull(col("user_id").cast("string"),
-          "runningHllDistinct requires non-null user_id").as("v"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[(Long, Array[Byte]), HllUpdate](
-        GroupStateTimeout.NoTimeout) {
-        case (key, rows, state: GroupState[(Long, Array[Byte])]) =>
-          val (n0, regs0) = state.getOption
-            .getOrElse((0L, new Array[Byte](1 << p)))
-          val regs = regs0.clone()
-          var n = n0
-          rows.foreach { case (_, v) =>
-            n += 1
-            val (b, r) = HllFunctions.bucketRho(v, p)
-            if (r > regs(b)) regs(b) = r.toByte
-          }
-          state.update((n, regs))
-          HllUpdate(key, n, regs.count(_ == 0).toLong,
-            HllFunctions.estimateFrom(regs.map(_.toInt).toSeq, p))
+    perType(events, "runningHllDistinct", col("user_id").cast("string"),
+        "user_id")(HllFunctions.hllSketch(_, p))
+      .as[(String, Long, Seq[Int])]
+      .map { case (key, n, regs) =>
+        HllUpdate(key, n, regs.count(_ == 0).toLong,
+          HllFunctions.estimateFrom(regs, p))
       }
   }
 
@@ -398,41 +368,19 @@ object StreamingEtl {
 
   /** Incrementally maintained per-key Count-Min matrix — frequency
     * sketches in streaming state. Like [[runningDistinct]] (and unlike
-    * KLL), the state is a pure function of the rows seen: cell updates
-    * are Long additions, so after any micro-batch slicing the flattened
-    * d×w matrix equals the one-shot batch
+    * KLL), the `count_min` state is a pure function of the rows seen:
+    * cell updates and merges are Long additions, so after any micro-batch
+    * slicing the flattened d×w matrix equals the one-shot batch
     * [[graft.functions.CountMinAgg]] BIT-IDENTICALLY (StreamingSpec
     * asserts equality). State per key is d·w longs, fixed. */
   def runningFrequencies(events: DataFrame, depth: Int = 4,
                          width: Int = 512): Dataset[CmsUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
-    import graft.functions.CountMinFunctions
-    events.select(
-        nonNull(col("event_type"),
-          "runningFrequencies requires non-null event_type").as("event_type"),
-        nonNull(col("user_id").cast("string"),
-          "runningFrequencies requires non-null user_id").as("v"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[(Long, Array[Long]), CmsUpdate](
-        GroupStateTimeout.NoTimeout) {
-        case (key, rows, state: GroupState[(Long, Array[Long])]) =>
-          val (n0, cells0) = state.getOption
-            .getOrElse((0L, new Array[Long](depth * width)))
-          val cells = cells0.clone()
-          var n = n0
-          rows.foreach { case (_, v) =>
-            n += 1
-            var i = 0
-            while (i < depth) {
-              cells(i * width + CountMinFunctions.cell(i, v, width)) += 1L
-              i += 1
-            }
-          }
-          state.update((n, cells))
-          CmsUpdate(key, n, cells)
-      }
+    perType(events, "runningFrequencies", col("user_id").cast("string"),
+        "user_id")(CountMinFunctions.countMin(_, depth, width))
+      .select(col("key"), col("n_rows"), flatten(col("sketch")).as("cells"))
+      .as[CmsUpdate]
   }
 
   case class PsiUpdate(key: String, n_rows: Long, psi: Double)
@@ -525,9 +473,7 @@ object StreamingEtl {
           rows.foreach { case (_, id, w) =>
             if (w > 0) {
               n += 1
-              val md = java.security.MessageDigest.getInstance("MD5")
-              val hex = md.digest(s"ws|$id".getBytes("UTF-8"))
-                .map(b => f"${b & 0xff}%02x").mkString
+              val hex = KmvFunctions.md5Hex(s"ws|$id")
               val u = (java.lang.Long.parseLong(hex.substring(0, 8), 16)
                 .toDouble + 0.5) / 4294967296.0
               val aes = BigDecimal(-math.log(u) / w)
@@ -547,40 +493,22 @@ object StreamingEtl {
 
   /** Incrementally maintained per-key Misra–Gries heavy-hitter summary —
     * the frequent-items member of the streaming sketch family (beside
-    * KMV/HLL distinct, KLL quantiles, CMS frequencies): at most k
-    * counters of state per key, and after ANY micro-batch slicing the
-    * classic sequential guarantee holds for the rows seen so far —
-    * every item with true frequency above n/(k+1) is present, and
-    * estimates undercount by at most n/(k+1) (the per-key state applies
-    * the sequential algorithm, whose bound is arrival-order-independent
-    * even though the counter VALUES are not — the same contract as the
-    * batch [[graft.functions.MisraGriesAgg]]). Emits the sorted
-    * surviving-counter map per update. */
+    * KMV/HLL distinct, KLL quantiles, CMS frequencies): the state is the
+    * `misra_gries` buffer, at most k counters per key, and each
+    * micro-batch's summary is merged into it (Agarwal et al.'s mergeable
+    * form), so after ANY slicing the MG guarantee holds for the rows seen so
+    * far — every item with true frequency above n/(k+1) is present, and
+    * estimates undercount by at most n/(k+1). The bound is
+    * slicing-independent even though the counter VALUES are not — the same
+    * contract as the batch [[graft.functions.MisraGriesAgg]]. Emits the
+    * sorted surviving-counter map per update. */
   def runningHeavyHitters(events: DataFrame, k: Int = 8): Dataset[HeavyHittersUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
-    import graft.functions.MisraGriesFunctions
-    events.select(
-        nonNull(col("event_type"),
-          "runningHeavyHitters requires non-null event_type").as("event_type"),
-        nonNull(col("user_id").cast("string"),
-          "runningHeavyHitters requires non-null user_id").as("v"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[(Long, Map[String, Long]), HeavyHittersUpdate](
-        GroupStateTimeout.NoTimeout) {
-        case (key, rows, state: GroupState[(Long, Map[String, Long])]) =>
-          val (n0, m0) = state.getOption.getOrElse((0L, Map.empty[String, Long]))
-          val buf = scala.collection.mutable.Map[String, Long](m0.toSeq: _*)
-          var n = n0
-          rows.foreach { case (_, v) =>
-            n += 1
-            MisraGriesFunctions.updateLocal(buf, v, k)
-          }
-          val out = buf.toMap
-          state.update((n, out))
-          HeavyHittersUpdate(key, n, out)
-      }
+    perType(events, "runningHeavyHitters", col("user_id").cast("string"),
+        "user_id")(MisraGriesFunctions.misraGries(_, k))
+      .select(col("key"), col("n_rows"), col("sketch").as("items"))
+      .as[HeavyHittersUpdate]
   }
 
   case class ImageDedupFlag(media_id: Long, first_id: Long, is_dup: Boolean)
@@ -616,34 +544,22 @@ object StreamingEtl {
 
   /** Incrementally maintained per-key rank sketch — the streaming
     * quantile the batch registry's `q_kll_quantile` canonical tree cannot
-    * be: state is a serialized [[graft.functions.KllBuffer]] (bounded
-    * k·levels doubles per key), each micro-batch folds its rows in, and
-    * the emitted p50/p90 estimates carry the sketch's (L+1)·n/k rank
-    * bound REGARDLESS of how the stream was sliced into batches —
-    * exactly the mergeable-summary property `KllSketchSpec` proves for
-    * the batch aggregate. n is exact (weight conservation). */
+    * be: the state is the `kll_sketch` buffer (a [[graft.functions.KllBuffer]],
+    * bounded k·levels doubles per key), each micro-batch's partial sketch
+    * is merged in, and the emitted p50/p90 estimates carry the sketch's
+    * (L+1)·n/k rank bound REGARDLESS of how the stream was sliced into
+    * batches — exactly the mergeable-summary property `KllSketchSpec`
+    * proves for the batch aggregate. n is exact (weight conservation). */
   def runningQuantiles(events: DataFrame, k: Int = 256): Dataset[QuantileUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
-    import graft.functions.{KllBuffer, KllFunctions}
-    events.select(
-        nonNull(col("event_type"),
-          "runningQuantiles requires non-null event_type").as("event_type"),
-        nonNull(col("value").cast("double"),
-          "runningQuantiles requires non-null value").as("v"))
-      .as[(String, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[Array[Byte], QuantileUpdate](
-        GroupStateTimeout.NoTimeout) {
-        case (key, rows, state: GroupState[Array[Byte]]) =>
-          val buf = state.getOption.map(KllBuffer.deserialize(k, _))
-            .getOrElse(new KllBuffer(k))
-          rows.foreach { case (_, v) => buf.update(v) }
-          state.update(buf.serialize())
-          val items = buf.weightedItems.toSeq
-          QuantileUpdate(key, items.map(_._2).sum,
-            KllFunctions.kllQuantileOf(items, 0.5),
-            KllFunctions.kllQuantileOf(items, 0.9))
+    perType(events, "runningQuantiles", col("value").cast("double"),
+        "value")(KllFunctions.kllSketch(_, k))
+      .as[(String, Long, Seq[(Double, Long)])]
+      .map { case (key, _, items) =>
+        QuantileUpdate(key, items.map(_._2).sum,
+          KllFunctions.kllQuantileOf(items, 0.5),
+          KllFunctions.kllQuantileOf(items, 0.9))
       }
   }
 
@@ -654,27 +570,11 @@ object StreamingEtl {
     val term = round(col("value") * pow(lit(2.0),
       (unix_micros(col("ts")) - lit(anchorMicros)) /
         lit(86400e6 * halfLifeDays)) * lit(1e6), 0).cast("long")
-    // a null value/ts/event_type makes the term (or key) null, which dies
-    // inside the (String, Long) tuple encoder as an opaque runtime NPE —
-    // fail with the same explicit precondition the batch twins
+    // a null value or ts makes the term null, which `sum` would skip
+    // silently — fail with the same explicit precondition the batch twins
     // (q_ks_test, q_mannwhitney) require of their inputs
-    val checked = events.select(col("event_type"), term.as("t"))
-      .select(
-        nonNull(col("event_type"),
-          "decayedTotals requires non-null event_type").as("event_type"),
-        nonNull(col("t"),
-          "decayedTotals requires non-null value and ts").as("t"))
-    checked.as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[DecayState, DecayUpdate](
-        GroupStateTimeout.NoTimeout) {
-        case (key, rows, state: GroupState[DecayState]) =>
-          val prev = state.getOption.getOrElse(DecayState(0L, 0L))
-          var s = prev.sumFx; var n = prev.n
-          rows.foreach { case (_, t) => s += t; n += 1 }
-          val next = DecayState(s, n)
-          state.update(next)
-          DecayUpdate(key, s, n)
-      }
+    perType(events, "decayedTotals", term, "value and ts")(sum)
+      .select(col("key"), col("sketch").as("sum_fx"), col("n_rows").as("n"))
+      .as[DecayUpdate]
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -166,7 +167,7 @@ class StreamingSpec extends SparkSpec {
         amount1Out = BigInt(1), blockNumber = 99000002L, ts = base + 8 * 3600))
       q.processAllAvailable()
 
-      def shape(df: org.apache.spark.sql.DataFrame) = df
+      def shape(df: DataFrame) = df
         .select(col("hour_bucket"), col("pool"), col("swap_count"),
           // stddev/avg partial-buffer merge order differs between the
           // incremental and batch plans — last-ulp only; 6dp pins it
@@ -507,7 +508,7 @@ class StreamingSpec extends SparkSpec {
     try {
       stream.addData(all.drop(4): _*)
       q2.processAllAvailable()
-      def key(r: org.apache.spark.sql.Row) = r.getLong(0) -> ((
+      def key(r: Row) = r.getLong(0) -> ((
         r.getLong(1), Option(r.get(3)).map(_.asInstanceOf[Double]),
         r.getString(4)))
       val got = spark.read.parquet(s"$dir/state/flags").collect().map(key).toMap
@@ -899,6 +900,64 @@ class StreamingSpec extends SparkSpec {
     }
     assert(runSliced(Seq(rows), "cms_one") == batch)
     assert(runSliced(rows.grouped(53).toSeq, "cms_53") == batch)
+  }
+
+  test("KMV, HLL and CMS states resume from a checkpoint == the batch sketch") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.functions.{CountMinFunctions, HllFunctions, KmvFunctions}
+    val (k, p, d, w) = (8, 8, 4, 64)
+    val rows = graft.queries.Tables.events(spark, "/root/testdata/sf0.001")
+      .select(col("event_type"), col("user_id"))
+      .orderBy("event_id").limit(400)
+      .as[(String, Long)].collect().toSeq
+    val slices = rows.grouped(50).toSeq
+    val v = col("user_id").cast("string")
+    val batch = spark.createDataset(rows).toDF("event_type", "user_id")
+      .groupBy("event_type")
+      .agg(count(lit(1)), KmvFunctions.kmvDistinct(v, k),
+        HllFunctions.hllSketch(v, p), CountMinFunctions.countMin(v, d, w))
+      .collect().map { r =>
+        val regs = r.getSeq[Int](3).toSeq
+        r.getString(0) -> ((r.getLong(1), r.getDouble(2),
+          (regs.count(_ == 0).toLong, HllFunctions.estimateFrom(regs, p)),
+          r.getSeq[scala.collection.Seq[Long]](4).flatMap(_.toSeq).toVector))
+      }.toMap
+    // two slices, stop, restart over the same source and checkpoint, then
+    // the rest; the last update per key (largest n_rows) is its final state
+    def resumed(name: String)(
+        op: DataFrame => Dataset[_]): Map[String, Row] = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+      val stream = MemoryStream[(String, Long)]
+      val out = scala.collection.mutable.ArrayBuffer[Row]()
+      def start() = op(stream.toDS().toDF("event_type", "user_id")).toDF()
+        .writeStream.outputMode(OutputMode.Update())
+        .option("checkpointLocation", s"$dir/ckpt")
+        .foreachBatch { (b: DataFrame, _: Long) => out ++= b.collect(); () }
+        .start()
+      val q1 = start()
+      try slices.take(2).foreach { b => stream.addData(b); q1.processAllAvailable() }
+      finally q1.stop() // restart boundary: state lives in the checkpoint
+      val q2 = start()
+      try slices.drop(2).foreach { b => stream.addData(b); q2.processAllAvailable() }
+      finally q2.stop()
+      out.toSeq.groupBy(_.getString(0))
+        .map { case (key, us) => key -> us.maxBy(_.getLong(1)) }
+    }
+    val kmv = resumed("kmv_restart")(StreamingEtl.runningDistinct(_, k))
+    val hll = resumed("hll_restart")(StreamingEtl.runningHllDistinct(_, p))
+    val cms = resumed("cms_restart")(StreamingEtl.runningFrequencies(_, d, w))
+    assert(Seq(kmv, hll, cms).forall(_.keySet == batch.keySet))
+    for ((key, (n, est, hllEst, cells)) <- batch) {
+      assert(Seq(kmv, hll, cms).forall(_(key).getLong(1) == n), s"$key: n_rows")
+      assert(kmv(key).getDouble(2) == est, s"$key: KMV")
+      assert((hll(key).getLong(2), hll(key).getDouble(3)) == hllEst, s"$key: HLL")
+      assert(cms(key).getSeq[Long](2).toVector == cells, s"$key: CMS")
+    }
+    // the restart boundary splits some key's rows, so resuming its state
+    // (not restarting it empty) is what the equalities above check
+    val early = slices.take(2).flatten.map(_._1).toSet
+    assert(slices.drop(2).flatten.exists(r => early(r._1)))
   }
 
   test("streaming weighted sample == the batch A-ES sample, any slicing") {
