@@ -2,6 +2,7 @@
 """Cross-round bench regression diff.
 
 Usage: python3 dev/bench_diff.py <old_detail.json> <new_detail.json> [ratio]
+       python3 dev/bench_diff.py --counters <old_detail.json> <new_detail.json>
 
 Each input is a BENCH_detail.json written by graft.Bench (one JSON object
 with a "queries" per-query seconds map; BENCH_r*.json round files with the
@@ -14,10 +15,13 @@ scheduler noise floor dominates and a 2x on 40 ms is not a regression.
 
 When both files carry per-entry "counters" (graft.Bench writes, per entry
 and section, each run's jobs, stages, tasks, shuffle-write bytes and
-observed-metric misses), it also lists the entries whose jobs, stages or
-shuffle-write bytes differ between the files, and, separately, those that
-differ between runs within one file. These counts do not depend on the
-box's speed; they do not change the exit code.
+observed-metric misses), it also lists the entries whose jobs, stages,
+tasks or shuffle-write bytes differ between the files, and, separately,
+those that differ between runs within one file. These counts do not depend
+on the box's speed; they do not change the exit code.
+
+--counters prints only that counter report, with no timing rows; it exits
+1 when either file has no "counters".
 """
 import json, re, sys
 
@@ -38,7 +42,7 @@ def load(path):
             pass  # a chunk line cut mid-map by the tail budget
     return q, d
 
-COUNTED = ("jobs", "stages", "shuffle_write_bytes")
+COUNTED = ("jobs", "stages", "tasks", "shuffle_write_bytes")
 
 def counter_values(counters):
     """(entry, "section.counter", per-run values) for each counted value."""
@@ -100,6 +104,17 @@ def main(old_path, new_path, ratio=1.5):
         report_counters(old_meta["counters"], new_meta["counters"])
     return 1 if (regressions or new_fails) else 0
 
+def counters_only(old_path, new_path):
+    old, new = (load(p)[1].get("counters") for p in (old_path, new_path))
+    if not old or not new:
+        print("counters: missing in " + " and ".join(
+            p for p, c in ((old_path, old), (new_path, new)) if not c))
+        return 1
+    report_counters(old, new)
+    return 0
+
 if __name__ == "__main__":
+    if sys.argv[1] == "--counters":
+        sys.exit(counters_only(sys.argv[2], sys.argv[3]))
     r = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
     sys.exit(main(sys.argv[1], sys.argv[2], r))

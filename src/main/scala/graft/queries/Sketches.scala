@@ -37,20 +37,6 @@ object Sketches {
   val K = 256
   private val Phis = Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
 
-  /** Driver-finish threshold for the halving tree (guide §1.2/§2.4): each
-    * level is ONE Spark job (window + eager checkpoint) over a frame whose
-    * row bound halves per level, so the last ~log2(DriverFinishRows/k)
-    * levels schedule more than they compute. Once the bound is under this
-    * constant, the remaining levels are replayed EXACTLY on the driver
-    * ([[halveLocal]]) — every consumer driver-collects the final ≤ k-item
-    * sketch anyway, and the collapsed tail is a fixed NUMBER of the
-    * smallest levels at any scale (the data-proportional levels above the
-    * constant always run distributed). An input of at most this many rows
-    * skips the distributed rank too: its (v, id) rows are collected and
-    * ranked by the same total order on the driver, so the tree costs the
-    * count job and one collect. ~3 MB of narrow rows at the bound. */
-  private[graft] val DriverFinishRows = 1L << 16
-
   /** The total order (v, id) of the tree, on the driver. Coincides with
     * Spark's sort order on the rows [[localSortSafe]] admits. */
   private val ByVId: Ordering[(Double, Long)] =
@@ -107,30 +93,24 @@ object Sketches {
     * the input count. Deterministic function of the input multiset. */
   def kllCanonical(df: DataFrame, k: Int,
       driverFinishRows: Long = DriverFinishRows): (DataFrame, Long) = {
-    val s = df.sparkSession
-    val r0 = df.agg(min(col("v").cast("double")).as("mn"),
-      max(col("v").cast("double")).as("mx"), count(lit(1)).as("n"))
-      .collect()(0)
-    val n = r0.getLong(2)
     // the non-(double, long)-typed callers (tests with other schemas) stay
     // fully on the engine path
     val typed = df.schema("v").dataType ==
       org.apache.spark.sql.types.DoubleType &&
       df.schema("id").dataType == org.apache.spark.sql.types.LongType
     // under the bound, level 0's rank is a driver sort of the collected
-    // rows, so no level runs distributed; the count comes from the rows the
-    // sketch is built from, `n` only gates the collect
-    val small = if (typed && n <= driverFinishRows)
-      Some(df.select("v", "id").collect()).filter(localSortSafe(_, 0))
-    else None
+    // rows, so no level runs distributed
+    val small = if (!typed) None
+      else collectAtMost(df.select("v", "id"), driverFinishRows)
+        .filter(localSortSafe(_, 0))
     small match {
       case Some(rows) =>
         val m = rows.length.toLong
         val level0 = rows.map(r => (r.getDouble(0), r.getLong(1)))
           .sorted(ByVId).zipWithIndex
           .map { case ((v, id), i) => (v, id, i.toLong / k, 1L) }
-        (finishLocal(s, level0, (m + k - 1) / k), m)
-      case None => kllDistributed(df, r0, k, typed, driverFinishRows)
+        (finishLocal(df.sparkSession, level0, (m + k - 1) / k), m)
+      case None => kllDistributed(df, k, typed, driverFinishRows)
     }
   }
 
@@ -138,8 +118,10 @@ object Sketches {
     * cannot rank): level 0 is [[DistributedRank]], then distributed levels
     * while the row bound (≤ nChunks·k) exceeds `driverFinishRows`, then the
     * tail on the driver. */
-  private def kllDistributed(df: DataFrame, r0: org.apache.spark.sql.Row,
-      k: Int, typed: Boolean, driverFinishRows: Long): (DataFrame, Long) = {
+  private def kllDistributed(df: DataFrame, k: Int, typed: Boolean,
+      driverFinishRows: Long): (DataFrame, Long) = {
+    val r0 = df.agg(min(col("v").cast("double")).as("mn"),
+      max(col("v").cast("double")).as("mx")).collect()(0)
     val nb = math.max(1, df.sparkSession.sparkContext.defaultParallelism * 4)
     val bucket = if (r0.isNullAt(0)) lit(0L) else {
       val mn = r0.getDouble(0)
@@ -200,7 +182,9 @@ object Sketches {
       }
       (phi, est.getOrElse(Double.NaN), n)
     }
-    rows.toDF("phi", "kll_est", "n").orderBy("phi")
+    // Phis ascend, so the local frame is already in output order and its
+    // write runs no sort
+    rows.toDF("phi", "kll_est", "n")
   }
 
   private val kllQuantileSql =

@@ -423,25 +423,9 @@ class AnalyticsSpec extends SparkSpec {
   test("iterated H-index coreness: independent rederivation, bound vs true peeling") {
     val dir = "/root/testdata/sf0.001"
     val ids = graft.queries.Tables.documents(spark, dir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // rebuild the chain+skip doc graph driver-side (independent of the
-    // engine's docEdges join formulation)
-    val und = for {
-      u <- ids.toSeq; d <- Seq(1, 2)
-      if u % 50 <= 50 - 1 - d && ids.contains(u + d)
-    } yield (u, u + d)
-    val adj = (und ++ und.map(_.swap)).groupBy(_._1)
-      .map { case (k, vs) => k -> vs.map(_._2).toSeq }
-    def hIndex(vals: Seq[Int]): Int = {
-      val sorted = vals.sorted(Ordering[Int].reverse)
-      sorted.zipWithIndex.map { case (v, i) => math.min(i + 1, v) }
-        .foldLeft(0)(math.max)
-    }
-    // driver-simulated 4 rounds of iterated H
-    val c: Map[Long, Int] = adj.map { case (k, ns) => k -> ns.size }
-    val rounds = Iterator.iterate(c)(prev =>
-      adj.map { case (k, ns) => k -> hIndex(ns.map(prev)) })
-      .take(5).toSeq
+      .select("doc_id").collect().map(_.getLong(0)).toSeq
+    val adj = docAdjacency(ids)
+    val rounds = hRounds(adj)
     // monotone non-increasing per node across rounds
     rounds.sliding(2).foreach { case Seq(a, b) =>
       assert(adj.keys.forall(k => b(k) <= a(k)), "H iteration not monotone")
@@ -473,12 +457,42 @@ class AnalyticsSpec extends SparkSpec {
     assert(got.exists { case (id, _, cr) => cr == core(id) })
   }
 
+  /** The doc graph's neighbour lists, rebuilt on the driver from the
+    * documents' doc_id multiset, independent of the engine's docEdges join
+    * formulation: chain + skip edges inside each 50-block, one per pair of
+    * rows, so a duplicated doc_id duplicates its edges. */
+  private def docAdjacency(ids: Seq[Long]): Map[Long, Seq[Long]] = {
+    val mult = ids.groupBy(identity).map { case (id, xs) => id -> xs.size }
+    val und = for {
+      (u, cu) <- mult.toSeq; d <- Seq(1, 2)
+      if u % 50 <= 50 - 1 - d
+      cv <- mult.get(u + d).toSeq; _ <- 1 to cu * cv
+    } yield (u, u + d)
+    (und ++ und.map(_.swap)).groupBy(_._1)
+      .map { case (k, vs) => k -> vs.map(_._2) }
+  }
+
+  /** Driver-simulated iterated H: degree, then 4 rounds. */
+  private def hRounds(adj: Map[Long, Seq[Long]]): Seq[Map[Long, Int]] = {
+    def hIndex(vals: Seq[Int]): Int = {
+      val sorted = vals.sorted(Ordering[Int].reverse)
+      sorted.zipWithIndex.map { case (v, i) => math.min(i + 1, v) }
+        .foldLeft(0)(math.max)
+    }
+    val c: Map[Long, Int] = adj.map { case (k, ns) => k -> ns.size }
+    Iterator.iterate(c)(prev =>
+      adj.map { case (k, ns) => k -> hIndex(ns.map(prev)) })
+      .take(5).toSeq
+  }
+
   test("q_kcore plans its H-index rounds over one materialized neighbour list") {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
-    // two 50-doc blocks: the plan's shape does not depend on corpus size
+    // two 50-doc blocks: the plan's shape does not depend on corpus size.
+    // A driver bound of 0 keeps the rounds distributed (at the default
+    // bound this graph finishes on the driver as a local frame).
     val dir = java.nio.file.Files.createTempDirectory("graft_kcore").toString
     (0L until 100L).toDF("doc_id").write.parquet(s"$dir/documents.parquet")
-    val plan = SparkEntry.queries("q_kcore")(spark, dir)
+    val plan = graft.queries.Relational6.kcoreHindex(spark, dir, 0L)
       .queryExecution.optimizedPlan
     // the neighbour list reads the checkpointed edges twice (both
     // directions); the degree side of the final join holds one list and
@@ -487,6 +501,44 @@ class AnalyticsSpec extends SparkSpec {
     // `documents` re-embedded in every list it was 48 LogicalRelations.
     assert(plan.collectLeaves().count(_.isInstanceOf[LogicalRelation]) == 0)
     assert(plan.collectLeaves().size <= 12, plan.treeString)
+  }
+
+  test("q_kcore: driver-finished rounds == distributed rounds == simulated rounds") {
+    import graft.queries.DriverFinishRows
+    import graft.queries.Relational6.kcoreHindex
+    // sf0.001, and a graph with duplicated doc_ids: each copy joins, so
+    // its edges repeat (the distributed join is a multiset join)
+    val sf = "/root/testdata/sf0.001"
+    val dup = java.nio.file.Files.createTempDirectory("graft_kcore_dup").toString
+    ((0L until 100L) ++ Seq(3L, 3L, 10L, 51L, 52L)).toDF("doc_id")
+      .write.parquet(s"$dup/documents.parquet")
+    for (dir <- Seq(sf, dup)) {
+      val ids = graft.queries.Tables.documents(spark, dir)
+        .select("doc_id").collect().map(_.getLong(0)).toSeq
+      val adj = docAdjacency(ids)
+      // ties between distinct neighbours' values (a chain interior's
+      // neighbours share a degree), and on `dup` repeated neighbours
+      val c0 = adj.map { case (k, ns) => k -> ns.size }
+      assert(adj.values.exists(ns =>
+        ns.distinct.map(c0).distinct.size < ns.distinct.size), dir)
+      if (dir == dup) assert(adj.values.exists(ns => ns.distinct.size < ns.size))
+      val want = hRounds(adj).last
+      val expected = adj.keys.toSeq.sorted.map(id => (id, adj(id).size, want(id)))
+      val local = kcoreHindex(spark, dir, DriverFinishRows)
+      val dist = kcoreHindex(spark, dir, 0L)
+      assert(local.dtypes.toSeq == dist.dtypes.toSeq, dir)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
+      // row order too: both sides come out in doc_id order
+      assert(rows(local) == expected, dir)
+      assert(rows(dist) == expected, dir)
+    }
+    // jobs at the default gate on sf0.001: 5, the documents schema read,
+    // docEdges' two broadcasts and the limited collect in the builder,
+    // then the local frame's write (the distributed rounds run 14 on sf0.01)
+    val jobs = RunRecorder.of(spark)(SparkEntry.queries("q_kcore")(spark, sf)
+      .write.format("noop").mode("overwrite").save()).jobs
+    assert(jobs <= 5, s"$jobs jobs")
   }
 
   test("fk orphan screen: clean fixture reads zero; planted violations detected") {

@@ -57,5 +57,7 @@ class ContractSpec extends SparkSpec {
     assert(s.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") ==
       GraftSession.MinCoalesce)
     assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.conf.get("spark.sql.streaming.checkpointFileManagerClass") ==
+      GraftSession.CheckpointFileManager)
   }
 }

@@ -384,7 +384,8 @@ class Round8EdgeSpec extends SparkSpec {
 
   test("KLL driver-finished tail equals the fully distributed tree") {
     import spark.implicits._
-    import graft.queries.Sketches.{kllCanonical, DriverFinishRows}
+    import graft.queries.DriverFinishRows
+    import graft.queries.Sketches.kllCanonical
     // deterministic pseudo-random doubles with ties; k=8 over 600 rows
     // gives 75 chunks -> 7 halving levels. Three gates: driverFinishRows=0
     // runs every level distributed; n - 1 ranks distributed, runs one
@@ -416,10 +417,10 @@ class Round8EdgeSpec extends SparkSpec {
       val df = rows.union(extra.toDF("v", "id"))
       assert(canon(df, DriverFinishRows) == canon(df, 0L), extra.toString)
     }
-    // jobs of the default on the 600 rows: 2, the count aggregate's two
-    // AQE stages (the collect of these local rows runs none). Ranking
-    // level 0 distributed, as the tree did before at every size, took 7:
-    // the aggregate, DistributedRank's bucket counts and the level-0
+    // jobs of the default on the 600 rows: none, since the gate's limited
+    // collect of these local rows runs no job. Ranking level 0
+    // distributed, as the tree did before at every size, took 7: the
+    // min/max aggregate, DistributedRank's bucket counts and the level-0
     // checkpoint (2 each), then the tail's collect.
     val jobs = RunRecorder.of(spark)(canon(rows, DriverFinishRows)).jobs
     assert(jobs <= 2, s"$jobs jobs")
