@@ -1,6 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.config.Configurator
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,8 +10,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cores = GraftSession.mainCores
-    System.err.println(s"[verify] running local[$cores] on $sfDir")
     val spark = GraftSession("graft-verify", cores)
+    // the session sets the root level to WARN; the progress lines below are
+    // INFO, and dev/tally.py reads their timings
+    Configurator.setLevel(logger.getName, Level.INFO)
+    logger.info(s"[verify] running local[$cores] on $sfDir")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated query filter (as in Bench) for targeted
     // re-verification of new queries at expensive scale factors
@@ -46,7 +50,7 @@ object Verify {
       .filter { case (name, _) =>
         val done = resume &&
           Files.exists(Paths.get(s"$outDir/$name/_SUCCESS"))
-        if (done) System.err.println(s"[verify] $name already done, skipped")
+        if (done) logger.info(s"[verify] $name already done, skipped")
         !done
       }
       .foreach { case (name, fn) =>
@@ -54,7 +58,7 @@ object Verify {
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        System.err.println(
+        logger.info(
           f"[verify] $name done in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       }
       catch { case e: Throwable =>

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.dedup.{Dedup, FrameStore}
@@ -15,6 +16,7 @@ import graft.text.TextOps
   * checks are exact, not tolerance-based).
   */
 object Extensions {
+  private val logger = LogManager.getLogger(getClass.getName.stripSuffix("$"))
   // Shared oracle SQL fragments (DuckDB dialect)
   private val toksSql =
     "list_filter(string_split(text, ' '), x -> x <> '')"
@@ -2294,7 +2296,7 @@ object Extensions {
 
   /** Loud guard for the documented quadratic (plain fuzzy ER is O(Σ block²)
     * by construction — PROFILE.md round 6 measured 31× at 10× rows).
-    * Returns the max distinct-prefix block size and warns on stderr above
+    * Returns the max distinct-prefix block size and logs a warning above
     * `cap`, pointing at the bounded twin. One cheap count pass — noise next
     * to the DP it predicts. */
   private[graft] def fuzzyBlockGuard(groups: DataFrame,
@@ -2303,8 +2305,8 @@ object Extensions {
       .agg(max(col("count"))).collect()(0)
     val maxBlock = if (r.isNullAt(0)) 0L else r.getLong(0)
     if (maxBlock > cap)
-      System.err.println(
-        s"[graft] WARNING: dedup_fuzzy block with $maxBlock distinct prefixes " +
+      logger.warn(
+        s"[graft] dedup_fuzzy block with $maxBlock distinct prefixes " +
           s"(cap $cap): the all-pairs DP inside it is quadratic. Use " +
           "dedup_fuzzy_bounded (block-capped, O(n*w)) above ~1M rows per " +
           "block key - see DEPLOY.md.")

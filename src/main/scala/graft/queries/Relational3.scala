@@ -1,28 +1,28 @@
 package graft.queries
 
+import graft.sql.BoundSql
 import org.apache.spark.sql.functions._
 
-/** Third coverage batch: the SQL front door (Q1 — `spark.sql` over temp
-  * views of the driver tables, including correlated subqueries Catalyst
-  * must decorrelate), additional window-function variants, regex
+/** Third coverage batch: the SQL front door (Q1 — [[BoundSql]] text over
+  * the driver tables, including correlated subqueries Catalyst must
+  * decorrelate), additional window-function variants, regex
   * extraction, and array statistics. All oracle-checked.
   */
 object Relational3 {
-  /** Correlated scalar subquery through spark.sql — Catalyst rewrites the
+  /** Correlated scalar subquery through SQL text — Catalyst rewrites the
     * per-row subquery into an aggregate + join (decorrelation). The mean is
     * authored decimal-exact IN THE SQL TEXT (AVG(double) is evaluation-order
     * dependent; a last-ulp difference would flip boundary rows), so this
     * form is oracle-verified end-to-end through the SQL front door. */
-  private val correlatedSubquery: Q = (s, dir) => {
-    Tables.customer(s, dir).createOrReplaceTempView("customer_v")
-    s.sql(
+  private val correlatedSubquery: Q = (s, dir) =>
+    BoundSql.run(s,
       """SELECT c_custkey, c_name, c_acctbal FROM customer_v c
         |WHERE c_acctbal > (SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE)
         |                          / COUNT(c_acctbal)
         |                   FROM customer_v c2
         |                   WHERE c2.c_nationkey = c.c_nationkey)
-        |ORDER BY c_custkey""".stripMargin)
-  }
+        |ORDER BY c_custkey""".stripMargin)(
+      "customer_v" -> Tables.customer(s, dir))
 
   /** DuckDB twin of the correlated form — same decimal-exact mean. */
   private val sqlCorrelatedSql =
@@ -57,16 +57,14 @@ object Relational3 {
 
   /** Correlated EXISTS with an inequality (late-shipping orders), through
     * the SQL front door on both engines. */
-  private val existsInequality: Q = (s, dir) => {
-    Tables.orders(s, dir).createOrReplaceTempView("orders_v")
-    Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_v")
-    s.sql(
+  private val existsInequality: Q = (s, dir) =>
+    BoundSql.run(s,
       """SELECT o_orderkey, o_orderdate, o_totalprice FROM orders_v o
         |WHERE EXISTS (SELECT 1 FROM lineitem_v l
         |  WHERE l.l_orderkey = o.o_orderkey
         |    AND l.l_shipdate > o.o_orderdate + INTERVAL '90' DAY)
-        |ORDER BY o_orderkey""".stripMargin)
-  }
+        |ORDER BY o_orderkey""".stripMargin)(
+      "orders_v" -> Tables.orders(s, dir), "lineitem_v" -> Tables.lineitem(s, dir))
 
   private val existsInequalitySql =
     """SELECT o_orderkey, o_orderdate, o_totalprice FROM orders o
@@ -79,16 +77,15 @@ object Relational3 {
     * family next to rollup/cube): per-day totals, per-type totals, and a
     * grand total in one pass. NULLS FIRST pinned so subtotal rows order
     * identically on both engines. */
-  private val groupingSets: Q = (s, dir) => {
-    Tables.events(s, dir).createOrReplaceTempView("events_v")
-    s.sql(
+  private val groupingSets: Q = (s, dir) =>
+    BoundSql.run(s,
       """SELECT CAST(ts AS DATE) AS event_date, event_type,
         |  COUNT(*) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total_value
         |FROM events_v
         |GROUP BY GROUPING SETS ((CAST(ts AS DATE)), (event_type), ())
-        |ORDER BY event_date ASC NULLS FIRST, event_type ASC NULLS FIRST""".stripMargin)
-  }
+        |ORDER BY event_date ASC NULLS FIRST, event_type ASC NULLS FIRST""".stripMargin)(
+      "events_v" -> Tables.events(s, dir))
 
   private val groupingSetsSql =
     """SELECT CAST(ts AS DATE) AS event_date, event_type,

@@ -361,10 +361,7 @@ object Relational5 {
     * fact scan in the executed plan. */
   private val runtimeFilter: Q = (s, dir) => {
     graft.functions.GraftFunctions.install(s)
-    Tables.orders(s, dir).filter(col("o_orderpriority") === "1-URGENT")
-      .select("o_orderkey").createOrReplaceTempView("rf_urgent")
-    Tables.lineitem(s, dir).createOrReplaceTempView("rf_lineitem")
-    s.sql(
+    graft.sql.BoundSql.run(s,
       """SELECT /*+ MERGE(o) */ l_returnflag, COUNT(*) AS n,
         |  ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE), 4) AS revenue
         |FROM (SELECT * FROM rf_lineitem
@@ -372,7 +369,9 @@ object Relational5 {
         |        (SELECT graft_bloom_agg(xxhash64(o_orderkey)) FROM rf_urgent),
         |        xxhash64(l_orderkey))) l
         |JOIN rf_urgent o ON l.l_orderkey = o.o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin)
+        |GROUP BY 1 ORDER BY 1""".stripMargin)(
+      "rf_urgent" -> Tables.orders(s, dir).filter(col("o_orderpriority") === "1-URGENT")
+        .select("o_orderkey"), "rf_lineitem" -> Tables.lineitem(s, dir))
   }
 
   private val runtimeFilterSql =

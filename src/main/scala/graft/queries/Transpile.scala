@@ -1,10 +1,10 @@
 package graft.queries
 
-import graft.sql.Transpiler
+import graft.sql.{BoundSql, Transpiler}
 
 /** Registry entries that exercise [[graft.sql.Transpiler]] END TO END on
   * real data: each canonical query is authored once in Postgres text, the
-  * *Spark emission* is executed here via `spark.sql`, and the *DuckDB
+  * *Spark emission* is executed here via `BoundSql`, and the *DuckDB
   * emission* is handed to the driver's oracle verbatim. A hash-green entry
   * therefore proves the parser plus BOTH executable emitters agree on real
   * rows — the strongest check available for a text transpiler without the
@@ -168,19 +168,16 @@ object Transpile {
       |WHERE rk <= 3
       |ORDER BY d, rk, event_type""".stripMargin
 
-  private def runSparkEmission(pg: String, tables: Seq[String]): Q = (s, dir) => {
-    tables.foreach {
-      case "events" => Tables.events(s, dir).createOrReplaceTempView("events")
-      case t        => Tables.table(s, dir, t).createOrReplaceTempView(t)
-    }
-    s.sql(Transpiler.transpile(pg, "postgres", "spark"))
-  }
+  private def runSparkEmission(pg: String, tables: Seq[String]): Q = (s, dir) =>
+    BoundSql.run(s, Transpiler.transpile(pg, "postgres", "spark"))(tables.map {
+      case "events" => "events" -> Tables.events(s, dir)
+      case t        => t -> Tables.table(s, dir, t)
+    }: _*)
 
-  private val blockRange: Q = (s, dir) => {
-    Tables.orders(s, dir).createOrReplaceTempView("orders")
-    s.sql(Transpiler.buildBlockRangeQuery(100, 600,
-      table = "orders", dialect = "spark", column = "o_orderkey"))
-  }
+  private val blockRange: Q = (s, dir) =>
+    BoundSql.run(s, Transpiler.buildBlockRangeQuery(100, 600,
+      table = "orders", dialect = "spark", column = "o_orderkey"))(
+      "orders" -> Tables.orders(s, dir))
 
   /** A canonical query's entry: Spark runs the Spark emission; the oracle
     * IS the transpiler's DuckDB emission — the driver runs that text in

@@ -53,20 +53,18 @@ object CanonicalQueries {
     * DataFrame. `now` defaults to the data's max timestamp so results are
     * reproducible (no wall clock in the plan). */
   def transferVolume(transfers: DataFrame, now: Option[java.sql.Timestamp] = None): DataFrame = {
-    val spark = transfers.sparkSession
-    transfers.createOrReplaceTempView("token_transfers")
     val nowTs = now.getOrElse(
       transfers.agg(max(col("block_timestamp"))).collect()(0).getTimestamp(0))
-    spark.sql(TransferVolumeSql, Map("now" -> nowTs))
+    BoundSql.run(transfers.sparkSession, TransferVolumeSql, Map("now" -> nowTs))(
+      "token_transfers" -> transfers)
   }
 
   /** Execute the swap price-impact query against parsed swaps. */
   def swapPriceImpact(swaps: DataFrame, now: Option[java.sql.Timestamp] = None): DataFrame = {
-    val spark = swaps.sparkSession
-    swaps.createOrReplaceTempView("defi_swaps")
     val nowTs = now.getOrElse(
       swaps.agg(max(col("block_timestamp"))).collect()(0).getTimestamp(0))
-    spark.sql(SwapPriceImpactSql, Map("now" -> nowTs))
+    BoundSql.run(swaps.sparkSession, SwapPriceImpactSql, Map("now" -> nowTs))(
+      "defi_swaps" -> swaps)
   }
 
   /** Programmatic block-range query builder (Q2, etl_pipeline.py:329-351):

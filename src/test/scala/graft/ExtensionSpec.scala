@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.LogEvent
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.mm.{Codecs, MediaMeta, Multimodal}
@@ -521,11 +525,26 @@ class DedupSpec extends SparkSpec {
       ("en", 1L, "a", "apple one", 1L), ("en", 1L, "a", "apple two", 2L),
       ("en", 1L, "a", "apple six", 3L), ("de", 1L, "b", "birne", 4L))
       .toDF("lang", "bucket", "c1", "prefix", "pid")
-    assert(Extensions.fuzzyBlockGuard(groups) == 3L) // silent under cap
-    val err = new java.io.ByteArrayOutputStream()
-    Console.withErr(err) { // cap 2 → the (en,1,a) block trips the loud path
-      assert(Extensions.fuzzyBlockGuard(groups, cap = 2L) == 3L)
+    // the guard's WARN lines, caught by an appender on its logger
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("fuzzy-guard", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warned.add(e.getMessage.getFormattedMessage)
     }
+    appender.start()
+    val logger = LogManager.getLogger("graft.queries.Extensions")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    logger.addAppender(appender)
+    try {
+      assert(Extensions.fuzzyBlockGuard(groups) == 3L)
+      assert(warned.isEmpty, "silent under cap")
+      // cap 2 → the (en,1,a) block trips the loud path
+      assert(Extensions.fuzzyBlockGuard(groups, cap = 2L) == 3L)
+      assert(warned.size == 1 &&
+        warned.peek.contains("dedup_fuzzy block with 3 distinct prefixes (cap 2)"),
+        warned)
+    } finally logger.removeAppender(appender)
     assert(Extensions.fuzzyBlockGuard(groups.limit(0)) == 0L)
   }
 
