@@ -91,7 +91,7 @@ object Bench {
       .map { case (name, fn) =>
       val samples = (1 to RUNS).map { _ =>
         val t0 = System.nanoTime()
-        val ok = try {
+        val ok = try Materialize.scope {
           val df = recorder.section("builder")(fn(spark, sfDir))
           recorder.section("exec")(
             df.write.mode("overwrite").format("noop").save())
@@ -104,14 +104,12 @@ object Bench {
         }
         val dt = (System.nanoTime() - t0) / 1e9
         val counts = recorder.finish()
-        // cache hygiene between runs (outside the timed section): a query
-        // that persists intermediates must not warm or crowd the next one.
         // NOTE: an explicit System.gc() here was tried (round 7) to drain
         // the previous query's garbage and reduce adjacency noise — it did
         // the opposite: the full GC evicts warm JIT/code-cache and
         // broadcast state, inflating the MEASURED times by a median 1.25×
         // across the registry. Leave collection to the JVM.
-        spark.catalog.clearCache()
+        Materialize.warnLeftovers(spark, logger, s"[bench] $name")
         (dt, ok, counts)
       }
       val ok = samples.forall(_._2)

@@ -23,7 +23,7 @@ object Observed {
   def checkpoint(df: DataFrame, metric: String,
                  aggs: Column*): (DataFrame, Row) = {
     val observed = df.observe(metric, aggs.head, aggs.tail: _*)
-    val out = observed.localCheckpoint(true)
+    val out = observed.transform(Materialize.checkpoint)
     val row = observed.queryExecution.observedMetrics.getOrElse(metric, {
       missCount.incrementAndGet()
       logger.warn(s"[graft] observed-metric miss: $metric - " +

@@ -55,7 +55,7 @@ object Verify {
       }
       .foreach { case (name, fn) =>
       val t0 = System.nanoTime()
-      try {
+      try Materialize.scope {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         logger.info(
@@ -64,9 +64,7 @@ object Verify {
       catch { case e: Throwable =>
         logger.warn(s"[verify] $name failed: ${RunRecorder.describe(e)}")
       }
-      // queries that persist intermediates (dedup/ANN) must not leak cached
-      // blocks into the rest of the session
-      spark.catalog.clearCache()
+      Materialize.warnLeftovers(spark, logger, s"[verify] $name")
     }
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Fixed-depth multi-source BFS over an edge list — the third iterative
   * graph family beside [[graft.dedup.Dedup.connectedComponents]] ("which
@@ -44,9 +45,9 @@ object Bfs {
     // edge list is re-read every level — materialize it once so each
     // level's plan scans a leaf instead of re-running the caller's
     // edge-derivation DAG per level
-    val nb = if (maxHops >= 2) nbrs.localCheckpoint(true) else nbrs
+    val nb = if (maxHops >= 2) nbrs.transform(Materialize.checkpoint) else nbrs
     var settled = sources.select(col("id"), lit(0).as("dist"))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Materialize.checkpoint)
     var live = true
     for (i <- 1 to maxHops if live) {
       val frontier = settled.filter(col("dist") === i - 1)

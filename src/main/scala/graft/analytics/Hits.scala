@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Materialize
 
 /** Fixed-iteration HITS (Kleinberg hubs-and-authorities) over a directed
   * edge list — the third iterative graph family member: PageRank ranks by
@@ -40,7 +41,7 @@ object Hits {
     // each pull O(edges), the same cut LPA/connectedComponents make.
     val nodes = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id")))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Materialize.checkpoint)
 
     // pull `score` along `from`→`to`, decimal-exact, 0 for nodes with no
     // incoming contribution; then divide by the L2 norm. The squared-sum

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.Materialize
 
 /** Fixed-iteration PageRank over an edge list — the second iterative
   * graph family next to connected components: CC answers "which rows are
@@ -49,7 +50,7 @@ object PageRank {
     // kept execution from going exponential, at growing planning cost).
     // The flag join replaces the anti-join: __dang=1 iff no outgoing edge.
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ed = edges.join(deg, "src").localCheckpoint(true) // read every iter
+    val ed = edges.join(deg, "src").transform(Materialize.checkpoint) // read every iter
     val base = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id")))
       .distinct()
@@ -57,7 +58,7 @@ object PageRank {
         Seq("id"), "left")
       .select(col("id"),
         when(col("__out").isNull, 1).otherwise(0).as("__dang"))
-      .localCheckpoint(true) // read every iteration + at init
+      .transform(Materialize.checkpoint) // read every iteration + at init
     val n = base.count()
     // dm(pr) = Σ pr over dangling nodes, decimal-exact — identical addend
     // set to the old semi-join form (the when() keeps exactly those rows)
@@ -112,8 +113,8 @@ object PageRank {
       .select(col("id"), when(col("is_seed") === 1, lit(1.0) / nS)
         .otherwise(lit(0.0)).as("sv"),
         when(col("__out").isNull, 1).otherwise(0).as("__dang"))
-      .localCheckpoint(true) // referenced every iteration + by the result
-    val ed = edges.join(deg, "src").localCheckpoint(true) // read every iter
+      .transform(Materialize.checkpoint) // referenced every iteration + by the result
+    val ed = edges.join(deg, "src").transform(Materialize.checkpoint) // read every iter
     // dangling mass rides each iteration's checkpoint as an observed
     // metric (same rationale and same addend set as in [[run]])
     def dmAgg = coalesce(

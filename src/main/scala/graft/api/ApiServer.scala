@@ -6,6 +6,8 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
+import graft.Materialize
+
 /** Minimal HTTP layer over [[DataService]] — the engine-side counterpart of
   * the reference's Flask app (/root/reference/api/server.py:43-85): the same
   * five GET routes serving the same result shapes as JSON. Built on the
@@ -31,7 +33,7 @@ class ApiServer(spark: SparkSession, port: Int = 0,
   private def route(path: String)(body: () => Any): Unit =
     server.createContext(path, (exchange: HttpExchange) => {
       val (status, payload) =
-        try (200, mapper.writeValueAsBytes(body()))
+        try (200, Materialize.scope(mapper.writeValueAsBytes(body())))
         catch {
           case e: Exception =>
             (500, mapper.writeValueAsBytes(Map("error" -> e.getMessage)))

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.queries.Tables
 import graft.text.TextOps
 
@@ -24,8 +25,8 @@ import graft.text.TextOps
   * All hash material is md5 (identical in Spark and DuckDB), so every
   * operator has an exact oracle twin.
   *
-  * Persisted and checkpointed intermediates follow the one cache contract
-  * written down on [[FrameStore]].
+  * Persisted and checkpointed intermediates follow the block-lifetime
+  * contract written down on [[graft.Materialize]].
   */
 object Dedup {
 
@@ -209,7 +210,7 @@ object Dedup {
   /** The persisted digest frame shared by the pair generators. */
   private def digested(shRaw: DataFrame): DataFrame =
     shRaw.select(col("doc_id"), unhex(md5(col("shingle"))).as("shingle"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
 
   private def jaccardOverShingles(shRaw: DataFrame,
       threshold: Double): DataFrame = {
@@ -256,11 +257,11 @@ object Dedup {
     * shingle explode ≥3×; this one runs it once). */
   def nearDuplicates(docs: DataFrame, threshold: Double): DataFrame = {
     val sh = shingled(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
     // pairs arrive DEDUPLICATED — see lshFromSignatures' scaladoc for the
     // r13 measurement that killed the skip-the-distinct variant
     val cand = lshFromSignatures(minhashFromShingles(sh))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
     val candIds = cand.select(col("d1").as("doc_id"))
       .union(cand.select(col("d2").as("doc_id"))).distinct()
     jaccardOverShingles(sh.join(candIds, Seq("doc_id"), "left_semi"), threshold)
@@ -277,9 +278,7 @@ object Dedup {
     * (doc_id, rep_id = min doc_id of the component) for every doc that
     * appears in a pair — downstream keeps rep_id rows and drops the rest.
     *
-    * The returned frame reads the final iteration's checkpointed labels;
-    * every round's checkpoint blocks are freed by the ContextCleaner once
-    * the round's frame is unreachable. */
+    * The returned frame reads the final iteration's checkpointed labels. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // localCheckpoint the pair input FIRST, not persist: persist caches the
     // PHYSICAL result but the LOGICAL plan still carries the whole
@@ -290,12 +289,12 @@ object Dedup {
     // analyzes and executes the input DAG exactly once — the
     // materialization that has to happen anyway — and everything downstream
     // plans over tiny leaves.
-    val p = pairs.localCheckpoint(true)
+    val p = pairs.transform(Materialize.checkpoint)
     val edges = p.select(col("d1").as("a"), col("d2").as("b"))
       .union(p.select(col("d2").as("a"), col("d1").as("b")))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     var labels = edges.select(col("a")).distinct()
-      .withColumn("rep", col("a")).localCheckpoint(true)
+      .withColumn("rep", col("a")).transform(Materialize.checkpoint)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -314,9 +313,7 @@ object Dedup {
       // checkpoint. The eager localCheckpoint (NOT persist) truncates
       // lineage: labels appears several times per round, and without
       // truncation the LOGICAL plan doubles per round and Catalyst
-      // re-analysis goes exponential. The previous round's blocks are freed
-      // only by the ContextCleaner, once that frame is unreachable —
-      // `unpersist` does not touch checkpoint blocks.
+      // re-analysis goes exponential.
       val stepped = labels.join(neighborMin, Seq("a"), "left")
         .select(col("a"),
           least(col("rep"), coalesce(col("nmin"), col("rep"))).as("t"),
@@ -377,13 +374,13 @@ object Dedup {
   def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     // one analysis + one execution of the (possibly giant) input DAG — see
     // connectedComponents for why checkpoint, not persist
-    val p = pairs.filter(col("d1") =!= col("d2")).localCheckpoint(true)
+    val p = pairs.filter(col("d1") =!= col("d2")).transform(Materialize.checkpoint)
     var edges = p.select(greatest(col("d1"), col("d2")).as("hi"),
         least(col("d1"), col("d2")).as("lo"))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Materialize.checkpoint)
     val nodes = edges.select(col("hi").as("v"))
       .union(edges.select(col("lo").as("v")))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Materialize.checkpoint)
     var prev = (-1L, 0L)
     var converged = false
     var iter = 0
@@ -477,7 +474,7 @@ object Dedup {
     * aggregation; the argmax is an exact struct-min (no window, no
     * second pass). Returns (fp, survivor_id, n_docs) per group. */
   def canonicalByFingerprint(docsRaw: DataFrame): DataFrame =
-    Tables.spread(docsRaw).localCheckpoint(true)
+    Tables.spread(docsRaw).transform(Materialize.checkpoint)
       .select(col("doc_id"), col("text"),
         TextOps.tokens(col("text")).as("toks"))
       .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"),
@@ -530,7 +527,7 @@ object Dedup {
   def pipeline(docs: DataFrame, threshold: Double): PipelineResult = {
     // one materialization of the verified pairs; CC's own input checkpoint
     // then just re-snapshots these blocks instead of re-running the verify
-    val pairs = nearDuplicates(docs, threshold).localCheckpoint(true)
+    val pairs = nearDuplicates(docs, threshold).transform(Materialize.checkpoint)
     val clusters = connectedComponents(pairs, 20)
     val surv = survivors(docs, clusters)
     val verdict = clusters.join(surv, "rep_id")
@@ -602,7 +599,7 @@ object Dedup {
     // uses. The production form reads the index from its compacted tables
     // instead: [[IncrementalIndex]].
     val shEx = shingled(existing)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
     val idx = IncrementalIndex.Index(
       digests = existing.groupBy(md5(col("text")).as("h"))
         .agg(min(col("doc_id")).as("exact_match")),

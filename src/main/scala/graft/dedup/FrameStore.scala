@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.concurrent.TrieMap
+import graft.Materialize
 
 /** Session-scoped store of materialized pipeline artifacts. A composed
   * pipeline's expensive intermediates (near-dup clusters, a passage graph,
@@ -12,16 +13,11 @@ import scala.collection.concurrent.TrieMap
   * single-session form so the registry behaves identically without a
   * filesystem round-trip.
   *
-  * The cache contract of every graft operator, stated once:
-  *  - an intermediate with several consumers in one plan is `persist`ed
-  *    and stays cached until `spark.catalog.clearCache()` — Bench and
-  *    Verify call it after every entry, and a long-lived caller calls it
-  *    between uses;
-  *  - `localCheckpoint` blocks are freed by Spark's ContextCleaner once
-  *    their frame is unreachable (`Dataset.unpersist` does not free them);
-  *  - artifacts in this store are checkpoints, so they survive
-  *    `clearCache()`; [[clear]] drops them, and the ContextCleaner then
-  *    frees their blocks.
+  * Block lifetimes follow [[graft.Materialize]]: an artifact is a
+  * checkpoint owned by the store, outside the caller's scope, until
+  * [[clear]] frees it; the intermediates `compute` makes belong to the
+  * caller's scope, which may free them because the artifact's own
+  * checkpoint has already cut their lineage.
   *
   * Keys include the application id (a fresh SparkContext never sees a
   * stale frame); callers put the input identifier and every
@@ -34,16 +30,28 @@ object FrameStore {
     * do not depend on who produced the entry. */
   def getOrCompute(spark: SparkSession, key: String)
                   (compute: => DataFrame): DataFrame =
-    store.getOrElseUpdate((spark.sparkContext.applicationId, key),
-      compute.localCheckpoint(true))
+    store.getOrElseUpdate((spark.sparkContext.applicationId, key), {
+      val df = compute
+      Materialize.unscoped(df.transform(Materialize.checkpoint))
+    })
 
   /** True when `key` is already published (spec hook). */
   def contains(spark: SparkSession, key: String): Boolean =
     store.contains((spark.sparkContext.applicationId, key))
 
-  /** Drop every artifact of this application (test hygiene). */
-  def clear(spark: SparkSession): Unit = {
+  /** The checkpoint RDD ids of this application's artifacts. */
+  def heldIds(spark: SparkSession): Set[Int] =
+    frames(spark).values.map(Materialize.rddId).toSet
+
+  /** Drop every artifact of this application and free its blocks now. */
+  def clear(spark: SparkSession): Unit =
+    frames(spark).foreach { case (k, df) =>
+      store.remove(k)
+      Materialize.free(spark.sparkContext, Materialize.rddId(df))
+    }
+
+  private def frames(spark: SparkSession) = {
     val app = spark.sparkContext.applicationId
-    store.keys.filter(_._1 == app).foreach(store.remove)
+    store.filter(_._1._1 == app)
   }
 }

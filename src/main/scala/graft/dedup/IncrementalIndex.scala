@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** The materialized side of incremental dedup: the accumulated corpus
   * reduced to three probe-shaped index tables, so flagging a new batch
@@ -52,19 +53,16 @@ object IncrementalIndex {
     * from it (minhash needs the shingle strings), so the two shingle
     * consumers run off one persisted shingle frame here — released before
     * returning. */
-  def write(corpus: DataFrame, dir: String): Unit = {
-    val sh = Dedup.shingled(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      corpus.groupBy(md5(col("text")).as("h"))
-        .agg(min(col("doc_id")).as("exact_match"))
-        .write.mode("overwrite").parquet(s"$dir/digests")
-      Dedup.bandKeys(Dedup.minhashFromShingles(sh))
-        .withColumnRenamed("doc_id", "ex_id")
-        .write.mode("overwrite").parquet(s"$dir/bands")
-      sh.select(col("doc_id").as("ex_id"), unhex(md5(col("shingle"))).as("d"))
-        .write.mode("overwrite").parquet(s"$dir/shingles")
-    } finally sh.unpersist(false)
+  def write(corpus: DataFrame, dir: String): Unit = Materialize.scope {
+    val sh = Dedup.shingled(corpus).transform(Materialize.persist)
+    corpus.groupBy(md5(col("text")).as("h"))
+      .agg(min(col("doc_id")).as("exact_match"))
+      .write.mode("overwrite").parquet(s"$dir/digests")
+    Dedup.bandKeys(Dedup.minhashFromShingles(sh))
+      .withColumnRenamed("doc_id", "ex_id")
+      .write.mode("overwrite").parquet(s"$dir/bands")
+    sh.select(col("doc_id").as("ex_id"), unhex(md5(col("shingle"))).as("d"))
+      .write.mode("overwrite").parquet(s"$dir/shingles")
   }
 
   def read(spark: SparkSession, dir: String): Index = Index(
@@ -79,25 +77,18 @@ object IncrementalIndex {
     * probes (digest equi-join, band-bucket join, candidate-restricted
     * digest join). Persists the increment's shingle frame, the candidate
     * set and both verify digest frames. */
-  def probe(increment: DataFrame, idx: Index, threshold: Double): DataFrame =
-    probeWithCaches(increment, idx, threshold)._1
-
-  /** [[probe]] plus the four frames it persists, for the per-micro-batch
-    * caller ([[graft.streaming.IngestDedup.processBatch]]) that releases
-    * them after each batch. */
-  private[graft] def probeWithCaches(increment: DataFrame, idx: Index,
-      threshold: Double): (DataFrame, Seq[DataFrame]) = {
+  def probe(increment: DataFrame, idx: Index, threshold: Double): DataFrame = {
     val exact = increment.select(col("doc_id"), md5(col("text")).as("h"))
       .join(idx.digests, Seq("h"), "left")
       .select(col("doc_id"), col("exact_match"))
 
     // the increment's shingle frame feeds its signature DAG AND the verify
     val shInc = Dedup.shingled(increment)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
     val cand = Dedup.bandKeys(Dedup.minhashFromShingles(shInc))
       .join(idx.bands, Seq("band", "sig"))
       .select(col("doc_id"), col("ex_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
     // both digest frames feed their size aggregate AND the verify join —
     // persisted, or the semi-join + md5-digest pass over every candidate
     // doc's shingles executes twice (r13 profile: the duplicated corpus-side
@@ -106,12 +97,12 @@ object IncrementalIndex {
     val a = shInc.join(cand.select("doc_id").distinct(),
         Seq("doc_id"), "left_semi")
       .select(col("doc_id"), unhex(md5(col("shingle"))).as("d"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
     val b = idx.shingles.join(
         cand.select(col("ex_id").as("doc_id")).distinct()
           .withColumnRenamed("doc_id", "ex_id"),
         Seq("ex_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
     val na = a.groupBy("doc_id").agg(count(lit(1)).as("na"))
     val nb = b.groupBy("ex_id").agg(count(lit(1)).as("nb"))
     val near = a.join(b, "d")
@@ -121,12 +112,11 @@ object IncrementalIndex {
         (col("na") + col("nb") - col("common")) >= threshold)
       .groupBy("doc_id").agg(min(col("ex_id")).as("near_match"))
 
-    val out = exact.join(near, Seq("doc_id"), "left")
+    exact.join(near, Seq("doc_id"), "left")
       .select(col("doc_id"), col("exact_match"), col("near_match"),
         when(col("exact_match").isNotNull, "exact_dup")
           .when(col("near_match").isNotNull, "near_dup")
           .otherwise("keep").as("verdict"))
       .orderBy("doc_id")
-    (out, Seq(shInc, cand, a, b))
   }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Exact global ROWS-frame rolling windows without a single-partition
   * exchange.
@@ -33,15 +34,16 @@ import org.apache.spark.sql.functions._
   *
   * Scale: both passes are hash exchanges; the halo duplicates
   * `(w−1)·#blocks` rows (≪ n for any realistic w). The input lineage is
-  * localCheckpoint-ed first so the rank pass, the stats pass, and the
-  * window pass price the upstream pipeline ONCE — this makes the builder
-  * EAGER (it runs jobs at construction), which is the deliberate trade for
-  * the driver-registered rolling queries; callers that need a lazy frame
-  * use an explicit partition column instead (the `partitionCols` paths in
+  * checkpointed first ([[graft.Materialize.checkpoint]]) so the rank pass,
+  * the stats pass, and the window pass price the upstream pipeline ONCE —
+  * this makes the builder EAGER (it runs jobs at construction), which is
+  * the deliberate trade for the driver-registered rolling queries; callers
+  * that need a lazy frame use an explicit partition column instead (the
+  * `partitionCols` paths in
   * [[graft.etl.TransactionFeatureEngineer.engineer]] /
-  * [[graft.model.HistoricalVaR.rollingVar]]). localCheckpoint blocks die
-  * with their executor; multi-hour jobs opt into the reliable
-  * [[Snapshot.Durable]] variant ([[withRollingSnapshot]]) instead.
+  * [[graft.model.HistoricalVaR.rollingVar]]). Checkpoint blocks die with
+  * their executor; a job that must survive executor loss reads an input
+  * its producing job wrote as a parquet table (DEPLOY.md).
   *
   * Preconditions: `orderCols` is a total order (include a unique
   * tiebreaker); its leading column is numeric and non-null (the rank
@@ -52,49 +54,19 @@ object DistributedRolling {
 
   private val HelperCols = Seq("__bucket", "rank", "__rrank", "__grp", "__halo", "__d")
 
-  /** How the input is materialized before the rank/stats/window passes. */
-  sealed trait Snapshot
-  object Snapshot {
-    /** `localCheckpoint`: executor-memory/disk blocks — fast, but a lost
-      * executor loses blocks a localCheckpoint cannot recompute and the
-      * whole job dies. Right for the registry entries and any job whose
-      * rerun cost is minutes. */
-    case object Local extends Snapshot
-    /** Reliable snapshot: the input is written ONCE to `path` as parquet
-      * and re-read — survives executor loss (tasks re-read from storage),
-      * at the price of one durable write of the frame. The deployment
-      * choice for multi-hour window jobs at 100 TB where a single lost
-      * executor must not kill the run; see DEPLOY.md. */
-    final case class Durable(path: String) extends Snapshot
-  }
-
   /** Appends `features(w)` columns computed over the exact global rolling
     * window `orderBy(orderCols).rowsBetween(-(window-1), currentRow)`,
     * evaluated distributed. Features are appended in order, so a later
     * feature may reference an earlier one by name. */
   def withRolling(df: DataFrame, orderCols: Seq[String], window: Int)
-                 (features: WindowSpec => Seq[(String, Column)]): DataFrame =
-    withRollingSnapshot(df, orderCols, window, Snapshot.Local)(features)
-
-  /** [[withRolling]] with an explicit input-[[Snapshot]] strategy. Output
-    * is bit-identical across strategies (`ScaleSpec` asserts it): the
-    * snapshot only changes WHERE the materialized input lives, never what
-    * the rank/halo passes compute. */
-  def withRollingSnapshot(df: DataFrame, orderCols: Seq[String], window: Int,
-                          snapshot: Snapshot)
-                         (features: WindowSpec => Seq[(String, Column)]): DataFrame = {
+                 (features: WindowSpec => Seq[(String, Column)]): DataFrame = {
     require(window >= 1, "window must be >= 1")
     require(orderCols.nonEmpty, "orderCols must be non-empty")
     require(HelperCols.forall(c => !df.columns.contains(c)),
       s"input must not contain helper columns ${HelperCols.mkString(", ")}")
 
     val spark = df.sparkSession
-    val snap = snapshot match {
-      case Snapshot.Local => df.localCheckpoint()
-      case Snapshot.Durable(path) =>
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
-    }
+    val snap = df.transform(Materialize.checkpoint)
 
     val lead = col(orderCols.head).cast("double")
     val stats = snap.agg(min(lead).as("mn"), max(lead).as("mx"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.etl._
 import graft.functions.Keccak256
 import graft.model.{HistoricalVaR, ImpermanentLossModel, MEVExposureModel}
@@ -237,7 +238,7 @@ object Domain {
     * localCheckpoint materializes the decoded rows once — the narrow,
     * already-filtered frame — and the expand reads the cached copy. */
   private val transferVolume: Q = (s, dir) =>
-    CanonicalQueries.transferVolume(transfers(s, dir).localCheckpoint(), feedNow)
+    CanonicalQueries.transferVolume(transfers(s, dir).transform(Materialize.checkpoint), feedNow)
       .withColumn("volume_normalized", round(col("volume_normalized"), 6))
       .orderBy(desc("hour_bucket"), col("token_contract"))
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.dedup.{Dedup, FrameStore}
 import graft.mm.Multimodal
 import graft.sim.VectorOps
@@ -933,7 +934,7 @@ object Extensions {
     * so the self-join doesn't re-run the corpus scan that produced it. */
   private def boundedRank(df: DataFrame, id: String, score: String,
                           rankName: String): DataFrame = {
-    val top = df.localCheckpoint()
+    val top = df.transform(Materialize.checkpoint)
     val b = top.select(col(id).as("__bid"), col(score).as("__bs"))
     top.join(broadcast(b),
         col("__bs") > col(score) ||
@@ -1896,7 +1897,7 @@ object Extensions {
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("p", "x")))
       .select(col("vec_id"), (col("p") + 1).cast("long").as("dim"),
         round(col("x").cast("double") * 1e6, 0).cast("long").as("xfx"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     var v: Array[Long] =
       Array.tabulate(dims)(i => if (i == 0) 1000000L else 0L)
     for (_ <- 1 to PowerRounds) {
@@ -2775,7 +2776,7 @@ object Extensions {
       // tokenize→window→md5 explode + distinct shuffle otherwise re-executes
       // per consumer (the join sides share one exchange via ReuseExchange,
       // the per-source count does not)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
     val perSrc = wins.groupBy("source").agg(count(lit(1)).as("n"))
     wins.as("a").join(wins.as("b"),
         col("a.h") === col("b.h") && col("a.source") < col("b.source"))
@@ -2864,7 +2865,7 @@ object Extensions {
       .drop("toks")
     val withKeeper =
       if (persistBase)
-        scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        scored.transform(Materialize.persist)
       else scored
     val canonDocs = withKeeper
       .filter(col("doc_id") === col("keeper"))

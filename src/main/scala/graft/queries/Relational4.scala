@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Round-7 coverage batch: graph triangle counting (degree-ordered, the
   * scale-correct orientation algorithm) and exact heavy hitters over the
@@ -77,7 +78,7 @@ object Relational4 {
       .select(
         when(uFirst, col("u")).otherwise(col("v")).as("src"),
         when(uFirst, col("v")).otherwise(col("u")).as("dst"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
 
     val wedges = oriented.as("e1")
       .join(oriented.as("e2"),
@@ -163,9 +164,9 @@ object Relational4 {
     val edges = docEdges(s, dir)
     val nbrs = edges.select(col("u"), col("v"))
       .union(edges.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     var labels = nbrs.select(col("u").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint(true)
+      .withColumn("lbl", col("id")).transform(Materialize.checkpoint)
     val w = Window.partitionBy("u").orderBy(desc("c"), col("lbl"))
     for (_ <- 1 to LpaRounds) {
       val pick = nbrs
@@ -176,7 +177,7 @@ object Relational4 {
         .select(col("u").as("id"), col("lbl").as("newLbl"))
       labels = labels.join(pick, Seq("id"), "left")
         .select(col("id"), coalesce(col("newLbl"), col("lbl")).as("lbl"))
-        .localCheckpoint(true)
+        .transform(Materialize.checkpoint)
     }
     labels.select(col("id").as("doc_id"), col("lbl").as("community"))
       .orderBy("doc_id")

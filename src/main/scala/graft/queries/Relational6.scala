@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Round-8 continuation batch: k-hop BFS reach, association rules,
   * k-anonymity generalization, and seeded-Laplace DP counts — four more
@@ -78,7 +79,7 @@ object Relational6 {
       // the neighbour list, and each copy would re-plan docEdges' two
       // self-joins of `documents` (plan leaves 48 -> 12 for the analyzer,
       // the optimizer and AQE's re-planning between stages)
-      case None => kcoreRounds(edges.localCheckpoint())
+      case None => kcoreRounds(edges.transform(Materialize.checkpoint))
     }
   }
 
@@ -179,7 +180,7 @@ object Relational6 {
     val baskets = li.join(pt, li("l_partkey") === pt("p_partkey"))
       .select(col("l_orderkey").as("oid"), col("p_brand").as("item"))
       .groupBy("oid").agg(collect_set(col("item")).as("items"))
-      .localCheckpoint()
+      .transform(Materialize.checkpoint)
     val n = baskets.agg(count(lit(1)).as("n"))
     val itemCnt = baskets.select(explode(col("items")).as("item"))
       .groupBy("item").agg(count(lit(1)).as("ci"))
@@ -880,7 +881,7 @@ object Relational6 {
     // checkpoint doubles as this round's stats source, so a round is
     // exactly three jobs (top-1 TakeOrdered, rebuild checkpoint, 2-long
     // stats agg over the checkpointed blocks)
-    var d = toks.withColumn("nxt", lead("sym", 1).over(w)).localCheckpoint()
+    var d = toks.withColumn("nxt", lead("sym", 1).over(w)).transform(Materialize.checkpoint)
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long, Long, Long)]
     for (r <- 1 to rounds) {
@@ -903,7 +904,7 @@ object Relational6 {
         // vocab countDistinct (distinct aggregates cannot ride observe)
         val rebuilt = bpeRebuild(d, s1, s2)
           .withColumn("nxt", lead("sym", 1).over(w))
-        if (!needSummary) d = rebuilt.localCheckpoint()
+        if (!needSummary) d = rebuilt.transform(Materialize.checkpoint)
         else {
           val (ckpt, row) = graft.Observed.checkpoint(rebuilt,
             s"bpe_tokens_$r", count(lit(1)).as("t"))
@@ -1205,7 +1206,7 @@ object Relational6 {
     val w = Window.partitionBy("u").orderBy(desc("c"), col("lbl"))
     val labels = FrameStore.getOrCompute(s, s"passage_lpa4|$storeKey") {
       var l = nbrs.select(col("u").as("id")).distinct()
-        .withColumn("lbl", col("id")).localCheckpoint(true)
+        .withColumn("lbl", col("id")).transform(Materialize.checkpoint)
       for (_ <- 1 to 4) {
         val pick = nbrs
           .join(l.withColumnRenamed("id", "v"), "v")
@@ -1215,7 +1216,7 @@ object Relational6 {
           .select(col("u").as("id"), col("lbl").as("newLbl"))
         l = l.join(pick, Seq("id"), "left")
           .select(col("id"), coalesce(col("newLbl"), col("lbl")).as("lbl"))
-          .localCheckpoint(true)
+          .transform(Materialize.checkpoint)
       }
       l
     }
@@ -1309,7 +1310,7 @@ object Relational6 {
       .select(col("event_type"), col("event_id"),
         round(col("value") * 1e6, 0).cast("long").as("vfx"))
       .repartition(s.sparkContext.defaultParallelism, col("event_id"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     val rep = ev.select(col("event_type"), col("event_id"), col("vfx"),
       explode(sequence(lit(0), lit(B - 1))).as("b"))
     val u = (conv(substring(md5(concat(lit("bs|"), col("b"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Round-8 closing batch: MOSS-style winnowing fingerprints — the
   * position-aware local fingerprint selection that powers plagiarism /
@@ -438,7 +439,7 @@ object Relational7 {
       .select(col("doc_id"), col("n_toks"), col("quality_score"),
         (col("verdict") === "keep").cast("int").as("keep"))
     val docs = Tables.documents(s, dir).select("doc_id", "lang", "source")
-    val base = cf.join(docs, "doc_id").localCheckpoint(true)
+    val base = cf.join(docs, "doc_id").transform(Materialize.checkpoint)
     val n = base.count()
     val melted = base.select(col("keep"), explode(array(
         struct(lit("lang").as("feature"), col("lang").as("fval")),
@@ -921,7 +922,7 @@ object Relational7 {
     val grouped = perUser.groupBy("dur_hr").agg(
         sum(when(col("converted"), 1L).otherwise(0L)).as("d"),
         sum(when(col("converted"), 0L).otherwise(1L)).as("c"))
-      .localCheckpoint(true) // bounded curve frame, self-joined twice
+      .transform(Materialize.checkpoint) // bounded curve frame, self-joined twice
     val other = grouped.select(col("dur_hr").as("h2"),
       (col("d") + col("c")).as("dc2"), col("d").as("d2"), col("c").as("c2"))
     val risk = grouped.join(broadcast(other), col("h2") >= col("dur_hr"))
@@ -1007,7 +1008,7 @@ object Relational7 {
     val g2 = perUser.groupBy("arm", "dur_hr").agg(
         sum(when(col("converted"), 1L).otherwise(0L)).as("d"),
         count(lit(1)).as("dc"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     val spine = g2.select("dur_hr").distinct()
     val armRows = g2.select(col("arm").as("a2"), col("dur_hr").as("h2"),
       col("dc").as("dc2"))
@@ -1123,7 +1124,7 @@ object Relational7 {
       .select(col("user_id"),
         expr(s"($anchor - tlast) div $hourUs").as("rec_hr"),
         col("freq"), col("mfx"))
-      .localCheckpoint(true) // ranked three times + final agg
+      .transform(Materialize.checkpoint) // ranked three times + final agg
     val nb = math.max(1, s.sparkContext.defaultParallelism * 4)
     def quintile(metric: String): DataFrame = {
       val r0 = pu.agg(min(metric), max(metric)).collect()(0)
@@ -1279,7 +1280,7 @@ object Relational7 {
       .select(explode(graft.text.TextOps.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("tf"))
       .orderBy(desc("tf"), col("token")).limit(100)
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     val other = top.select(col("tf").as("tf2"), col("token").as("tok2"))
     val ranked = top.join(broadcast(other),
         col("tf2") > col("tf") ||
@@ -1473,7 +1474,7 @@ object Relational7 {
     val g2 = perUser.groupBy("arm", "dur_hr").agg(
         sum(when(col("converted"), 1L).otherwise(0L)).as("d"),
         count(lit(1)).as("dc"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     val armRows = g2.select(col("arm").as("a2"), col("dur_hr").as("h2"),
       col("dc").as("dc2"))
     val risk = g2.join(broadcast(armRows),
@@ -1494,7 +1495,7 @@ object Relational7 {
       .select(col("arm"), col("dur_hr"),
         when(col("anyzero") === 1, lit(0.0))
           .otherwise(exp(col("cumln"))).as("s"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     val arms = surv.select(col("arm").as("sa")).distinct()
     val spine = arms.crossJoin(broadcast(
       s.range(0, RmstTau).select(col("id").as("h"))))
@@ -1596,7 +1597,7 @@ object Relational7 {
       // compact scan's 3-4 input splits (measured 25+ min at sf10 on 4
       // tasks; minutes once spread across the box).
       .repartition(s.sparkContext.defaultParallelism)
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     val anchors = d.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id").as("anchor"), col("lang"),
         col("n_chars").as("alen"), col("h").as("ah"), col("bkt"))
@@ -1651,7 +1652,7 @@ object Relational7 {
       .withColumn("pos", row_number().over(
         Window.partitionBy("lang", "bkt").orderBy("n_chars", "doc_id")))
       .repartition(s.sparkContext.defaultParallelism)
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     val band = expr(s"(pos - 1) div $W") // integer band of width W
     val anchors = ranked.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id").as("anchor"), col("lang"), col("bkt"),
@@ -1826,7 +1827,7 @@ object Relational7 {
     val oriented = edges.join(du, "u").join(dv, "v")
       .select(when(uFirst, col("u")).otherwise(col("v")).as("src"),
         when(uFirst, col("v")).otherwise(col("u")).as("dst"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     val tri = oriented.as("e1")
       .join(oriented.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
@@ -2170,7 +2171,7 @@ object Relational7 {
       .withColumnRenamed("cosine", "rel")
       .join(emb, "vec_id")
       .withColumn("nrm", VectorOps.norm(col("embedding")))
-      .localCheckpoint(true) // bounded (20 rows); cut the scan lineage
+      .transform(Materialize.checkpoint) // bounded (20 rows); cut the scan lineage
     val a = cand.select(col("vec_id").as("va"), col("embedding").as("ea"),
       col("nrm").as("na"))
     val b = cand.select(col("vec_id").as("vb"), col("embedding").as("eb"),
@@ -2179,7 +2180,7 @@ object Relational7 {
       .select(col("va"), col("vb"),
         ((VectorOps.fixedDot(col("ea"), col("eb")).cast("double") / 1e12)
           / (col("na") * col("nb"))).as("sim"))
-      .localCheckpoint(true) // 380 rows
+      .transform(Materialize.checkpoint) // 380 rows
     val scores = cand.select("vec_id", "rel")
     // Each greedy step's argmax is ONE row — collect it to the driver (the
     // BPE top-1 pattern) instead of growing a lazily-unioned `selected`
@@ -2334,7 +2335,7 @@ object Relational7 {
           col("event_id").cast("string"))), 1, 8), 16, 10).cast("long")
           * sampleDen < lit(4294967296L)))
       .repartition(s.sparkContext.defaultParallelism, col("event_id"))
-      .localCheckpoint(true) // read by tc AND the ×B replicate explode
+      .transform(Materialize.checkpoint) // read by tc AND the ×B replicate explode
     val tc = ev.groupBy("event_type").agg(
       dsum(when(col("ga") === 1, col("vfx")).otherwise(0L)).as("sA"),
       dsum(when(col("ga") === 0, col("vfx")).otherwise(0L)).as("sB"),
@@ -2344,7 +2345,7 @@ object Relational7 {
       .withColumn("obs", when(col("nA") === 0 || col("nB") === 0, lit(0.0))
         .otherwise(abs(col("sA").cast("double") / col("nA")
           - col("sB").cast("double") / col("nB"))))
-      .localCheckpoint(true) // m rows; read by the join, p, and broadcast
+      .transform(Materialize.checkpoint) // m rows; read by the join, p, and broadcast
     // 4 independent 32-bit draws per md5 (the MinHash hash-window trick),
     // staged as TWO explodes so each digest is computed exactly once and
     // no row carries a B-long array: explode the ⌈B/4⌉ digest groups,
@@ -2405,7 +2406,7 @@ object Relational7 {
       .agg((lit(1L) + sum(when(col("stat") >= col("obs"), 1L)
         .otherwise(0L))).as("p_num"), max(col("obs")).as("obs_diff"))
       .withColumn("p_den", lit(PermB + 1L))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     bhReject(p, alphaNum = 1, alphaDen = 20)
       .select(col("event_type"),
         (col("obs_diff") / 1e6).as("obs_diff"), col("p_num"),
@@ -2477,7 +2478,7 @@ object Relational7 {
   private val quantileNorm: Q = (s, dir) => {
     val ev = Tables.events(s, dir).select(col("event_type"),
         col("event_id"), round(col("value") * 1e6, 0).cast("long").as("vfx"))
-      .localCheckpoint(true) // scanned by 2 rank passes + the final agg
+      .transform(Materialize.checkpoint) // scanned by 2 rank passes + the final agg
     val r0 = ev.agg(min("vfx").as("mn"), max("vfx").as("mx")).collect()(0)
     val (mn, mx) = (r0.getLong(0), r0.getLong(1))
     val nb = math.max(1, s.sparkContext.defaultParallelism * 4)

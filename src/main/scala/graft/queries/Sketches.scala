@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Mergeable rank-sketch surface (round 8).
   *
@@ -135,7 +136,7 @@ object Sketches {
     var cur = ranked
       .select(col("v"), col("id"),
         expr(s"(rank - 1) div $k").as("chunk"), lit(1L).as("w"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     var nChunks = (n + k - 1) / k
     def levelOnce(): Unit = {
       val pw = Window.partitionBy("nc").orderBy("v", "id")
@@ -144,7 +145,7 @@ object Sketches {
         .withColumn("w2", col("w") + coalesce(lead("w", 1).over(pw), lit(0L)))
         .filter(col("rn") % 2 === 1)
         .select(col("v"), col("id"), col("nc").as("chunk"), col("w2").as("w"))
-        .localCheckpoint(true)
+        .transform(Materialize.checkpoint)
       nChunks = (nChunks + 1) / 2
     }
     while (nChunks > 1 && (!typed || nChunks * k > driverFinishRows))
@@ -261,7 +262,7 @@ object Sketches {
         element_at(element_at(typedlit(off), col("g")), col("bucket")))
       .select(col("g"), col("v"), col("id"),
         expr(s"(i - 1) div $k").as("chunk"), lit(1L).as("w"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     // The whole halving schedule is driver-arithmetic over the per-group
     // counts ALREADY collected for the rank offsets: a group's chunks are
     // contiguous 0..(cnt_g-1) div k by construction, a frozen group (tmx=0)
@@ -286,7 +287,7 @@ object Sketches {
           when(col("tmx") === 0, col("chunk")).otherwise(col("nc"))
             .as("chunk"),
           when(col("tmx") === 0, col("w")).otherwise(col("w2")).as("w"))
-        .localCheckpoint(true)
+        .transform(Materialize.checkpoint)
       tmx = tmx.map { case (g, m) => g -> m / 2 }
     }
     // same tail collapse as [[kllCanonical]]: distributed levels while the

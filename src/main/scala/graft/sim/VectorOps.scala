@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.collection.immutable.ArraySeq
+import graft.Materialize
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -118,7 +119,7 @@ object VectorOps {
     val normed = emb.select(col("vec_id"), col(blockCol),
       col("embedding"), norm(col("embedding")).as("nrm"))
     val withNorm = if (persistNorm)
-      normed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      normed.transform(Materialize.persist)
     else normed
 
     def pairsWithin(src: DataFrame, keys: Seq[String]): DataFrame = {
@@ -190,7 +191,7 @@ object VectorOps {
     * cluster size stays constant, making total pair work linear.
     *
     * Persists the assigned frame (MEMORY_AND_DISK, evictable) under the
-    * cache contract on [[graft.dedup.FrameStore]]. */
+    * block-lifetime contract on [[graft.Materialize]]. */
   def semDedup(emb: DataFrame, cents: Seq[(Int, Array[Double])],
                threshold: Double,
                maxBlock: Int = PairBlockCap): DataFrame = {
@@ -201,7 +202,7 @@ object VectorOps {
     val assigned = assignToCentroids(emb, cents)
       .select(col("vec_id"), col("assigned_label").as("cluster"),
         col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
     val prunedIds = cosinePairsBy(assigned, threshold, "cluster",
       maxBlock, persistNorm = false)
       .select(col("v2").as("vec_id")).distinct()
@@ -396,7 +397,7 @@ object VectorOps {
     val withB = emb
       .select(col("vec_id"), bucketCol(LshPlanes).as("bucket"),
         col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
     // the pairing discipline (exact ≤ cap, sorted-neighborhood banding
     // above) is cosinePairsBy's, with the LSH bucket as the block key
     cosinePairsBy(withB, threshold, "bucket", maxBlock, persistNorm = false)
@@ -744,11 +745,11 @@ object VectorOps {
     // join identity is a GENERATED per-row id, never the caller's vec_id
     // (dup/null vec_ids must not coalesce or drop rows), materialized once
     val withId = emb.withColumn("__vec_row", monotonically_increasing_id())
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     // ×dk amplification after the scan: repartition → checkpoint → fan out
     val base = withId.select(col("__vec_row"), col("embedding"))
       .repartition(spark.sparkContext.defaultParallelism, col("__vec_row"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     val t2col: DataFrame =
       if (dk <= CentroidJoinMax) {
         val centDf = broadcast(
@@ -968,7 +969,7 @@ object VectorOps {
         emb.select(col("label"), col("embedding"))
           .withColumn("__vec_row", monotonically_increasing_id())
           .repartition(spark.sparkContext.defaultParallelism, col("__vec_row"))
-          .localCheckpoint(true)
+          .transform(Materialize.checkpoint)
           .crossJoin(broadcast(centDf))
           .select(col("__vec_row"), col("label"),
             when(col("label") === col("cent_lbl"), d).as("da"),

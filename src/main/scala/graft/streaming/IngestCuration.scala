@@ -155,19 +155,12 @@ object IngestCuration {
     * contribution. */
   def processBatch(batch: DataFrame, idxDir: String, stateDir: String): Unit = {
     val spark = batch.sparkSession
-    def readOr(path: String, empty: => DataFrame): DataFrame = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-        spark.read.parquet(path)
-      else empty
-    }
     val emptyFirst = batch.sparkSession.range(0)
       .select(concat(lit("")).as("h"), col("id").as("first_id")).limit(0)
     val corpusDigests = spark.read.parquet(s"$idxDir/digests")
     val corpusWins = spark.read.parquet(s"$idxDir/wins")
-    val streamDigests = readOr(s"$stateDir/stream_digests", emptyFirst)
-    val streamWins = readOr(s"$stateDir/stream_wins", emptyFirst)
+    val streamDigests = readOr(spark, s"$stateDir/stream_digests")(emptyFirst)
+    val streamWins = readOr(spark, s"$stateDir/stream_wins")(emptyFirst)
 
     val base0 = scored(batch)
 
@@ -178,7 +171,7 @@ object IngestCuration {
     // flagged; a crash-replayed batch still passes (its ids are already in
     // flags — the anti-join removes them), so exactly-once restart is
     // unaffected. Cost: one scalar max + one indexed anti-join per batch.
-    val priorIds = readOr(s"$stateDir/flags",
+    val priorIds = readOr(spark, s"$stateDir/flags")(
       spark.range(0).select(col("id").as("doc_id"))).select("doc_id")
     val maxSeenRow = priorIds.agg(max(col("doc_id"))).collect()(0)
     if (!maxSeenRow.isNullAt(0)) {

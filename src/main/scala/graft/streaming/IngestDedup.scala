@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Materialize
 import graft.dedup.{Dedup, IncrementalIndex}
 
 /** End-to-end streaming ingest dedup: every arriving document is flagged
@@ -79,46 +80,40 @@ object IngestDedup {
     * window, land flags (upsert by doc_id) and digests (min-per-key).
     * Deterministic and idempotent — safe under foreachBatch replay. */
   def processBatch(batch: DataFrame, idxDir: String, stateDir: String,
-                   threshold: Double): Unit = {
+                   threshold: Double): Unit = Materialize.scope {
     val spark = batch.sparkSession
-    val idx = IncrementalIndex.read(spark, idxDir)
-    val (probed, cached) = IncrementalIndex.probeWithCaches(batch, idx, threshold)
-    try {
-      val digestsPath = s"$stateDir/stream_digests"
-      val fs = new org.apache.hadoop.fs.Path(digestsPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val withH = batch.select(col("doc_id"), md5(col("text")).as("h"))
-      // earlier arrivals: the maintained table (strictly smaller id — a
-      // replayed batch finds ITS OWN ids there and must ignore them) …
-      val prior =
-        if (fs.exists(new org.apache.hadoop.fs.Path(digestsPath)))
-          spark.read.parquet(digestsPath)
-        else withH.select(col("h"), col("doc_id").as("first_id")).limit(0)
-      // … plus smaller ids within this batch
-      val wInBatch = Window.partitionBy("h").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val sm = withH
-        .join(prior.withColumnRenamed("first_id", "prior_id"), Seq("h"), "left")
-        .withColumn("prior_id",
-          when(col("prior_id") < col("doc_id"), col("prior_id")))
-        .withColumn("in_batch", min(col("doc_id")).over(wInBatch))
-        .select(col("doc_id"),
-          least(col("prior_id"), col("in_batch")).as("stream_match"))
-      val flagged = probed.join(sm, "doc_id")
-        .select(col("doc_id"), col("exact_match"), col("near_match"),
-          col("stream_match"),
-          when(col("verdict") =!= "keep", col("verdict"))
-            .when(col("stream_match").isNotNull, "stream_dup")
-            .otherwise("keep").as("verdict"))
-      // flags first, digests second: a crash between the two replays the
-      // batch, which rewrites the identical flag rows (upsert by doc_id)
-      UpsertSink.mergeBatchWith(flagged, s"$stateDir/flags",
-        UpsertSink.latestPerKey(_, "doc_id", "doc_id"))
-      UpsertSink.mergeBatchWith(
-        withH.groupBy("h").agg(min(col("doc_id")).as("first_id")),
-        digestsPath,
-        _.groupBy("h").agg(min(col("first_id")).as("first_id")))
-    } finally cached.foreach(_.unpersist(blocking = false))
+    val probed = IncrementalIndex.probe(batch,
+      IncrementalIndex.read(spark, idxDir), threshold)
+    val digestsPath = s"$stateDir/stream_digests"
+    val withH = batch.select(col("doc_id"), md5(col("text")).as("h"))
+    // earlier arrivals: the maintained table (strictly smaller id — a
+    // replayed batch finds ITS OWN ids there and must ignore them) …
+    val prior = readOr(spark, digestsPath)(
+      withH.select(col("h"), col("doc_id").as("first_id")).limit(0))
+    // … plus smaller ids within this batch
+    val wInBatch = Window.partitionBy("h").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val sm = withH
+      .join(prior.withColumnRenamed("first_id", "prior_id"), Seq("h"), "left")
+      .withColumn("prior_id",
+        when(col("prior_id") < col("doc_id"), col("prior_id")))
+      .withColumn("in_batch", min(col("doc_id")).over(wInBatch))
+      .select(col("doc_id"),
+        least(col("prior_id"), col("in_batch")).as("stream_match"))
+    val flagged = probed.join(sm, "doc_id")
+      .select(col("doc_id"), col("exact_match"), col("near_match"),
+        col("stream_match"),
+        when(col("verdict") =!= "keep", col("verdict"))
+          .when(col("stream_match").isNotNull, "stream_dup")
+          .otherwise("keep").as("verdict"))
+    // flags first, digests second: a crash between the two replays the
+    // batch, which rewrites the identical flag rows (upsert by doc_id)
+    UpsertSink.mergeBatchWith(flagged, s"$stateDir/flags",
+      UpsertSink.latestPerKey(_, "doc_id", "doc_id"))
+    UpsertSink.mergeBatchWith(
+      withH.groupBy("h").agg(min(col("doc_id")).as("first_id")),
+      digestsPath,
+      _.groupBy("h").agg(min(col("first_id")).as("first_id")))
   }
 
   /** Start the streaming ingest-dedup into `stateDir`, probing the

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 
 /** Text-analysis operators for large-scale training-data pipelines: token
   * statistics, quality scoring, language ID, fingerprinting, and the shingle
@@ -177,7 +178,7 @@ object TextOps {
     * Returns (doc_id, n_bigrams, lm_score).
     *
     * Persists the bigram frame (it feeds the model counts AND the scoring
-    * scan), under the cache contract on [[graft.dedup.FrameStore]]. */
+    * scan), under the block-lifetime contract on [[graft.Materialize]]. */
   def bigramLmScore(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
@@ -188,7 +189,7 @@ object TextOps {
           slice(col("t"), lit(2), size(col("t")) - 1),
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.persist)
     val c1 = bg.groupBy("w1").agg(count(lit(1)).as("c1"))
     val c12 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     bg.join(c12, Seq("w1", "w2")).join(c1, Seq("w1"))
@@ -308,7 +309,7 @@ object TextOps {
     val bucketCounts = tok.groupBy("b")
       .agg(count(lit(1)).as("cr"),
         sum(when(col("is_t"), 1L).otherwise(0L)).as("ct"))
-      .localCheckpoint(true)
+      .transform(Materialize.checkpoint)
     val totals = bucketCounts.agg(sum(col("cr")).as("nr"),
       sum(col("ct")).as("nt"))
     val model = bucketCounts

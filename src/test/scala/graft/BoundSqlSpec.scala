@@ -122,9 +122,15 @@ class BoundSqlSpec extends SparkSpec {
     val main = Paths.get("src/main")
     assert(Files.isDirectory(main), s"run from the project root, not ${Paths.get("").toAbsolutePath}")
     val call = "create(OrReplace)?(Global)?TempView".r
+    // blocks are materialized only through graft.Materialize, which owns
+    // their lifetime
+    val materialize = """\.localCheckpoint\(|\.persist\(|\.cache\(\)""".r
     val hits = Files.walk(main).iterator().asScala.filter(Files.isRegularFile(_))
       .flatMap((p: Path) => Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if call.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+        case (line, i) if call.findFirstIn(line).isDefined ||
+            (materialize.findFirstIn(line).isDefined &&
+              p.getFileName.toString != "Materialize.scala") =>
+          s"$p:${i + 1}: ${line.trim}"
       }).toList
     assert(hits.isEmpty, hits.mkString("\n"))
   }

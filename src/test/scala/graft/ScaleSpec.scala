@@ -190,26 +190,6 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("durable-snapshot rolling == localCheckpoint rolling, bit-for-bit") {
-    import spark.implicits._
-    import graft.queries.DistributedRolling
-    val df = (1 to 300).map(i => (i.toLong, (i * 53 % 97).toDouble))
-      .toDF("id", "v").repartition(5)
-    def features = (ws: org.apache.spark.sql.expressions.WindowSpec) => Seq(
-      "p90" -> percentile(col("v"), lit(0.9)).over(ws),
-      "s" -> sum(col("v")).over(ws))
-    val local = DistributedRolling.withRolling(df, Seq("id"), 25)(features)
-      .orderBy("id").collect()
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_durable").toString + "/snap"
-    val durable = DistributedRolling.withRollingSnapshot(df, Seq("id"), 25,
-        DistributedRolling.Snapshot.Durable(path))(features)
-      .orderBy("id").collect()
-    assert(durable.toSeq == local.toSeq)
-    // the snapshot is a real on-disk artifact tasks can re-read
-    assert(spark.read.parquet(path).count() == 300)
-  }
-
   test("salting spreads a skewed key across subkeys and recombines exactly") {
     import spark.implicits._
     // heavily skewed: 90% of rows share key 0
