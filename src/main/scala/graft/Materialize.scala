@@ -1,6 +1,6 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
+import scala.util.Using
 import org.apache.logging.log4j.Logger
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,9 +26,9 @@ import graft.dedup.FrameStore
   * every read of the result: Bench and Verify open one per entry run, the
   * API server one per request, the ingest dedup one per micro-batch. */
 object Materialize {
-  private val scopes = ThreadLocal.withInitial[List[ArrayBuffer[() => Unit]]](() => Nil)
+  private val scopes = ThreadLocal.withInitial[List[Using.Manager]](() => Nil)
 
-  private def record(free: () => Unit): Unit = scopes.get.headOption.foreach(_ += free)
+  private def record(free: AutoCloseable): Unit = scopes.get.headOption.foreach(_.acquire(free))
 
   /** `df` eagerly checkpointed, its blocks recorded in the open scope. */
   def checkpoint(df: DataFrame): DataFrame = {
@@ -44,13 +44,14 @@ object Materialize {
     df.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Run `body`, then free everything materialized inside it. */
-  def scope[T](body: => T): T = {
+  /** Run `body`, then free everything materialized inside it. Every free
+    * runs even if another throws; a body's exception propagates with free
+    * failures attached as suppressed (`scala.util.Using`'s rules). */
+  def scope[T](body: => T): T = Using.Manager { m =>
     val outer = scopes.get
-    val held = ArrayBuffer.empty[() => Unit]
-    scopes.set(held :: outer)
-    try body finally { scopes.set(outer); held.foreach(_()) }
-  }
+    scopes.set(m :: outer)
+    try body finally scopes.set(outer)
+  }.get
 
   /** Run `body` with no scope open: what it materializes outlives them. */
   private[graft] def unscoped[T](body: => T): T = {

@@ -17,8 +17,8 @@ import graft.Materialize
   * `localCheckpoint`ed per level: BFS lineage otherwise nests one
   * anti-join per level and re-executes the whole prefix at every action
   * (the same eager-truncation trade [[graft.queries.DistributedRolling]]
-  * documents; use the durable-snapshot variant's pattern for multi-hour
-  * frontier jobs).
+  * documents; its blocks die with their executor, so a lost executor
+  * means a rerun).
   *
   * The depth bound is part of the CONTRACT, not a shortcut: "within
   * maxHops" is the production question (unbounded BFS on a 100 TB graph

@@ -42,8 +42,8 @@ import graft.Materialize
   * `partitionCols` paths in
   * [[graft.etl.TransactionFeatureEngineer.engineer]] /
   * [[graft.model.HistoricalVaR.rollingVar]]). Checkpoint blocks die with
-  * their executor; a job that must survive executor loss reads an input
-  * its producing job wrote as a parquet table (DEPLOY.md).
+  * their executor, whatever the input was read from: an executor loss
+  * fails the job, and the fallback is a rerun (DEPLOY.md).
   *
   * Preconditions: `orderCols` is a total order (include a unique
   * tiebreaker); its leading column is numeric and non-null (the rank
